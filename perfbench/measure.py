@@ -26,9 +26,11 @@ from admarus_spark.streaming.incremental import IncrementalIndexer
 
 K = 10
 N_BUCKETS = 8
-# Untimed passes of the mix on the clean index before the window opens
-# (README "Warm-up").
-WARMUP_PASSES = 1
+# Untimed passes of the mix before the window opens (README "Warm-up").
+WARMUP_PASSES = {"serve": 1, "ingest": 0}
+# Seconds one pass of the mix takes on the reference host, 4 vCPUs
+# (README "Window"). The window is round(--seconds / PASS_S) whole passes.
+PASS_S = {"serve": 5.0, "ingest": 10.0}
 MIN_TIMED_ROUNDS = 1
 MIN_TRACED_ROUNDS = 2  # alternating traced / untraced rounds
 BATCHES_TRACED = 1
@@ -158,33 +160,27 @@ class Run:
 
         with t.span("engine.init"):
             self.engine = SearchEngine(self.spark, self.index_dir)
-        # Warm-up runs on the clean index, before ingest takes its delta:
-        # a clean pass costs half a dirty one and warms the same layers.
-        passes = WARMUP_PASSES
+        passes = WARMUP_PASSES[self.workload]
         for i in range(passes):
             self.round(i, timed=False)
         if self.workload == "ingest":
+            # the crawler's view: the first queries after update() + refresh()
             self.update("delta0")
 
         t_open = time.time()
         gc0 = gc_seconds()
-        # Queries in mix order until the deadline, at least one whole pass
-        # (two when tracing). Stopping between queries, not between passes,
-        # keeps the sample count smooth in the host's speed.
-        deadline = t_open + self.cfg["seconds"]
+        # A fixed number of whole passes, sized from --seconds: every run
+        # and every commit times the same queries at the same point of the
+        # warm-up curve, and every shape keeps its share of the samples.
         alternate = self.tracer.enabled
-        n_shapes = len(self.mix["rounds"][0])
-        min_queries = n_shapes * (MIN_TRACED_ROUNDS if alternate else MIN_TIMED_ROUNDS)
-        j = 0
-        while time.time() < deadline or j < min_queries:
-            r = passes + j // n_shapes
+        n_passes = max(MIN_TRACED_ROUNDS if alternate else MIN_TIMED_ROUNDS,
+                       int(self.cfg["seconds"] / PASS_S[self.workload] + 0.5))
+        for j in range(n_passes):
             if alternate:  # odd passes untraced: the in-run tracing-overhead baseline
-                t.enabled = (j // n_shapes) % 2 == 0
-            shape, text = self.mix["rounds"][r % len(self.mix["rounds"])][j % n_shapes]
-            self.single(shape, text, timed=True)
-            j += 1
+                t.enabled = j % 2 == 0
+            self.round(passes + j, timed=True)
         t.enabled = alternate
-        i = passes + j // n_shapes + 1
+        i = passes + n_passes
         t_close = time.time()
         gc_window = gc_seconds() - gc0
 

@@ -10,8 +10,8 @@ in its own session and each reaped before the next starts:
 1. ``inputs.py`` makes the corpus, delta and query mix from the seed
    (cached on disk per workload and seed);
 2. ``measure.py`` starts Spark with the environment pinned below, sets the
-   workload up, opens the timed window for ``--seconds`` and saves every
-   answer;
+   workload up, times a window of whole query passes sized from
+   ``--seconds`` and saves every answer;
 3. ``verify.py`` checks every answer against the NumPy oracle.
 
 The last line of standard output is one JSON object: ``correct``,
