@@ -9,12 +9,16 @@ driver:  parse AST → bloom gate (M1, ``matching.rs:19-41``) → per-term
          bucket routing (term-hash partition pruning + per-bucket bloom)
 stage A: scan postings WHERE tb IN (...) AND term IN (...)   [partition
          pruning + parquet predicate pushdown]
-stage B: decode varint blocks (Arrow-batched mapInPandas, NumPy inside);
-         optional rank-safe block-max skipping for disjunctive queries
-stage C: per-doc AST fold compiled to Catalyst expressions (fold.py)
-stage D: global top-k: orderBy(score desc, doc_id asc).limit(k)
-         → TakeOrderedAndProject
-stage E: broadcast-join the k winners back to doc_dict for display fields
+stage B-D, group-eval route (postings-only folds, finite k, clean index):
+         one executor task decodes the scanned blobs with local rank-safe
+         block pruning, folds in NumPy and emits the top-k (group_eval.py)
+stage B-D, pivot route (metadata folds, tombstones, k=None, wand="off",
+         groups over the decoded-bytes cap): decode varint blocks
+         (Arrow-batched mapInPandas, NumPy inside) → per-doc AST fold
+         compiled to Catalyst expressions (fold.py) → global top-k:
+         orderBy(score desc, doc_id asc).limit(k) → TakeOrderedAndProject
+stage E: broadcast-join the k winners back to doc_dict for display fields;
+         one task sorts them
 
 Per-term idf is computed on the driver with NumPy from collected (term, df)
 rows and injected as float64 literals, so engine and oracle share the exact
@@ -171,15 +175,12 @@ class SearchEngine:
         self.batch_prune_min_postings = int(
             os.environ.get("SPARK_GRAFT_BATCH_PRUNE_MIN_POSTINGS", 50_000)
         )
-        # the same trade for SINGLE queries (r6): below this total posting
-        # volume, the driver round-trips the pruning paths spend (BMW block
-        # meta + θ-probe blob fetches, conjunctive/n-of-m rare-id fetches)
+        # the same trade for single queries on the pivot path (r6): below
+        # this total posting volume, the conjunctive/n-of-m rare-id fetches
         # cost more than the full decode they avoid — measured at sf1.0
         # (50k docs): wand="off" beat "auto" on every multi-term shape
-        # (n-of-m 0.87→0.64 s) while the single-term executor-side greedy
-        # (zero driver bytes) stayed a win. Full decode is the exactness
-        # BASELINE, so the gate can only widen decoded volume, never
-        # change results. wand="on" still forces the pruning machinery.
+        # (n-of-m 0.87→0.64 s). Full decode is the exactness BASELINE, so
+        # the gate can only widen decoded volume, never change results.
         self.single_prune_min_postings = int(
             os.environ.get("SPARK_GRAFT_SINGLE_PRUNE_MIN_POSTINGS", 50_000)
         )
@@ -205,9 +206,8 @@ class SearchEngine:
         # released at the next query (or via release_cache) so a long-lived
         # serving session does not leak executor cache (ADVICE r1).
         self._live_cache: list[DataFrame] = []
-        # decode-pruning evidence from the last cross-term BMW query / the
-        # last batched search_many mask union / the last group-eval routing
-        self.last_bmw: dict | None = None
+        # decode-pruning evidence from the last batched search_many mask
+        # union / the last group-eval routing (search or search_many)
         self.last_batch_prune: dict | None = None
         self.last_group_eval: dict | None = None
         # tombstoned ids pinned driver-side, lazily (bounded by design: the
@@ -325,16 +325,34 @@ class SearchEngine:
 
     # --------------------------------------------------------------------
     def search(
-        self, query: str | Query, k: int | None = 10, wand: str = "auto",
-        _keep_cache: bool = False,
+        self, query: str | Query, k: int | None = 10, wand: str = "auto"
     ) -> DataFrame:
         """Top-k results: (doc_id, score, repo, path, commit, lang).
+
+        Postings-only queries (no metadata filter anywhere in the fold) with
+        a finite ``k`` on a clean index evaluate executor-side through
+        group-eval — ``search_many``'s one-member case
+        (``_search_many_groups``): decode, fold and top-k run next to the
+        postings and k rows come back. The pivot serves the rest: metadata
+        folds, tombstoned indexes, ``k=None``, groups over the decoded-bytes
+        cap (``group_eval_max_bytes``) and ``wand="off"``.
+        ``last_group_eval`` records the route (None = pivot).
+
+        ``wand``: ``"auto"`` (default) prunes wherever it is rank-safe;
+        ``"on"`` is accepted as an alias of ``"auto"``; ``"off"`` takes the
+        pivot with a full decode, the exactness baseline.
 
         ``k=None`` returns EVERY gated match ranked (no limit, no broadcast
         dictionary join) — the shape downstream group-bys aggregate directly
         instead of flowing through a huge top-k broadcast."""
-        if not _keep_cache:
-            self.release_cache()
+        self.release_cache()
+        self.last_group_eval = None
+        return self._search_one(query, k, wand)
+
+    def _search_one(self, query: str | Query, k: int | None, wand: str) -> DataFrame:
+        """``search`` without releasing cached intermediates or resetting
+        ``last_group_eval`` — ``search_many`` routes its positive-filter
+        members here."""
         if isinstance(query, str):
             query = parse_query(query)
         # driver-side bloom short-circuit (inner_im.rs:91-94)
@@ -371,85 +389,40 @@ class SearchEngine:
                 df_map = _sum_df(pruned.select("term", "df").collect())
             if self.tombstones is not None and df_map:
                 df_map = self._live_df_map(pruned, df_map)
-            # block skipping is rank-safe ONLY for pure max-folds with no
-            # metadata filters: on AND/n-of-m/NOT shapes a skipped block
-            # zeroes a term's pivot column for docs still present via another
-            # term, flipping the gate. wand="on" overrides NEITHER guard:
-            # not the shape guard, and not wand_safe (stale bm_avgdl or
-            # pending tombstones make the stored block maxes a lie — a
-            # forced skip could drop a true top-k block). The knob only
-            # distinguishes "auto"/"on" from "off" (the full-decode
-            # baseline); exactness is never traded.
-            shape_safe = is_max_fold(query.root) and not pos_filters and k is not None
-            # small-volume gate (r6): under the threshold, skip every pruning
-            # path that costs a driver round-trip — keep only the per-term
-            # greedy (executor-side, zero driver bytes) for single-term
-            # max-folds. "auto" only; "on" keeps forcing the machinery.
-            small = (
-                wand == "auto"
-                and sum(df_map.values()) < self.single_prune_min_postings
-            )
-            use_wand = (
-                shape_safe
-                and self.wand_safe
-                and wand in ("on", "auto")
-                and not (small and len(df_map) > 1)
-            )
-            # conjunctive decode pruning (the AND/n-of-n analog of WAND):
-            # every match must contain ALL required words, so the rarest
-            # required word's posting ids bound the candidate set EXACTLY —
-            # other terms skip blocks whose id range holds no candidate and
-            # drop non-candidate rows after decode. Unlike block-max
-            # skipping this is shape-exact, not merely rank-safe.
+            if df_map and k is not None and k > 0:
+                groups, _pivot = self._route_batch_members({"": query}, df_map, wand)
+                if groups:
+                    topk = self._search_many_groups(groups, df_map, k)
+                    return self._dict_join(topk.select("doc_id", "score"), k)
+            # pivot. A max-fold with valid block maxes (a postings-only
+            # query whose group is over the cap) decodes each term's
+            # greedy top-k blocks executor-side — rank-safe, zero driver
+            # bytes. Conjunctive / n-of-m shapes decode only the blocks
+            # that can hold a candidate (``_query_cand_ids``: the rarest
+            # required word's ids, or the pigeonhole cover's id union — an
+            # exact candidate superset); the small-volume gate (r6) skips
+            # that driver round-trip where the full decode is cheaper. Full
+            # decode is the exactness baseline, so no choice here changes
+            # results.
             cand_ids = None
-            req = required_words(query.root)
-            if req and wand != "off" and not use_wand:
-                missing = req - set(df_map)
-                if missing:
+            block_masks = None
+            if wand != "off":
+                req = required_words(query.root)
+                if req - set(df_map):
                     return self._empty_result()  # a required word is unindexed
-                if len(df_map) > 1 and not small:
-                    rare = min(req, key=lambda t: df_map[t])
-                    if df_map[rare] <= self.and_prune_max_df:
-                        cand_ids = self._collect_term_ids(rare)
-            elif not req and wand != "off" and not use_wand:
-                # n-of-m pigeonhole pruning (1 < n < m): a doc matching at
-                # least n of m' present children misses at most m'-n of
-                # them, so it MUST appear in the postings of at least one of
-                # ANY m'-n+1 chosen children. The m'-n+1 rarest children's
-                # id union is therefore an exact candidate superset — the
-                # same decode machinery as the conjunctive path applies
-                # (VERDICT r2 #9; AND is the n=m special case: 1 rarest
-                # list). Exact, not merely rank-safe: non-candidates cannot
-                # pass the >= n gate, and candidate rows survive in EVERY
-                # term's list, keeping their fold scores complete.
-                cover = _nofm_cover_words(query.root, df_map)
-                if cover is not None:
-                    if not cover:
-                        return self._empty_result()  # fewer than n present
-                    uniq_cover = list(dict.fromkeys(cover))
-                    if not small and (
-                        sum(df_map[t] for t in uniq_cover) <= self.and_prune_max_df
-                    ):
-                        parts = [self._collect_term_ids(t) for t in uniq_cover]
-                        cand_ids = np.unique(np.concatenate(parts))
-            if cand_ids is not None and cand_ids.size == 0:
-                # a required/cover word has an empty posting list (stale
-                # df_cache after an external update): no doc can match
-                return self._empty_result()
+                if not req and _nofm_cover_words(query.root, df_map) == []:
+                    return self._empty_result()  # fewer than n children present
+                if is_max_fold(query.root) and self.wand_safe and k:
+                    block_masks = {t: (None, k) for t in df_map}
+                elif (
+                    len(df_map) > 1
+                    and sum(df_map.values()) >= self.single_prune_min_postings
+                ):
+                    cand_ids = self._query_cand_ids(query, df_map)
+                    if cand_ids is not None and cand_ids.size == 0:
+                        return self._empty_result()  # no doc can match
             if df_map:
-                # cross-term BMW: one global threshold shared by every term
-                # (strictly more pruning than the per-term greedy, which
-                # must keep >= k docs PER term); falls back to the greedy
-                # per-term selection when masks are not applicable
-                wand_k = k if use_wand else None
-                block_masks = None
-                if use_wand and len(df_map) > 1:
-                    # single-term queries: per-term greedy == BMW result, so
-                    # skip the two extra driver round-trips
-                    block_masks = self._bmw_masks(pruned, df_map, k)
-                    if block_masks is not None:
-                        wand_k = None
-                decoded = self._decode(pruned, wand_k, cand_ids, block_masks)
+                decoded = self._decode(pruned, cand_ids, block_masks)
                 scored, term_col = self._score(decoded, df_map)
 
         if scored is None and not has_filter_cands:
@@ -563,7 +536,7 @@ class SearchEngine:
                             parts.append(part)
         for qid, q in fallback.items():
             parts.append(
-                self.search(q, k, _keep_cache=True).select(
+                self._search_one(q, k, wand).select(
                     F.lit(qid).alias("query_id"), "doc_id", "score"
                 )
             )
@@ -572,10 +545,7 @@ class SearchEngine:
         topk = parts[0]
         for p in parts[1:]:
             topk = topk.unionByName(p)
-        out = self.doc_dict.join(F.broadcast(topk), "doc_id")
-        result = out.select(
-            "query_id", "doc_id", "score", "repo", "path", "commit", "lang"
-        ).orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+        result = self._dict_join(topk, k, by=("query_id",))
         self.last_batch_timings["plan_sec"] = (
             time.time() - t_start
             - self.last_batch_timings["prep_sec"]
@@ -587,10 +557,10 @@ class SearchEngine:
     def _route_batch_members(
         self, batched: dict[str, Query], df_map: dict[str, int], wand: str
     ) -> tuple[list[list[tuple[str, Query]]], dict[str, Query]]:
-        """Split batched members between the executor-side group evaluation
-        and the distributed pivot path. Group-eval takes postings-only
-        members (no metadata filter anywhere in the fold — group partitions
-        carry no doc metadata) on a clean index (no tombstones to anti-join,
+        """Split batched members (or ``search``'s one query) between the
+        executor-side group evaluation and the distributed pivot path.
+        Group-eval takes postings-only members (no metadata filter anywhere
+        in the fold — group partitions carry no doc metadata) on a clean index (no tombstones to anti-join,
         block-max bounds valid); members sharing terms form one group
         (connected components) so a shared term's blobs ship and decode
         once; groups whose estimated decoded volume exceeds
@@ -715,7 +685,7 @@ class SearchEngine:
         # last shard's bound stays open so a generation appended between
         # the cache fill and this query is still covered (rank-safe either
         # way — spans only route rows, never skip them).
-        max_id = max(self._max_live_doc_id() + 1, 1)
+        max_id = max(self._max_live_doc_id() + 1, 1) if max(n_shards) > 1 else 1
         tasks: list[tuple[int, int | None, int | None, float]] = []
         for i, comp in enumerate(groups):
             s = n_shards[i]
@@ -789,7 +759,10 @@ class SearchEngine:
                     f"AND array_min(block_firsts) < ({hi_case}))"
                 )
             )
-        src = src.repartition(n, "gk")
+        # one unsharded task (a single query's usual plan): collapse the
+        # tb/term-pruned scan into one partition instead — no exchange, so
+        # no shuffle job ahead of the evaluation
+        src = src.coalesce(1) if n == 1 else src.repartition(n, "gk")
         idf_map = {t: bm25_idf(self.n_docs, df_map[t]) for t in terms}
         dfm = {t: df_map[t] for t in terms}
         avgdl, kk = self.avgdl, k
@@ -881,7 +854,7 @@ class SearchEngine:
         t_m = time.time()
         block_masks = self._batch_masks(pruned, members, df_map, k, wand)
         self.last_batch_timings["mask_sec"] += time.time() - t_m
-        decoded = self._decode(pruned, None, None, block_masks)
+        decoded = self._decode(pruned, block_masks=block_masks)
         scored, term_col = self._score(decoded, df_map)
         needs_meta = any(_collect_filter_names(q.root) for q in members.values())
         if needs_meta:
@@ -929,42 +902,6 @@ class SearchEngine:
         )
 
     # --------------------------------------------------------------------
-    def _bmw_masks(self, pruned: DataFrame, df_map: dict[str, int], k: int):
-        """Cross-term block-max WAND (classic BMW, driver-coordinated):
-        compute ONE global score threshold θ shared by every query term,
-        then per-term block keep-masks ``ub >= θ`` shipped into the
-        distributed decode.
-
-        θ is established driver-side: blocks are ranked by upper bound
-        ``ub = idf_t · block_max`` across ALL terms; blobs of the few
-        highest-ub blocks are fetched (partition/term-pruned collect, KBs)
-        and decoded until k DISTINCT docs are seen; θ = the k-th best of
-        their actual scores. Each decoded score lower-bounds that doc's
-        global max-fold score, so θ lower-bounds the true k-th best —
-        skipping any block with ub < θ is rank-safe, and a top-k doc's best
-        component always survives, keeping its computed score exact (same
-        argument as the per-term greedy, SURVEY.md §7.4).
-
-        Returns {term: bool keep-mask} or None when not applicable (a term
-        split across multiple postings rows — legacy/mid-compaction layout —
-        where row-aligned masks cannot be keyed by term alone; or a term
-        whose blob exceeds the driver-fetch cap ``bmw_max_term_df``; or the
-        θ probe loop exhausting its block budget — which happens exactly
-        when the corpus matches fewer than k distinct docs, where decoding
-        every block driver-side AND executor-side would double the work).
-        Stats land in ``self.last_bmw`` for plan evidence."""
-        by_term = self._collect_block_meta(pruned)
-        if by_term is None:
-            return None
-        out = self._bmw_masks_meta(by_term, df_map, k, {})
-        if out is None:
-            return None
-        masks, theta = out
-        total = sum(int(m.size) for m in masks.values())
-        kept = sum(int(m.sum()) for m in masks.values())
-        self.last_bmw = {"blocks_total": total, "blocks_kept": kept, "theta": theta}
-        return masks
-
     def _collect_block_meta(self, pruned: DataFrame):
         """Per-term block metadata for driver-side mask computation (one
         KB-scale collect for the whole query/batch). None when a term is
@@ -1178,9 +1115,17 @@ class SearchEngine:
         self, q: Query, qdf: dict[str, int], blob_cache: dict | None = None
     ) -> np.ndarray | None:
         """Exact candidate-id superset for conjunctive / n-of-m shapes (the
-        driver half of the single-query pruning in ``search``), or None when
-        the shape / df caps do not apply. An EMPTY array means no doc can
-        match the query at all."""
+        driver half of the single-query pivot pruning in ``search``), or
+        None when the shape / df caps do not apply. An EMPTY array means no
+        doc can match the query at all.
+
+        Conjunctive: every match contains ALL required words, so the rarest
+        one's ids bound the candidates exactly. n-of-m (1 < n < m, VERDICT
+        r2 #9): a doc matching at least n of m' present children misses at
+        most m'-n of them, so it appears in at least one of ANY m'-n+1
+        children's postings — the m'-n+1 rarest children's id union is an
+        exact superset. Exact, not merely rank-safe: non-candidates cannot
+        pass the gate, and candidate rows survive in every term's list."""
         req = required_words(q.root)
         if req:
             if req - set(qdf):
@@ -1382,27 +1327,25 @@ class SearchEngine:
     def _decode(
         self,
         pruned: DataFrame,
-        wand_k: int | None,
         cand_ids: np.ndarray | None = None,
-        block_masks: dict[str, np.ndarray] | None = None,
+        block_masks: dict[str, tuple[np.ndarray | None, int | None]] | None = None,
     ) -> DataFrame:
         """Arrow-batched posting decode; the inner loop is NumPy over blocks.
 
-        With ``wand_k`` set (rank-safe only for max-fold queries), blocks are
-        visited in descending block-max order and skipped once >= k docs with
-        saturation >= the block's upper bound are known — block-max WAND
-        specialized to per-term lists (SURVEY.md §4 O12).
+        With ``block_masks`` set (``_batch_masks``), each term decodes per
+        its ``(mask | None, greedy_k | None)`` spec: the executor ORs the
+        driver mask with its own per-term greedy block-max selection
+        (blocks visited in descending block-max order, skipped once >= k
+        docs with saturation >= the block's upper bound are known — rank-
+        safe for max-fold members, SURVEY.md §4 O12), so hot terms prune
+        without any driver-side blob fetch. A term without a spec decodes
+        full.
 
-        With ``block_masks`` set, each term decodes its precomputed
-        keep-mask (cross-term BMW, see ``_bmw_masks``). Batched specs
-        (``_batch_masks``) are ``(mask | None, greedy_k | None)`` tuples:
-        the executor ORs the driver mask with its own per-term greedy
-        selection, so hot terms prune without any driver-side blob fetch.
-
-        With ``cand_ids`` set (conjunctive pruning; mutually exclusive with
-        the other two), a block is decoded only when its id range [first_i,
-        last_i] intersects the candidate set, and decoded rows outside the
-        set are dropped — exact, because every true match is a candidate."""
+        With ``cand_ids`` set (conjunctive pruning; exclusive with
+        ``block_masks``), a block is decoded only when its id range
+        [first_i, last_i] intersects the candidate set, and decoded rows
+        outside the set are dropped — exact, because every true match is a
+        candidate."""
         cols = [
             "term", "ids", "tfs", "dls",
             "block_firsts", "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
@@ -1421,21 +1364,13 @@ class SearchEngine:
                 frames = []
                 for r in pdf.itertuples():  # one row per term — tiny row count
                     keep = None
-                    if wand_k is not None:
-                        keep = _select_blocks_topk(r, wand_k, k1, b, avgdl)
-                    elif block_masks is not None:
-                        bm = block_masks.get(r.term)
-                        if isinstance(bm, tuple):
-                            # batched spec: (driver mask | None, greedy_k |
-                            # None) — OR of both selections (adding blocks
-                            # is always rank-safe)
-                            m, gk = bm
-                            keep = m
-                            if gk is not None:
-                                g = _select_blocks_topk(r, gk, k1, b, avgdl)
-                                keep = g if keep is None else (keep | g)
-                        else:
-                            keep = bm
+                    if block_masks is not None:
+                        # OR of both selections (adding blocks is always
+                        # rank-safe)
+                        keep, gk = block_masks.get(r.term, (None, None))
+                        if gk is not None:
+                            g = _select_blocks_topk(r, gk, k1, b, avgdl)
+                            keep = g if keep is None else (keep | g)
                         if keep is not None and keep.all():
                             keep = None  # full decode, skip the gather path
                     elif cand is not None and has_lasts:
@@ -1573,17 +1508,32 @@ class SearchEngine:
             cand.withColumn("score", F.expr(score))
             .filter(F.expr(gate))
             .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
         )
         if k is not None:
-            # broadcast the k winners into the dictionary join (SURVEY §4
-            # O3/O5); with k=None the match set is unbounded, so it flows
-            # through a regular join instead of a broadcast
-            topk = F.broadcast(topk.limit(k))
-        out = self.doc_dict.join(topk, "doc_id")
-        return out.select("doc_id", "score", "repo", "path", "commit", "lang").orderBy(
-            F.desc("score"), F.asc("doc_id")
+            topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._dict_join(topk, k)
+
+    def _dict_join(
+        self, topk: DataFrame, k: int | None, by: tuple[str, ...] = ()
+    ) -> DataFrame:
+        """Display fields for ranked winners, ordered by (``by``, score
+        desc, doc_id asc). With a finite ``k`` the winners are at most k
+        rows per query: they broadcast into the dictionary join (SURVEY §4
+        O3/O5) and ONE task sorts the joined rows (sortWithinPartitions) —
+        a global orderBy would range-partition those few rows, paying a
+        sampling job and a shuffle job. That task is the join itself
+        (coalesce(1)), so the dictionary scan runs serially. ``k=None``
+        (every match, unbounded) keeps a regular join and the global
+        sort."""
+        if k is not None:
+            topk = F.broadcast(topk)
+        out = self.doc_dict.join(topk, "doc_id").select(
+            *by, "doc_id", "score", "repo", "path", "commit", "lang"
         )
+        order = [*by, F.desc("score"), F.asc("doc_id")]
+        if k is None:
+            return out.orderBy(*order)
+        return out.coalesce(1).sortWithinPartitions(*order)
 
 
 def _collect_filter_names(comp: QueryComp) -> set[str]:

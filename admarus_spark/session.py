@@ -6,6 +6,62 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Driver heap bounds when SPARK_GRAFT_DRIVER_MEM is unset; the ceiling is
+# the former fixed default.
+MAX_DRIVER_HEAP_MB = 24 << 10
+MIN_DRIVER_HEAP_MB = 1 << 10
+
+
+def local_cpus() -> str:
+    """Cores for a self-owned local master: ``SPARK_GRAFT_CPUS``, else the
+    cores this process may run on (``nproc``)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _memory_limit_bytes() -> int | None:
+    """Memory this process may use: the smaller of the cgroup limit (v2
+    ``memory.max`` or v1 ``memory.limit_in_bytes``; "max" or the v1
+    no-limit sentinel count as none) and ``MemAvailable``. None when
+    neither can be read."""
+    limits: list[int] = []
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit() and int(raw) < (1 << 60):
+            limits.append(int(raw))
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except (OSError, ValueError, IndexError):
+        pass
+    return min(limits) if limits else None
+
+
+def driver_heap(limit_bytes: int | None) -> tuple[str, bool]:
+    """(heap size, pin -Xms and pre-touch?) for the driver JVM.
+
+    ``SPARK_GRAFT_DRIVER_MEM`` wins and is always pinned and pre-touched.
+    Otherwise the heap is a quarter of ``limit_bytes`` (the rest is for
+    the Python workers, off-heap Arrow buffers and the page cache), within
+    [1 GiB, 24 GiB]; it is pinned and pre-touched only when it fits in
+    half the limit. An unknown limit keeps the 24 GiB default."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit, True
+    if limit_bytes is None:
+        return f"{MAX_DRIVER_HEAP_MB // 1024}g", True
+    mb = min(max((limit_bytes >> 20) // 4, MIN_DRIVER_HEAP_MB), MAX_DRIVER_HEAP_MB)
+    return f"{mb}m", 2 * (mb << 20) <= limit_bytes
+
 
 def _local_shuffle_partitions(master: str | None) -> int | None:
     """Core count implied by a plain-local master string, else None.
@@ -54,7 +110,7 @@ def get_spark(
     # where no gateway exists and a master must still be synthesized.)
     launcher_owned = bool(os.environ.get("PYSPARK_GATEWAY_PORT"))
     if master is None and not launcher_owned:
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        master = f"local[{local_cpus()}]"
     # local[N] → match shuffle partitions to cores (guide: not 200). ONLY
     # for local masters: on a real cluster the right number depends on
     # executors that may not have registered yet (early defaultParallelism
@@ -63,6 +119,7 @@ def get_spark(
     # LOCAL master is sized after the session exists (runtime-settable).
     if shuffle_partitions is None:
         shuffle_partitions = _local_shuffle_partitions(master)
+    heap, pin_heap = driver_heap(_memory_limit_bytes())
     b = SparkSession.builder.appName(app_name)
     if master is not None:
         b = b.master(master)
@@ -88,17 +145,19 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.factory.idleWorkerMaxPoolSize", "64")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.driver.maxResultSize", "4g")
+    )
+    if pin_heap:
         # Pin -Xms to -Xmx and pre-touch at startup: Spark only sets -Xmx,
         # so the heap grows mid-run and every G1 expansion commits+zeroes
         # GBs inside stop-the-world pauses (observed as 20s+ stalls at 95%
-        # system time). One-time startup pretouch instead.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} -XX:+AlwaysPreTouch",
+        # system time). One-time startup pretouch instead — only for a heap
+        # the host can hold (a 24g pre-touch on a 15 GB host killed the JVM
+        # at launch).
+        b = b.config(
+            "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
         )
-    )
     # Worker daemon that pre-imports the heavy stack (daemon_prewarm.py) so
     # cold forks skip the ~1s pandas/numpy/pyarrow import. The daemon
     # process starts BEFORE any task, so it can only import admarus_spark

@@ -25,17 +25,17 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
     from admarus_spark.index.build import IndexBuilder
     from admarus_spark.search.engine import SearchEngine
-    from admarus_spark.session import get_spark
+    from admarus_spark.session import get_spark, local_cpus
 
     import __spark_entry__ as entry
 
-    spark = get_spark(app_name="admarus_bench", master=f"local[{CPUS}]")
+    cpus = local_cpus()
+    spark = get_spark(app_name="admarus_bench", master=f"local[{cpus}]")
     sf = os.path.basename(os.path.normpath(SF_DIR)).replace("sf", "")
     try:
         sf_val = float(sf)
@@ -123,7 +123,7 @@ def main() -> None:
         "sf": sf_val,
         "n_docs": n_docs,
         "index_build_docs_per_sec": round(n_docs / mins["index_build"], 1),
-        "cpus": (os.cpu_count() or 0) if CPUS == "*" else int(CPUS),
+        "cpus": (os.cpu_count() or 0) if cpus == "*" else int(cpus),
     }
 
     # Output hygiene (round-1 postmortem: BENCH_r01.json parsed null because

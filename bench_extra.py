@@ -16,7 +16,6 @@ import os
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def noop(df):
@@ -31,11 +30,12 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=2)
     args = ap.parse_args()
 
-    from admarus_spark.session import get_spark
+    from admarus_spark.session import get_spark, local_cpus
 
     import __spark_entry__ as entry
 
-    spark = get_spark(app_name="admarus_bench_extra", master=f"local[{CPUS}]")
+    cpus = local_cpus()
+    spark = get_spark(app_name="admarus_bench_extra", master=f"local[{cpus}]")
     sf_dir = args.sf_dir
 
     # same warmup as bench.py so first-call worker-pool init is not charged

@@ -458,11 +458,12 @@ def test_manifest_broadcast_gate_off(spark, movies_pdf, movies_oracle, tmp_path)
     run_parity(eng, movies_oracle, ["hunger", "hunger / games", "lang=en AND hunger"])
 
 
-def test_conjunctive_pruning_exact(docs_engine, docs_oracle):
+def test_conjunctive_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     """AND/n-of-n decode pruning must be EXACT (not just rank-safe) at any
-    k: with the rarest required word bounding candidates, results equal the
-    unpruned oracle bit-for-bit. Also covers required-word-missing early
-    exit and the pruning-disabled control."""
+    k, on the group-eval route and on the pivot: with the rarest required
+    word bounding candidates, results equal the unpruned oracle
+    bit-for-bit. Also covers required-word-missing early exit and the
+    pruning-disabled control."""
     queries = [
         "license AND parser",
         "license AND rareterm000063z",
@@ -470,6 +471,11 @@ def test_conjunctive_pruning_exact(docs_engine, docs_oracle):
         "license AND parser AND NOT bloom",  # Not child inside n==len AND
         "lang=python AND bloom",             # filter child, word required
     ]
+    for k in (3, 10, 10**6):
+        run_parity(docs_engine, docs_oracle, queries, k=k)
+    # the pivot's candidate pruning: group-eval cap and volume gate zeroed
+    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
+    monkeypatch.setattr(docs_engine, "single_prune_min_postings", 0)
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
     # control: pruning off (threshold 0) gives identical results
@@ -481,11 +487,12 @@ def test_conjunctive_pruning_exact(docs_engine, docs_oracle):
         docs_engine.and_prune_max_df = old
 
 
-def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle):
+def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     """n-of-m decode pruning (1 < n < m, pigeonhole cover of the m-n+1
-    rarest children) must be EXACT at any k, including with a hot child in
-    the cover complement, unindexed children shrinking m', and the
-    fewer-than-n-present early exit."""
+    rarest children) must be EXACT at any k, on the group-eval route and on
+    the pivot, including with a hot child in the cover complement,
+    unindexed children shrinking m', and the fewer-than-n-present early
+    exit."""
     queries = [
         "2(parser, lexer, bloom)",
         "2(license, parser, bloom)",          # hot child pruned by rare cover
@@ -493,6 +500,11 @@ def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle):
         "2(parser, lexer, nosuchterm)",       # m' shrinks to 2 -> cover of 1
         "2(rareterm000063z, nosuchterma, nosuchtermb)",  # m' < n -> empty
     ]
+    for k in (3, 10, 10**6):
+        run_parity(docs_engine, docs_oracle, queries, k=k)
+    # the pivot's candidate pruning: group-eval cap and volume gate zeroed
+    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
+    monkeypatch.setattr(docs_engine, "single_prune_min_postings", 0)
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
     # control: pruning off gives identical results
@@ -539,8 +551,8 @@ def test_nofm_pruning_reduces_decode(docs_engine):
     )
     tb = term_bucket("license", eng.n_buckets)
     pruned = eng.postings.filter((F.col("tb") == tb) & (F.col("term") == "license"))
-    full = eng._decode(pruned, None).count()
-    cut = eng._decode(pruned, None, cover).count()
+    full = eng._decode(pruned).count()
+    cut = eng._decode(pruned, cover).count()
     assert cut < full
 
 
@@ -556,27 +568,112 @@ def test_conjunctive_pruning_reduces_decode(docs_engine):
         "license", eng.n_buckets
     )
     pruned = eng.postings.filter((F.col("tb") == tb) & (F.col("term") == "license"))
-    full = eng._decode(pruned, None).count()
-    cut = eng._decode(pruned, None, rare_ids).count()
+    full = eng._decode(pruned).count()
+    cut = eng._decode(pruned, rare_ids).count()
     assert cut < full
     assert cut == rare_ids.size or cut <= rare_ids.size  # only candidate rows
 
 
-def test_bmw_cross_term_pruning(docs_engine, docs_oracle):
-    """Cross-term BMW (one global threshold across the query's terms) must
-    keep top-k exact and record its decode-pruning stats (VERDICT r3 #7).
-    The r6 small-volume gate would route this corpus to the full decode, so
-    the threshold is forced off to exercise the BMW path itself."""
-    old = docs_engine.single_prune_min_postings
+def test_single_query_routes_to_group_eval(docs_engine, docs_oracle):
+    """Postings-only search() evaluates executor-side through group-eval
+    (search_many's one-member case) and matches the oracle at every k;
+    metadata folds keep the pivot."""
+    routed = 0
+    for k in (1, 5, 10):
+        for q in DOCS_QUERIES:
+            got = [(r["doc_id"], r["score"]) for r in docs_engine.search(q, k).collect()]
+            want = docs_oracle.search(q, k)
+            assert got == want, (q, k)
+            if "=" in q:
+                assert docs_engine.last_group_eval is None, q
+            elif want:
+                assert docs_engine.last_group_eval is not None, (q, k)
+                assert docs_engine.last_group_eval["members"] == 1
+                routed += 1
+    assert routed >= 3 * 10
+
+
+def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch):
+    """Metadata folds, k=None, wand="off" and a zero group-eval byte cap
+    keep the pivot (last_group_eval is None), with oracle-exact results;
+    capped max-folds keep their executor-side block pruning."""
+
+    def check(eng, q, k, wand="auto"):
+        got = [(r["doc_id"], r["score"]) for r in eng.search(q, k, wand=wand).collect()]
+        assert got == docs_oracle.search(q, 10**9 if k is None else k), (q, k, wand)
+        assert eng.last_group_eval is None, (q, k, wand)
+
+    for q in ("lang=python AND bloom", "parser AND NOT lang=python"):
+        check(docs_engine, q, 10)
+    for q in ("license", "parser lexer bloom", "license AND parser"):
+        check(docs_engine, q, None)
+        check(docs_engine, q, 10, wand="off")
+    monkeypatch.setenv("SPARK_GRAFT_GROUP_EVAL_MAX_BYTES", "0")
+    capped = SearchEngine(spark, docs_engine.paths.index_dir)
+    for q in ("license", "parser lexer bloom", "2(parser, lexer, bloom)"):
+        check(capped, q, 10)
+    # a max-fold the cap sends to the pivot still prunes: each term decodes
+    # only its greedy top-k blocks, fewer rows than the full decode
+    decode, rows = capped._decode, []
+
+    def counting(pruned, cand_ids=None, block_masks=None):
+        out = decode(pruned, cand_ids, block_masks)
+        rows.append((out.count(), decode(pruned).count()))
+        return out
+
+    monkeypatch.setattr(capped, "_decode", counting)
+    for q in ("license", "license parser"):
+        rows.clear()
+        check(capped, q, 1)
+        assert len(rows) == 1 and rows[0][0] < rows[0][1], (q, rows)
+
+
+def test_tombstoned_index_keeps_pivot(spark, movies_pdf, tmp_path):
+    """Pending tombstones keep single queries on the pivot (its anti-join
+    drops dead generations), float-exact against the live corpus."""
+    import hashlib
+
+    import pandas as pd
+
+    from admarus_spark.oracle import OracleIndex
+    from admarus_spark.streaming.incremental import IncrementalIndexer
+
+    d = str(tmp_path / "idx_tomb_route")
+    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+        spark.createDataFrame(movies_pdf), input_token="tr-base"
+    )
+    changed = movies_pdf.iloc[:5].copy()
+    changed["content"] = "hunger " + changed["content"]
+    changed["content_sha256"] = [
+        hashlib.sha256(c.encode()).hexdigest() for c in changed["content"]
+    ]
+    IncrementalIndexer(spark, d).update(spark.createDataFrame(changed), "tr-delta")
+    oracle = OracleIndex(pd.concat([movies_pdf.iloc[5:], changed], ignore_index=True))
+    opaths = dict(enumerate(oracle.docs["path"]))
+    eng = SearchEngine(spark, d)
+    assert eng.tombstones is not None
+    for q in ("hunger", "hunger AND games", "perfectly matching"):
+        got = sorted((r["path"], r["score"]) for r in eng.search(q, 10**6).collect())
+        assert got == sorted((opaths[i], s) for i, s in oracle.search(q, 10**6)), q
+        assert eng.last_group_eval is None, q
+
+
+def test_single_query_runs_two_jobs(spark, docs_engine):
+    """A postings-only single query runs at most 2 Spark jobs, counted from
+    the status tracker under a job group: the broadcast of the k winners
+    and the dictionary join that returns them."""
+    sc = spark.sparkContext
+    q = "parser lexer bloom"
+    docs_engine.search(q, 10).collect()  # warm: bucket blooms load lazily once
+    sc.setJobGroup("single_query_jobs", q, False)
     try:
-        docs_engine.single_prune_min_postings = 0
-        run_parity(docs_engine, docs_oracle, ["parser lexer bloom"], k=5)
+        docs_engine.search(q, 10).collect()
     finally:
-        docs_engine.single_prune_min_postings = old
-    stats = docs_engine.last_bmw
-    assert stats is not None
-    assert 0 < stats["blocks_kept"] <= stats["blocks_total"]
-    assert stats["theta"] > float("-inf")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert docs_engine.last_group_eval is not None
+    jobs = sc.statusTracker().getJobIdsForGroup("single_query_jobs")
+    assert 0 < len(jobs) <= 2, jobs
 
 
 def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_path):
@@ -610,26 +707,47 @@ def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_
     run_parity(eng, movies_oracle, ["hunger"])
 
 
-def test_small_volume_gate_skips_driver_pruning(docs_engine, docs_oracle):
-    """r6: under single_prune_min_postings, wand='auto' takes the
-    full-decode path for multi-term shapes (no BMW probe, no rare-id fetch)
-    with results still exact; wand='on' keeps forcing BMW."""
+def test_pivot_missing_required_word_skips_decode(docs_engine, monkeypatch):
+    """A metadata-filtered query whose required word is not indexed (here:
+    every bloom probe answers "maybe", as on a false positive) returns
+    nothing before any decode, whatever the small-volume gate says."""
+    from admarus_spark.search import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "filter_get", lambda bloom, word: True)
+    calls = []
+    monkeypatch.setattr(docs_engine, "_decode", lambda *a, **kw: calls.append(a))
+    for gate in (1 << 60, 0):
+        monkeypatch.setattr(docs_engine, "single_prune_min_postings", gate)
+        got = docs_engine.search("lang=python AND bloom AND nosuchwordzz", 10).collect()
+        assert got == [] and docs_engine.last_group_eval is None
+    assert not calls
+
+
+def test_small_volume_gate_skips_driver_pruning(docs_engine, docs_oracle, monkeypatch):
+    """r6: on the pivot, under single_prune_min_postings the multi-term
+    shapes take the full decode (no rare-id fetch) with results still
+    exact; with the gate at zero the candidate fetch runs. The group-eval
+    cap is zeroed to keep these queries on the pivot."""
     eng = docs_engine
-    old = eng.single_prune_min_postings
-    try:
-        eng.single_prune_min_postings = 1 << 60  # everything is "small"
-        eng.last_bmw = None
+    calls = []
+    fetch = eng._query_cand_ids
+
+    def counting(q, qdf, blob_cache=None):
+        calls.append(q)
+        return fetch(q, qdf, blob_cache)
+
+    monkeypatch.setattr(eng, "_query_cand_ids", counting)
+    monkeypatch.setattr(eng, "group_eval_max_bytes", 0)
+    for gate, fetches in ((1 << 60, False), (0, True)):
+        monkeypatch.setattr(eng, "single_prune_min_postings", gate)
+        calls.clear()
         run_parity(
             eng, docs_oracle,
             ["parser lexer bloom", "license AND parser", "2(parser, lexer, bloom)"],
             k=5,
         )
-        assert eng.last_bmw is None  # BMW never engaged under the gate
-        # forcing wand='on' bypasses the gate and still matches
-        run_parity(eng, docs_oracle, ["parser lexer bloom"], k=5, wand="on")
-        assert eng.last_bmw is not None
-    finally:
-        eng.single_prune_min_postings = old
+        assert eng.last_group_eval is None
+        assert bool(calls) == fetches, gate
 
 
 def test_zero_term_corpus_builds_empty_index(spark, tmp_path):

@@ -1,11 +1,19 @@
-"""Pure-python unit coverage for the session factory's sizing logic and
-the contract file's single-source parity constants (no Spark session)."""
+"""Pure-python unit coverage for the session factory's sizing logic
+(shuffle partitions, driver heap, local cores) and the contract file's
+single-source parity constants (no Spark session)."""
 
 from __future__ import annotations
 
 import os
 
-from admarus_spark.session import _local_shuffle_partitions
+from admarus_spark.session import (
+    _local_shuffle_partitions,
+    _memory_limit_bytes,
+    driver_heap,
+    local_cpus,
+)
+
+GIB = 1 << 30
 
 
 def test_local_masters_sized_to_core_count():
@@ -24,6 +32,35 @@ def test_non_local_masters_keep_spark_default():
     assert _local_shuffle_partitions("local-cluster[2,1,1024]") is None
     # unparseable bracket content must not crash session construction
     assert _local_shuffle_partitions("local[abc]") is None
+
+
+def test_explicit_driver_mem_keeps_pinned_pretouched_heap(monkeypatch):
+    # an explicit size yields exactly the flags it always did, whatever
+    # the host holds
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    for limit in (None, GIB, 15 * GIB, 512 * GIB):
+        assert driver_heap(limit) == ("2g", True)
+
+
+def test_default_heap_sized_from_memory_limit(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    # a quarter of a 15 GiB host, pinned: it fits in half the limit
+    assert driver_heap(15 * GIB) == ("3840m", True)
+    # a large host keeps the former 24g ceiling
+    assert driver_heap(512 * GIB) == ("24576m", True)
+    # a tiny host gets the 1 GiB floor, which does not fit: no pre-touch
+    assert driver_heap(GIB + GIB // 2) == ("1024m", False)
+    # limit unknown: the former default
+    assert driver_heap(None) == ("24g", True)
+    limit = _memory_limit_bytes()
+    assert limit is None or limit > 0
+
+
+def test_local_master_defaults_to_nproc(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cpus() == str(len(os.sched_getaffinity(0)))
 
 
 def test_entry_contract_single_sources_parity_constants():
