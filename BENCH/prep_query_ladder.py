@@ -31,7 +31,7 @@ docs = spark.read.parquet(scale_bench.CORPUS_PARQUET)
 idx = "/tmp/admarus_scale_idx_1"
 shutil.rmtree(idx, ignore_errors=True)
 t0 = time.time()
-IndexBuilder(spark, idx, n_buckets=32, salt_chunks=8).build(
+IndexBuilder(spark, idx, n_buckets=32).build(
     docs, input_token=f"ladder_prep:{time.time()}", resume=False
 )
 print(f"index built in {time.time() - t0:.1f}s", flush=True)

@@ -68,7 +68,7 @@ def _engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
     if sf_dir not in _ENGINES:
         tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
         idx = f"/tmp/admarus_entry_idx/{tag}"
-        IndexBuilder(spark, idx, n_buckets=16, salt_chunks=8).build(
+        IndexBuilder(spark, idx, n_buckets=16).build(
             _docs_shape(spark, sf_dir), input_token=f"testdata:{sf_dir}"
         )
         _ENGINES[sf_dir] = SearchEngine(spark, idx)
@@ -95,7 +95,7 @@ def _engine_after_update(spark: SparkSession, sf_dir: str) -> SearchEngine:
 
         tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
         idx = f"/tmp/admarus_entry_idx/{tag}_upd"
-        IndexBuilder(spark, idx, n_buckets=16, salt_chunks=8).build(
+        IndexBuilder(spark, idx, n_buckets=16).build(
             _docs_shape(spark, sf_dir), input_token=f"testdata-upd-base:{sf_dir}"
         )
         d = _documents(spark, sf_dir).filter(F.col("doc_id") % 17 == 3)
@@ -149,7 +149,7 @@ def _engine_multigen(spark: SparkSession, sf_dir: str) -> SearchEngine:
 
         tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
         idx = f"/tmp/admarus_entry_idx/{tag}_gen"
-        IndexBuilder(spark, idx, n_buckets=16, salt_chunks=8).build(
+        IndexBuilder(spark, idx, n_buckets=16).build(
             _docs_shape(spark, sf_dir), input_token=f"testdata-gen-base:{sf_dir}"
         )
         d = _documents(spark, sf_dir).filter(F.col("doc_id") % 13 == 5)

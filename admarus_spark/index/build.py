@@ -15,13 +15,17 @@ stage1 (tokenize + doc ids + stats)
     ``doc_dict`` + per-(doc,term) ``tf`` + corpus ``stats``.
 
 stage2 (shuffle-merge + compress)
-    two-phase salted aggregation: partial posting encode per (term,
-    range-chunk of doc ids) bounds the per-task work for hot/skewed terms
-    (the reference has NO skew handling — hot terms just grow a RAM hashmap,
-    SURVEY.md §4 O10); per-term merge is cheap block-list concatenation
-    because blocks are self-contained. Postings are delta+varint compressed
-    with block-max metadata (SURVEY.md §4 O11) and written partitioned by a
-    term hash bucket ``tb`` for partition-pruned query scans.
+    one of two plans, picked by an observable memory gate. shuffle-encode
+    (default): a term dictionary swaps term strings for dense int64 ids,
+    ONE identity-routed exchange lands each term-hash bucket whole in its
+    own partition, and a single NumPy pass sorts and encodes it.
+    local-merge (skew fallback): each tf partition encodes its own local
+    index and only compressed blobs move to a per-bucket merge, so per-task
+    memory is bounded by partition size, not by term df (the reference has
+    NO skew handling — hot terms just grow a RAM hashmap, SURVEY.md §4
+    O10). Postings are delta+varint compressed with block-max metadata
+    (SURVEY.md §4 O11) and written partitioned by a term hash bucket ``tb``
+    for partition-pruned query scans.
 
 stage3 (summaries)
     per-bucket term bloom filters using the reference's exact word hash
@@ -36,13 +40,15 @@ skipped on resume when its lineage key matches.
 
 Scale notes (100 TB / 10^12 files): the only global shuffle of document
 content is the range partition for doc-id assignment; everything after
-``tf`` moves only (doc_id, term, tf, dl) tuples. Hot-term encode cost is
-bounded by ``n_docs / salt_chunks`` per task; AQE handles residual skew.
+``tf`` moves only (doc_id, term, tf, dl) tuples. A bucket whose raw rows
+exceed SPARK_GRAFT_S2_MAX_BUCKET_BYTES (gated on the exact largest bucket)
+sends the build to local-merge, whose encode work per task is bounded by
+the tf partition size however hot a term is; n_buckets grows with the
+corpus so that buckets stay under the cap.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import time
@@ -56,15 +62,12 @@ from pyspark.sql import functions as F
 from .. import BLOCK_SIZE, FILTER_BITS
 from ..hashword import build_filter
 from . import checkpoint as ckpt
-from .codec import (
-    block_max_saturation,
-    decode_postings,
-    encode_postings,
-    encode_postings_many,
-    merge_encoded_chunks,
-)
+from .codec import decode_postings, encode_postings_many, merge_encoded_chunks
 
 MARKER_TERM = ""  # per-doc marker row; real tokens are always len >= 3
+
+# rows per Arrow batch while stage 2 runs (see IndexBuilder._stage2)
+STAGE2_ARROW_BATCH_ROWS = 65536
 
 
 TF_SCHEMA = "doc_id long, term string, meta long"
@@ -410,49 +413,43 @@ def heal_swap(path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _merge_term_chunks(
-    term, chunk_rows: list[dict], block_size: int, avgdl: float
-) -> dict:
-    """Merge one term's per-chunk encodings (chunk_rows ordered by chunk).
-    Small merged lists (many 1-2 doc fragments) are decoded and re-encoded
-    into dense sorted blocks; larger ones are pure blob concatenation with
-    offset shifts (blocks are self-contained)."""
-    df_total = sum(int(c["df"]) for c in chunk_rows)
-    if len(chunk_rows) > 1 and df_total <= 4 * block_size:
-        parts = [
-            decode_postings(
-                c["ids_blob"], c["tfs_blob"], c["dls_blob"],
-                c["block_firsts"], c["block_lens"],
-            )
-            for c in chunk_rows
-        ]
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        o = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[o], tfs[o], dls[o]
-        enc = encode_postings(ids, tfs, dls, block_size)
-        bstarts = np.cumsum(
-            np.concatenate(([0], np.asarray(enc["block_lens"][:-1], np.int64)))
-        )
-        bmax = block_max_saturation(tfs, dls, avgdl, bstarts).tolist()
+def sort_encode_runs(
+    codes: np.ndarray,
+    ids: np.ndarray,
+    meta: np.ndarray,
+    block_size: int,
+    avgdl: float,
+    flat: bool = False,
+) -> tuple[np.ndarray, np.ndarray, dict]:
+    """The per-partition (term, doc_id) sort + encode shared by every write
+    path that starts from raw tf rows: the shuffle-encode bucket pass,
+    local-merge's local index and update()'s delta encode.
+
+    ``codes``: non-negative int64 term codes (factorize codes, or tids
+    rebased to the bucket's smallest). ``meta``: packed tf/dl (pack_meta).
+    Returns ``(order, starts, cols)``: the sort permutation, the start of
+    each term run in sorted order, and the ``encode_postings_many`` columns
+    (one entry per run) — ``codes[order[starts]]`` is each run's term code.
+
+    The sort key is ONE composite int64 when both parts fit (code span
+    < 2^22, ids < 2^41 — up to 2T docs), ~2x faster than a two-key lexsort;
+    lexsort otherwise. (doc, term) pairs are unique, so the key is unique
+    and the default (unstable, faster) sort is deterministic — both sorts
+    give the same permutation."""
+    span = int(codes.max()) + 1 if codes.size else 0
+    if span < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
+        order = np.argsort((codes << 41) | ids)
     else:
-        enc = merge_encoded_chunks(chunk_rows)
-        bmax = [x for c in chunk_rows for x in c["block_max"]]
-    return {
-        "term": term,
-        "df": df_total,
-        "ids": enc["ids_blob"],
-        "tfs": enc["tfs_blob"],
-        "dls": enc["dls_blob"],
-        "block_firsts": enc["block_firsts"],
-        "block_lasts": enc["block_lasts"],
-        "block_lens": enc["block_lens"],
-        "ids_offs": enc["ids_offs"],
-        "tfs_offs": enc["tfs_offs"],
-        "dls_offs": enc["dls_offs"],
-        "block_max": bmax,
-    }
+        order = np.lexsort((ids, codes))
+    codes_s = codes[order]
+    # one gather of the packed meta column, unpack after (saves a full-size
+    # random-access pass vs gathering tf and dl separately)
+    tfs_s, dls_s = unpack_meta(meta[order])
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(codes_s)) + 1))
+    cols = encode_postings_many(
+        ids[order], tfs_s, dls_s, starts, block_size, avgdl=avgdl, flat=flat
+    )
+    return order, starts, cols
 
 
 def _merge_small_terms_batch(
@@ -533,29 +530,6 @@ PARTIAL_SCHEMA = (
 )
 
 
-def _postings_arrow_schema():
-    """PyArrow twin of ``POSTINGS_SCHEMA + ", tb int"`` (mapInArrow output)."""
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("term", pa.string()),
-            ("df", pa.int64()),
-            ("ids", pa.binary()),
-            ("tfs", pa.binary()),
-            ("dls", pa.binary()),
-            ("block_firsts", pa.list_(pa.int64())),
-            ("block_lasts", pa.list_(pa.int64())),
-            ("block_lens", pa.list_(pa.int32())),
-            ("ids_offs", pa.list_(pa.int64())),
-            ("tfs_offs", pa.list_(pa.int64())),
-            ("dls_offs", pa.list_(pa.int64())),
-            ("block_max", pa.list_(pa.float64())),
-            ("tb", pa.int32()),
-        ]
-    )
-
-
 TID_POSTINGS_SCHEMA = (
     "tid long, df long, ids binary, tfs binary, dls binary, "
     "block_firsts array<long>, block_lasts array<long>, block_lens array<int>, "
@@ -570,8 +544,23 @@ def _tid_postings_arrow_schema():
     term column comes from a broadcast dictionary join on ``tid``."""
     import pyarrow as pa
 
-    base = _postings_arrow_schema()
-    return pa.schema([pa.field("tid", pa.int64())] + [base.field(i) for i in range(1, len(base))])
+    return pa.schema(
+        [
+            ("tid", pa.int64()),
+            ("df", pa.int64()),
+            ("ids", pa.binary()),
+            ("tfs", pa.binary()),
+            ("dls", pa.binary()),
+            ("block_firsts", pa.list_(pa.int64())),
+            ("block_lasts", pa.list_(pa.int64())),
+            ("block_lens", pa.list_(pa.int32())),
+            ("ids_offs", pa.list_(pa.int64())),
+            ("tfs_offs", pa.list_(pa.int64())),
+            ("dls_offs", pa.list_(pa.int64())),
+            ("block_max", pa.list_(pa.float64())),
+            ("tb", pa.int32()),
+        ]
+    )
 
 
 @dataclass
@@ -599,27 +588,35 @@ class IndexPaths:
         return os.path.join(self.index_dir, "summaries")
 
 
+def check_layout(index_dir: str, postings: DataFrame, rollup_kinds) -> int:
+    """The one layout check of every reader and writer of a built index
+    (SearchEngine init, update(), compact()): only the layout today's build
+    writes (lineage schema 5) is accepted; older indexes are rebuilt, not
+    read through fallbacks. Looks only at the postings schema and the
+    summaries rollup-row kinds the caller already holds, plus the stage-2
+    metrics file — no Spark job. Returns the persisted routing modulus
+    ``n_buckets`` (never inferred from occupied buckets: a trailing
+    zero-term bucket writes no row)."""
+    missing = []
+    if "block_lasts" not in postings.columns:
+        missing.append("postings column block_lasts")
+    missing += [f"summaries row kind='{k}'" for k in ("meta", "global") if k not in rollup_kinds]
+    n_buckets = ckpt.read_metrics(index_dir, "stage2_postings").get("n_buckets")
+    if n_buckets is None:
+        missing.append("stage-2 metric n_buckets")
+    if missing:
+        raise ValueError(
+            f"index {index_dir} predates the current layout (missing "
+            f"{', '.join(missing)}): rebuild the index with IndexBuilder"
+        )
+    return int(n_buckets)
+
+
 @dataclass
 class IndexBuilder:
     spark: SparkSession
     index_dir: str
     n_buckets: int = 32          # postings partition buckets (term-hash)
-    # 'auto' (default): 'shuffle-encode' when the LARGEST bucket's raw bytes
-    #   (exact, from the stage-2a dictionary pass; mean-estimate pre-gate
-    #   first) fit a single worker, else 'local-merge'. 'shuffle-encode':
-    #   raw tf shuffled once by term bucket (identity-routed, one bucket per
-    #   partition) as (tid, doc_id, meta) int64 rows — term strings swapped
-    #   for dense dictionary ids by a broadcast map-join before the exchange
-    #   and restored on the per-term output rows after it — then ONE
-    #   Arrow-native whole-bucket encode: no chunk fragments, no merge
-    #   stage, a single string-free Python crossing. 'local-merge': per-partition
-    #   local index -> compressed-blob shuffle -> per-bucket merge (per-task
-    #   memory bounded by partition size — the fallback when a bucket
-    #   outgrows one worker). 'salted-groupby': explicit df-driven hot-term
-    #   salting (kept for adversarial single-term skew experiments).
-    strategy: str = "auto"
-    salt_chunks: int = 8         # doc-id range chunks for hot-term salting
-    hot_df_threshold: int | None = None  # df above which a term is salted; None -> auto
     block_size: int = BLOCK_SIZE
     validate_sha: bool = True
     keep_tf: bool = True         # False: delete the (postings-sized) stage-1
@@ -637,11 +634,8 @@ class IndexBuilder:
         key = {
             "input": input_token,
             "n_buckets": self.n_buckets,
-            "salt_chunks": self.salt_chunks,
             "block_size": self.block_size,
             "validate_sha": self.validate_sha,
-            "hot_df_threshold": self.hot_df_threshold,
-            "strategy": self.strategy,
             "schema": 5,  # r3: summaries rollup row; tf meta packing
         }
         lineage1 = {"key": {**key, "stage": 1}}
@@ -859,53 +853,27 @@ class IndexBuilder:
 
     # ------------------------------------------------------------------
     def _stage2(self, paths: IndexPaths, lineage: dict) -> None:
-        """Selective salting: the two-phase (partial encode per doc-id range
-        chunk, then per-term merge) costs an extra shuffle, so it is applied
-        ONLY to hot terms — chosen from observed df stats (SURVEY.md §4 O10),
-        the df aggregate being needed for the dictionary anyway. Cold terms
-        (the overwhelming majority of the dictionary) take the single-shuffle
-        path. The reference has no skew handling at all (hot terms just grow
-        a RAM hashmap)."""
+        """Shuffle-merge + compress with one of two plans (see
+        ``_stage2_inner``): shuffle-encode, or local-merge when one bucket
+        would not fit a worker. Skew is handled by that explicit gate —
+        local-merge bounds per-task memory by partition size, whatever a
+        term's df. The reference has no skew handling at all (hot terms
+        just grow a RAM hashmap)."""
         t0 = time.time()
         spark = self.spark
-        # stage-scoped tuning, restored on exit:
-        # - bigger Arrow batches: the tf stream is slim fixed-width rows, so
-        #   64k-row batches cut per-batch Arrow/pandas overhead ~16x (the
-        #   session default stays small for fat content rows);
-        # - shuffle partitions = n_buckets and no AQE coalescing: the merge
-        #   groupBy lands EXACTLY one bucket per reduce task — AQE would
-        #   coalesce small buckets into few tasks whose skew makes the merge
-        #   a straggler at higher core counts.
-        scoped = {
-            "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-                "SPARK_GRAFT_S2_ARROW_BATCH", "65536"
-            ),
-            # opt-in knobs (A/B'd at 800k: the session defaults measured
-            # best at local[4]; pinning merge partitions to n_buckets only
-            # pays off when cores >> buckets)
-            "spark.sql.shuffle.partitions": os.environ.get(
-                "SPARK_GRAFT_S2_SHUFFLE_PARTS", ""
-            ),
-            # flag semantics: ANY non-empty value disables AQE coalescing
-            # (the name invites '1', which as a passthrough would ENABLE it —
-            # ADVICE r3)
-            "spark.sql.adaptive.coalescePartitions.enabled": (
-                "false" if os.environ.get("SPARK_GRAFT_S2_AQE_COALESCE_OFF") else ""
-            ),
-        }
-        scoped = {k: v for k, v in scoped.items() if v}
-        prev_conf = {}
-        for k, v in scoped.items():
-            prev_conf[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
+        # stage-scoped, restored on exit: the tf stream is slim fixed-width
+        # rows, so 64k-row Arrow batches cut per-batch Arrow/pandas overhead
+        # ~16x (the session default stays small for fat content rows)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, str(STAGE2_ARROW_BATCH_ROWS))
         try:
             self._stage2_inner(paths, lineage, t0)
         finally:
-            for k, v in prev_conf.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
     def _build_term_dict(self, tf: DataFrame, n_buckets: int) -> dict:
         """Stage-2a term dictionary: dense int64 term ids ordered by
@@ -934,8 +902,8 @@ class IndexBuilder:
         The dictionary is broadcast (driver-collected) for the tf-side map
         join: vocabulary grows ~Heaps-sublinearly with the corpus, and the
         SPARK_GRAFT_S2_MAX_DICT_TERMS gate (default 20M terms ≈ a few
-        hundred MB broadcast) falls back to the legacy string-shuffle path
-        above it rather than OOM-ing the driver.
+        hundred MB broadcast) sends the build to local-merge above it
+        rather than OOM-ing the driver.
 
         Returns {dict_df (persisted — caller unpersists), boffs, n_vocab,
         max_bucket_rows, seconds}."""
@@ -1009,8 +977,7 @@ class IndexBuilder:
     def _stage2_inner(self, paths: IndexPaths, lineage: dict, t0: float) -> None:
         spark = self.spark
         stats = spark.read.parquet(paths.stats).collect()[0]
-        n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-        chunk_span = max(1, math.ceil(n_docs / self.salt_chunks))
+        avgdl = float(stats["avgdl"])
         block_size = self.block_size
         n_buckets = self.n_buckets
 
@@ -1030,82 +997,30 @@ class IndexBuilder:
             .filter(F.col("term") != MARKER_TERM)
         )
 
-        # 'auto' resolution + memory guard for the whole-bucket encode: one
-        # worker holds ONE bucket's raw rows plus NumPy temporaries
-        # (~48 B/row bounds ids + meta + sort/order temporaries). The gate
-        # is EXACT: a cheap mean-estimate pre-check skips the dictionary
-        # jobs when even the AVERAGE bucket exceeds the cap; otherwise the
-        # stage-2a dictionary pass (needed by shuffle-encode anyway) yields
-        # the true LARGEST bucket's posting count — a skewed vocabulary can
-        # exceed the mean by up to n_buckets×, so gating on the mean could
-        # pick shuffle-encode and then OOM one whole-bucket encode (ADVICE
-        # r4). Above the cap, local-merge bounds per-task memory by
-        # PARTITION size instead of bucket size. At corpus scale n_buckets
-        # grows with the data (the bucket is the shard unit), keeping
-        # buckets under the cap.
-        strategy = self.strategy
-        dict_info: dict | None = None
+        # Plan choice — the build's only two settable values. shuffle-encode
+        # holds ONE bucket's raw rows plus NumPy temporaries in one worker
+        # (~48 B/row bounds ids + meta + sort/order temporaries), and
+        # broadcasts the term dictionary. The gate is EXACT: a cheap
+        # mean-estimate pre-check skips the dictionary jobs when even the
+        # AVERAGE bucket exceeds the cap; otherwise the stage-2a dictionary
+        # pass yields the true LARGEST bucket's posting count — a skewed
+        # vocabulary can exceed the mean by up to n_buckets×, so gating on
+        # the mean could OOM one whole-bucket encode (ADVICE r4). Above
+        # either cap, local-merge bounds per-task memory by PARTITION size
+        # instead of bucket size. At corpus scale n_buckets grows with the
+        # data (the bucket is the shard unit), keeping buckets under the
+        # cap.
         cap = int(os.environ.get("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", str(4 << 30)))
-        if strategy in ("auto", "shuffle-encode"):
-            mean_est = int(stats["total_tokens"] or 0) * 48 // max(1, n_buckets)
-            if strategy == "auto" and mean_est > cap:
-                strategy = "local-merge"
-            else:
-                dict_info = self._build_term_dict(tf, n_buckets)
-                if strategy == "auto":
-                    max_bucket_bytes = dict_info["max_bucket_rows"] * 48
-                    strategy = (
-                        "shuffle-encode" if max_bucket_bytes <= cap else "local-merge"
-                    )
-        self._resolved_strategy = strategy
-
-        hot_terms: list[str] = []
-        if strategy == "salted-groupby":
-            # hot iff a single-task encode would exceed ~2 salt chunks of docs
-            hot_threshold = (
-                self.hot_df_threshold
-                if self.hot_df_threshold is not None
-                else max(50_000, 2 * chunk_span)
-            )
-            df_tbl = tf.groupBy("term").agg(F.count("*").alias("df"))
-            hot_terms = [
-                r["term"] for r in df_tbl.filter(F.col("df") >= hot_threshold).collect()
-            ]
-            tf = tf.withColumn("chunk", (F.col("doc_id") / F.lit(chunk_span)).cast("int"))
-        else:
-            hot_threshold = -1
-
-        def _encode(term: str, pdf: pd.DataFrame) -> dict:
-            pdf = pdf.sort_values("doc_id", kind="mergesort")
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            tfs, dls = unpack_meta(pdf["meta"].to_numpy(np.int64))
-            enc = encode_postings(ids, tfs, dls, block_size)
-            starts = np.cumsum(np.concatenate(([0], np.asarray(enc["block_lens"][:-1], np.int64))))
-            bmax = block_max_saturation(tfs, dls, avgdl, starts)
-            return {
-                "term": term,
-                "df": int(ids.size),
-                "ids": enc["ids_blob"],
-                "tfs": enc["tfs_blob"],
-                "dls": enc["dls_blob"],
-                "block_firsts": enc["block_firsts"],
-                "block_lasts": enc["block_lasts"],
-                "block_lens": enc["block_lens"],
-                "ids_offs": enc["ids_offs"],
-                "tfs_offs": enc["tfs_offs"],
-                "dls_offs": enc["dls_offs"],
-                "block_max": bmax.tolist(),
-            }
-
-        def encode_partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            term, chunk = key
-            row = _encode(term, pdf)
-            row["chunk"] = int(chunk)
-            return pd.DataFrame([row])
-
-        def encode_whole(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            (term,) = key
-            return pd.DataFrame([_encode(term, pdf)])
+        dict_cap = int(os.environ.get("SPARK_GRAFT_S2_MAX_DICT_TERMS", 20_000_000))
+        strategy = "local-merge"
+        dict_info: dict | None = None
+        if int(stats["total_tokens"] or 0) * 48 // max(1, n_buckets) <= cap:
+            dict_info = self._build_term_dict(tf, n_buckets)
+            if (
+                dict_info["max_bucket_rows"] * 48 <= cap
+                and dict_info["n_vocab"] <= dict_cap
+            ):
+                strategy = "shuffle-encode"
 
         def encode_local(batches):
             """Local inverted index per tf partition: sort the partition's
@@ -1125,31 +1040,11 @@ class IndexBuilder:
             ids = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in pdfs])
             meta = np.concatenate([p["meta"].to_numpy(np.int64) for p in pdfs])
             codes, uniq = pd.factorize(terms_col, sort=False)
-            # (term, doc_id) sort: a composite single int64 key sorts ~2x
-            # faster than a two-key lexsort when both fit (codes < 2^22,
-            # ids < 2^41 — up to 2T docs); fall back to lexsort otherwise.
-            # (doc, term) pairs are unique -> the key is unique -> the
-            # default (unstable, faster) sort is deterministic.
-            nuq = len(uniq)
-            if nuq < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
-                order = np.argsort((codes.astype(np.int64) << 41) | ids)
-            else:
-                order = np.lexsort((ids, codes))
-            codes_s, ids_s = codes[order], ids[order]
-            # one gather of packed meta, unpack after (halves the gathers)
-            tfs_s, dls_s = unpack_meta(meta[order])
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(codes_s)) + 1))
-            # vectorized multi-term encode: three whole-partition varint
-            # passes + per-term blob slicing — with a realistic source-code
-            # vocabulary (10^4-10^5 term runs per partition) the per-call
-            # overhead of one encode_postings per term dominated this stage
-            # (~130 us/term measured); the batched codec is ~12x faster
-            cols = encode_postings_many(
-                ids_s, tfs_s, dls_s, starts, block_size, avgdl=avgdl
-            )
+            codes = codes.astype(np.int64)
+            order, starts, cols = sort_encode_runs(codes, ids, meta, block_size, avgdl)
             yield pd.DataFrame(
                 {
-                    "term": np.asarray(uniq, dtype=object)[codes_s[starts]],
+                    "term": np.asarray(uniq, dtype=object)[codes[order[starts]]],
                     "chunk": np.full(starts.size, pid, dtype=np.int64),
                     "df": cols["df"],
                     "ids": cols["ids"],
@@ -1165,98 +1060,20 @@ class IndexBuilder:
                 }
             )
 
-        def encode_bucket_arrow(batches):
-            """shuffle-encode strategy: the partition holds EVERY row of its
-            term bucket, so one dictionary-encode + sort + encode_postings_many
-            yields the final postings rows — no chunk fragments, no merge
-            stage, a single Python crossing for the whole of stage 2.
-
-            Arrow-NATIVE on purpose (mapInArrow, not mapInPandas): the input
-            is millions of slim rows per bucket, and converting their term
-            strings to pandas object arrays was the dominant cost of the
-            pandas variant (per-string Python object allocation, measured as
-            the memory-bandwidth hot spot that anti-scaled at high core
-            counts). Here the strings stay in Arrow buffers end to end:
-            ``dictionary_encode`` (C++) yields int32 codes + a unique-string
-            dictionary; NumPy touches only fixed-width columns; just the
-            per-TERM outputs (a few thousand rows) materialize Python
-            objects."""
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            term_chunks = tbl.column("term").chunks
-            term_arr = (
-                term_chunks[0]
-                if len(term_chunks) == 1
-                else pa.concat_arrays(term_chunks)
-            )
-            denc = pc.dictionary_encode(term_arr)
-            codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            uniq = denc.dictionary
-            ids = np.ascontiguousarray(tbl.column("doc_id").to_numpy(), dtype=np.int64)
-            meta = np.ascontiguousarray(tbl.column("meta").to_numpy(), dtype=np.int64)
-            tbs = tbl.column("tb").to_numpy()
-            nuq = len(uniq)
-            # (term, doc_id) sort via one composite int64 key when both fit
-            # (codes < 2^22, ids < 2^41 — up to 2T docs), else lexsort.
-            # (doc, term) pairs are unique, so the key is unique and the
-            # default (unstable, faster) sort is deterministic.
-            if nuq < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
-                order = np.argsort((codes << 41) | ids)
-            else:
-                order = np.lexsort((ids, codes))
-            codes_s, ids_s = codes[order], ids[order]
-            # ONE gather of the packed meta column, unpack after (saves a
-            # full-size random-access pass vs gathering tf and dl separately)
-            tfs_s, dls_s = unpack_meta(meta[order])
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(codes_s)) + 1))
-            cols = encode_postings_many(
-                ids_s, tfs_s, dls_s, starts, block_size, avgdl=avgdl, flat=True
-            )
-            # zero-copy list columns: one offsets array + the flat values
-            # (a per-term np.split + pa.array(list) pays ~10^5 Python view
-            # allocations per bucket, measured as a visible build-stage cost)
-            boffs = pa.array(
-                np.concatenate(([0], np.cumsum(cols["nb"]))).astype(np.int32),
-                type=pa.int32(),
-            )
-
-            def _list(vals, typ):
-                return pa.ListArray.from_arrays(boffs, pa.array(vals, type=typ))
-
-            arrays = [
-                pc.take(uniq, pa.array(codes_s[starts])),
-                pa.array(cols["df"], type=pa.int64()),
-                pa.array(cols["ids"], type=pa.binary()),
-                pa.array(cols["tfs"], type=pa.binary()),
-                pa.array(cols["dls"], type=pa.binary()),
-                _list(cols["block_firsts"], pa.int64()),
-                _list(cols["block_lasts"], pa.int64()),
-                _list(cols["block_lens"], pa.int32()),
-                _list(cols["ids_offs"], pa.int64()),
-                _list(cols["tfs_offs"], pa.int64()),
-                _list(cols["dls_offs"], pa.int64()),
-                _list(cols["block_max"], pa.float64()),
-                pa.array(tbs[order][starts].astype(np.int32), type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=_postings_arrow_schema())
-
         dict_boffs = dict_info["boffs"] if dict_info is not None else None
 
         def encode_bucket_tid(batches):
-            """shuffle-encode with the stage-2a term dictionary: the shuffle
+            """shuffle-encode with the stage-2a term dictionary: the
+            partition holds EVERY row of its term bucket, and the shuffle
             ships (tid, doc_id, meta) — three fixed-width int64 columns, NO
-            term strings — and this pass is pure NumPy over fixed-width
-            arrays: no ``dictionary_encode``, no string gather, no Python
-            string objects at any point (the r4 profile pinned stage 2's
-            scaling ceiling on memory bandwidth, and the UTF-8 term column
-            dominated both the shuffled bytes and the Arrow→NumPy transfer).
-            The output is keyed by ``tid``; the term column is restored by a
-            broadcast dictionary join on the few per-TERM rows downstream.
+            term strings — so one NumPy sort + encode over fixed-width
+            arrays yields the final postings rows: no chunk fragments, no
+            merge stage, no Python string objects at any point (the r4
+            profile pinned stage 2's scaling ceiling on memory bandwidth,
+            and the UTF-8 term column dominated both the shuffled bytes and
+            the Arrow→NumPy transfer). The output is keyed by ``tid``; the
+            term column is restored by a broadcast dictionary join on the
+            few per-TERM rows downstream.
 
             ``tb`` is derived from tid via the bucket-offset table (tids are
             assigned bucket-contiguously), NOT from the partition id — the
@@ -1273,26 +1090,17 @@ class IndexBuilder:
             ids = np.ascontiguousarray(tbl.column("doc_id").to_numpy(), dtype=np.int64)
             meta = np.ascontiguousarray(tbl.column("meta").to_numpy(), dtype=np.int64)
             tmin = int(tids.min())
-            codes = tids - tmin  # bucket-local span (tids bucket-contiguous)
-            span = int(codes.max()) + 1
-            # (term, doc_id) sort via one composite int64 key when both fit
-            # (span < 2^22, ids < 2^41 — up to 2T docs), else lexsort. The
-            # (doc, term) pairs are unique -> key unique -> the default
-            # (unstable, faster) sort is deterministic.
-            if span < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
-                order = np.argsort((codes << 41) | ids)
-            else:
-                order = np.lexsort((ids, tids))
-            tids_s, ids_s = tids[order], ids[order]
-            tfs_s, dls_s = unpack_meta(meta[order])
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(tids_s)) + 1))
-            cols = encode_postings_many(
-                ids_s, tfs_s, dls_s, starts, block_size, avgdl=avgdl, flat=True
+            # bucket-local codes (tids are bucket-contiguous)
+            order, starts, cols = sort_encode_runs(
+                tids - tmin, ids, meta, block_size, avgdl, flat=True
             )
-            rep_tids = tids_s[starts]
+            rep_tids = tids[order[starts]]
             tb_arr = (np.searchsorted(dict_boffs, rep_tids, side="right") - 1).astype(
                 np.int32
             )
+            # zero-copy list columns: one offsets array + the flat values
+            # (a per-term np.split + pa.array(list) pays ~10^5 Python view
+            # allocations per bucket, measured as a visible build-stage cost)
             boffs = pa.array(
                 np.concatenate(([0], np.cumsum(cols["nb"]))).astype(np.int32),
                 type=pa.int32(),
@@ -1317,44 +1125,6 @@ class IndexBuilder:
                 pa.array(tb_arr, type=pa.int32()),
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=_tid_postings_arrow_schema())
-
-        if strategy == "salted-groupby":
-            cold_tf = tf.filter(~F.col("term").isin(hot_terms)) if hot_terms else tf
-            cold = cold_tf.groupBy("term").applyInPandas(encode_whole, POSTINGS_SCHEMA)
-            partial = (
-                tf.filter(F.col("term").isin(hot_terms))
-                .groupBy("term", "chunk")
-                .applyInPandas(encode_partial, PARTIAL_SCHEMA)
-                if hot_terms
-                else None
-            )
-        elif strategy == "shuffle-encode":
-            cold = None
-            partial = None
-        else:  # local-merge
-            cold = None
-            partial = tf.mapInPandas(encode_local, PARTIAL_SCHEMA)
-
-        def _chunk_dict(r) -> dict:
-            return {
-                "df": int(r.df),
-                "ids_blob": r.ids,
-                "tfs_blob": r.tfs,
-                "dls_blob": r.dls,
-                "block_firsts": list(r.block_firsts),
-                "block_lasts": list(r.block_lasts),
-                "block_lens": list(r.block_lens),
-                "ids_offs": list(r.ids_offs),
-                "tfs_offs": list(r.tfs_offs),
-                "dls_offs": list(r.dls_offs),
-                "block_max": list(r.block_max),
-            }
-
-        def merge_term(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            (term,) = key
-            pdf = pdf.sort_values("chunk", kind="mergesort")
-            chunks = [_chunk_dict(r) for r in pdf.itertuples()]
-            return pd.DataFrame([_merge_term_chunks(term, chunks, block_size, avgdl)])
 
         def merge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             """Merge ALL terms of one term-hash bucket in a single pandas
@@ -1405,10 +1175,40 @@ class IndexBuilder:
             if big.any():
                 merged_rows = []
                 for ti in np.flatnonzero(big):
-                    idxs = order[starts[ti] : ends[ti]]
-                    chunks = [_chunk_dict(r) for r in pdf.iloc[idxs].itertuples()]
+                    # chunk rows in ascending pid order; readers sort the
+                    # decoded ids (group_eval._decode_term)
+                    rows = list(pdf.iloc[order[starts[ti] : ends[ti]]].itertuples())
+                    enc = merge_encoded_chunks(
+                        [
+                            {
+                                "ids_blob": r.ids,
+                                "tfs_blob": r.tfs,
+                                "dls_blob": r.dls,
+                                "block_firsts": r.block_firsts,
+                                "block_lasts": r.block_lasts,
+                                "block_lens": r.block_lens,
+                                "ids_offs": r.ids_offs,
+                                "tfs_offs": r.tfs_offs,
+                                "dls_offs": r.dls_offs,
+                            }
+                            for r in rows
+                        ]
+                    )
                     merged_rows.append(
-                        _merge_term_chunks(terms_s[starts[ti]], chunks, block_size, avgdl)
+                        {
+                            "term": terms_s[starts[ti]],
+                            "df": int(df_tot[ti]),
+                            "ids": enc["ids_blob"],
+                            "tfs": enc["tfs_blob"],
+                            "dls": enc["dls_blob"],
+                            "block_firsts": enc["block_firsts"],
+                            "block_lasts": enc["block_lasts"],
+                            "block_lens": enc["block_lens"],
+                            "ids_offs": enc["ids_offs"],
+                            "tfs_offs": enc["tfs_offs"],
+                            "dls_offs": enc["dls_offs"],
+                            "block_max": [x for r in rows for x in r.block_max],
+                        }
                     )
                 frames.append(pd.DataFrame(merged_rows)[keep_cols])
             out = (
@@ -1420,85 +1220,49 @@ class IndexBuilder:
             out["tb"] = int(tb)
             return out
 
-        if strategy == "salted-groupby":
-            merged = cold
-            if partial is not None:
-                hot_merged = partial.groupBy("term").applyInPandas(merge_term, POSTINGS_SCHEMA)
-                merged = hot_merged if merged is None else merged.unionByName(hot_merged)
-            merged = merged.withColumn("tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets)))
-            merged = merged.repartition(n_buckets, "tb")
-        elif strategy == "shuffle-encode":
+        if strategy == "shuffle-encode":
             # ONE shuffle of the raw tf stream, routed through identity-
             # partition probe keys so each bucket lands whole — and ALONE —
             # in its shuffle partition. This replaces repartitionByRange
             # (which pays a sampling pass over the child plan, i.e. a second
             # tf scan) and plain hash repartition (balls-in-bins collisions
             # put 2-4 buckets in one partition — a straggler at one-wave
-            # parallelism).
-            #
-            # Default (tid path): a broadcast map-join swaps the term string
-            # for its dense dictionary id BEFORE the exchange, so the
-            # shuffled row is (tid, doc_id, meta, pk) — four 8-byte slots,
-            # ~1/3 fewer uncompressed bytes than with the UTF-8 term column,
-            # and the whole-bucket encode becomes string-free (VERDICT r4
-            # #1: shuffled bytes, not CPU, capped build scaling). The term
-            # column is restored on the per-TERM output rows (|vocabulary|
-            # rows, not |postings|) by a second broadcast join. Above the
-            # dictionary-size gate the legacy string-shuffle path keeps the
-            # build working without a driver-sized broadcast.
-            dict_cap = int(os.environ.get("SPARK_GRAFT_S2_MAX_DICT_TERMS", 20_000_000))
-            use_tid = dict_info is not None and dict_info["n_vocab"] <= dict_cap
-            self._tid_dict_used = use_tid
-            if use_tid:
-                dict_df = dict_info["dict_df"]
-                merged_tid = (
-                    tf.join(F.broadcast(dict_df), "term")
-                    .select("tid", "doc_id", "meta", "pk")
-                    .repartition(n_buckets, "pk")
-                    .drop("pk")
-                    .mapInArrow(encode_bucket_tid, TID_POSTINGS_SCHEMA)
+            # parallelism). A broadcast map-join swaps the term string for
+            # its dense dictionary id BEFORE the exchange, so the shuffled
+            # row is (tid, doc_id, meta, pk) — four 8-byte slots, ~1/3
+            # fewer uncompressed bytes than with the UTF-8 term column
+            # (VERDICT r4 #1: shuffled bytes, not CPU, capped build
+            # scaling; BENCH/TID_AB.json). The term column is restored on
+            # the per-TERM output rows (|vocabulary| rows, not |postings|)
+            # by a second broadcast join.
+            dict_df = dict_info["dict_df"]
+            merged = (
+                tf.join(F.broadcast(dict_df), "term")
+                .select("tid", "doc_id", "meta", "pk")
+                .repartition(n_buckets, "pk")
+                .drop("pk")
+                .mapInArrow(encode_bucket_tid, TID_POSTINGS_SCHEMA)
+                .join(F.broadcast(dict_df.select("tid", "term")), "tid")
+                .select(
+                    "term", "df", "ids", "tfs", "dls", "block_firsts",
+                    "block_lasts", "block_lens", "ids_offs", "tfs_offs",
+                    "dls_offs", "block_max", "tb",
                 )
-                merged = (
-                    merged_tid.join(F.broadcast(dict_df.select("tid", "term")), "tid")
-                    .select(
-                        "term", "df", "ids", "tfs", "dls", "block_firsts",
-                        "block_lasts", "block_lens", "ids_offs", "tfs_offs",
-                        "dls_offs", "block_max", "tb",
-                    )
-                )
-            else:
-                from ..murmur import identity_partition_keys
-
-                route = F.element_at(
-                    F.array(
-                        *[F.lit(int(j)) for j in identity_partition_keys(n_buckets)]
-                    ),
-                    F.col("tb") + 1,
-                )
-                merged = (
-                    tf.withColumn(
-                        "tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets)).cast("int")
-                    )
-                    .withColumn("pk", route)
-                    .repartition(n_buckets, "pk")
-                    .drop("pk")
-                    .mapInArrow(encode_bucket_arrow, POSTINGS_SCHEMA + ", tb int")
-                )
+            )
         else:
             # local-merge: assign tb BEFORE the merge so ONE shuffle both
             # co-locates each term's chunks and lands them in their final
             # bucket; the write needs no further repartition
-            partial_tb = partial.withColumn(
-                "tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets))
-            )
-            merged = partial_tb.groupBy("tb").applyInPandas(
-                merge_bucket, POSTINGS_SCHEMA + ", tb int"
+            merged = (
+                tf.mapInPandas(encode_local, PARTIAL_SCHEMA)
+                .withColumn("tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets)))
+                .groupBy("tb")
+                .applyInPandas(merge_bucket, POSTINGS_SCHEMA + ", tb int")
             )
         t_w0 = time.time()
         # bracket the write job's exchange volume (best-effort, from the JVM
-        # status store): the raw-tf shuffle executes inside this job, so the
-        # before/after delta IS the stage-2 shuffled-byte count — the direct
-        # evidence for the tid-vs-string bandwidth claim (VERDICT r4 #1)
+        # status store): the stage-2 shuffle executes inside this job, so the
+        # before/after delta IS the stage-2 shuffled-byte count
         from ..session import jvm_shuffle_write_bytes
 
         sw_before = jvm_shuffle_write_bytes(spark)
@@ -1549,7 +1313,6 @@ class IndexBuilder:
                 "n_vocab": dict_info["n_vocab"],
                 "max_bucket_rows": dict_info["max_bucket_rows"],
                 "dict_sec": round(dict_info["seconds"], 2),
-                "tid_dict": bool(getattr(self, "_tid_dict_used", False)),
             }
         ckpt.write_stage(
             self.index_dir,
@@ -1564,16 +1327,12 @@ class IndexBuilder:
                 "n_terms": sum(per_bucket.values()),
                 "n_postings": sum(int(r["posts"] or 0) for r in rows),
                 "max_df": max((int(r["mx"] or 0) for r in rows), default=0),
-                "strategy": strategy,            # resolved ('auto' never persists)
-                "strategy_configured": self.strategy,
-                "salt_chunk_span": chunk_span,
-                "hot_df_threshold": hot_threshold,
-                "n_hot_terms": len(hot_terms),
+                "strategy": strategy,
                 "terms_per_bucket": per_bucket,
                 "write_job_sec": round(t_write, 2),
                 "stats_job_sec": round(t_stats, 2),
-                # raw-tf exchange volume (None when the status store is
-                # unreachable); tid vs string A/B evidence, see BENCH/tid_ab.py
+                # stage-2 exchange volume (None when the status store is
+                # unreachable)
                 "shuffle_write_bytes": shuffle_bytes,
                 "seconds": time.time() - t0,
             },

@@ -8,9 +8,10 @@ its first doc id absolute (``block_firsts``) and within-block gaps
 varint-encoded; tfs and doc lengths are varint streams; a per-block maximum
 of the BM25 tf-saturation term is kept for block-max WAND skipping.
 
-Blocks are self-contained (no cross-block deltas) so salted partial builds of
-a hot term can be merged by plain block-list concatenation — the skew story
-(SURVEY.md §2.3 A2, §4 O10/O11).
+Blocks are self-contained (no cross-block deltas) so the per-partition
+partial encodings of a hot term (the build's local-merge plan) are merged by
+plain block-list concatenation — the skew story (SURVEY.md §2.3 A2, §4
+O10/O11).
 
 Everything is vectorized NumPy (runs inside Arrow-batched Spark UDFs; no
 per-row Python).
@@ -336,12 +337,14 @@ def decode_postings(
 
 
 def merge_encoded_chunks(chunks: list[dict]) -> dict:
-    """Merge salted partial encodings of one term.
+    """Merge one term's partial encodings (local-merge: one chunk per tf
+    partition) by concatenation.
 
-    Chunks must cover disjoint, ascending doc_id ranges (range-salting
-    guarantees this). Blocks are self-contained, so the merge is pure
-    concatenation with offset shifting — the cheap hot-term merge required
-    by the north rule.
+    Blocks are self-contained, so the merge is pure concatenation with
+    offset shifting — the cheap hot-term merge required by the north rule.
+    Chunks hold disjoint doc ids but need not be in ascending id order:
+    every block keeps its own [first, last] bounds, and readers sort the
+    decoded ids (``group_eval._decode_term``).
     """
     out = {
         "ids_blob": b"".join(c["ids_blob"] for c in chunks),

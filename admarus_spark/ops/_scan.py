@@ -22,6 +22,8 @@ Same rule the index build applies to its own content scan
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -34,16 +36,38 @@ def scan_wide(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-# the narrow/wide decision per (path, parallelism) — a property of the file
-# layout, stable for the session; memoized because the .rdd partition-count
-# probe costs ~0.1 s of driver planning per call
-_NARROW: dict[tuple[str, int], bool] = {}
+# the narrow/wide decision per (path, parallelism, layout stamp) — a property
+# of the file layout; memoized because the .rdd partition-count probe costs
+# ~0.1 s of driver planning per call. The stamp keys the decision to the
+# files themselves: a path rewritten with a different layout gets a fresh
+# probe instead of the old answer.
+_NARROW: dict[tuple[str, int, tuple | None], bool] = {}
+
+
+def _layout_stamp(path: str) -> tuple | None:
+    """(mtime_ns, size) of the newest part file under ``path`` (or of the
+    file itself); None for a path the local filesystem cannot see."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return st.st_mtime_ns, st.st_size
+        parts = [
+            e.stat()
+            for e in os.scandir(path)
+            if e.is_file() and not e.name.startswith(("_", "."))
+        ]
+    except OSError:
+        return None
+    if not parts:
+        return None
+    st = max(parts, key=lambda p: p.st_mtime_ns)
+    return st.st_mtime_ns, st.st_size
 
 
 def read_wide(spark: SparkSession, path: str) -> DataFrame:
     """``scan_wide(spark.read.parquet(path))`` with the probe memoized."""
     n = spark.sparkContext.defaultParallelism
-    key = (path, n)
+    key = (path, n, _layout_stamp(path))
     narrow = _NARROW.get(key)
     df = spark.read.parquet(path)
     if narrow is None:

@@ -35,9 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import BM25_B, BM25_K1, FILTER_BITS
+from .. import BM25_B, BM25_K1
 from ..hashword import filter_get
-from ..index.build import IndexPaths, heal_swap
+from ..index.build import IndexPaths, check_layout, heal_swap
 from ..index.codec import decode_postings
 from ..murmur import identity_partition_keys, term_bucket
 from ..oracle import bm25_idf
@@ -111,49 +111,21 @@ class SearchEngine:
         # scales with the corpus, so eagerly materializing every bucket's
         # 125 KB bloom would cost O(n_buckets) driver heap and a slow init
         # at 100 TB scale. Per-bucket blooms load lazily, one pruned collect
-        # per batch of queried buckets. Legacy indexes without the global
-        # row fall back to the eager full load.
+        # per batch of queried buckets.
         self._summaries = spark.read.parquet(self.paths.summaries)
         self.bucket_blooms: dict[int, np.ndarray] = {}
         self._absent_buckets: set[int] = set()
-        self.meta_bloom = np.zeros(FILTER_BITS // 8, dtype=np.uint8)
-        global_terms: np.ndarray | None = None
-        for r in self._summaries.filter(F.col("kind").isin("meta", "global")).collect():
-            filt = np.frombuffer(r["filter"], dtype=np.uint8)
-            if r["kind"] == "meta":
-                self.meta_bloom = filt
-            else:
-                global_terms = filt
-        self._lazy_blooms = global_terms is not None
-        if not self._lazy_blooms:
-            for r in self._summaries.filter(F.col("kind") == "terms").collect():
-                self.bucket_blooms[int(r["tb"])] = np.frombuffer(r["filter"], dtype=np.uint8)
-            blooms = list(self.bucket_blooms.values())
-            global_terms = (
-                np.bitwise_or.reduce(blooms) if blooms else np.zeros(FILTER_BITS // 8, np.uint8)
-            )
-        self.global_bloom = np.bitwise_or(global_terms, self.meta_bloom)
+        rollup = {
+            r["kind"]: np.frombuffer(r["filter"], dtype=np.uint8)
+            for r in self._summaries.filter(F.col("kind").isin("meta", "global")).collect()
+        }
+        # n_buckets is the ROUTING modulus (persisted by stage 2)
+        self.n_buckets = check_layout(index_dir, self.postings, rollup)
+        self.meta_bloom = rollup["meta"]
+        self.global_bloom = np.bitwise_or(rollup["global"], self.meta_bloom)
         from ..index import checkpoint as _ckpt
 
         stage2 = _ckpt.read_metrics(index_dir, "stage2_postings")
-        # n_buckets is the ROUTING modulus: it must be the configured bucket
-        # count, not max(occupied)+1 — a trailing bucket with zero terms
-        # writes no partition/summary row, and inferring from occupancy would
-        # route every term with the wrong modulus (silently empty results).
-        # Persisted in stage2 metrics; occupancy inference is the legacy
-        # fallback for pre-r2 indexes only.
-        n_b = stage2.get("n_buckets")
-        if n_b is not None:
-            self.n_buckets = int(n_b)
-        else:
-            # legacy fallback (pre-r2 index without stage2 metrics): infer
-            # from the summaries table, NOT the in-memory bloom dict — under
-            # lazy-bloom init the dict is empty at this point and max()+1
-            # would silently route every term with modulus 1 (ADVICE r3)
-            mx = self._summaries.filter(F.col("kind") == "terms").agg(
-                F.max("tb")
-            ).collect()[0][0]
-            self.n_buckets = int(mx) + 1 if mx is not None else 1
         # dictionary cache: for small dictionaries, (term -> df) is loaded
         # once at init so queries skip the per-query df-collect job; at
         # billion-term scale this stays lazy (per-query pruned collect).
@@ -297,8 +269,6 @@ class SearchEngine:
         collect for all missing buckets, cached for the engine's lifetime.
         Buckets with no summary row (zero terms landed there) are cached as
         absent so they are never re-queried."""
-        if not self._lazy_blooms:
-            return
         missing = [
             tb
             for tb in tbs
@@ -721,13 +691,9 @@ class SearchEngine:
             F.col("tb").isin(buckets) & F.col("term").isin(terms)
         )
         cols = [
-            "term", "ids", "tfs", "dls",
-            "block_firsts", "block_lens", "ids_offs", "tfs_offs", "dls_offs",
-            "block_max",
+            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
         ]
-        has_lasts = "block_lasts" in pruned.columns
-        if has_lasts:
-            cols.append("block_lasts")
         case = (
             "CASE "
             + " ".join(
@@ -739,7 +705,7 @@ class SearchEngine:
             + " END"
         )
         src = pruned.select(*cols).withColumn("gk", F.explode(F.expr(case)))
-        if key_range and has_lasts:
+        if key_range:
             # drop replicas whose whole row misses the shard's id range —
             # per-block masks inside evaluate_group re-check exactly
             lo_case = (
@@ -905,12 +871,8 @@ class SearchEngine:
     def _collect_block_meta(self, pruned: DataFrame):
         """Per-term block metadata for driver-side mask computation (one
         KB-scale collect for the whole query/batch). None when a term is
-        split across rows (legacy/mid-compaction layout — masks cannot be
-        keyed by term alone) or the index predates per-block id bounds
-        (pre-r2 layout without ``block_lasts`` — callers fall back to the
-        per-term greedy, which never reads the bounds)."""
-        if "block_lasts" not in pruned.columns:
-            return None
+        split across rows (generations pending compaction — masks cannot be
+        keyed by term alone; callers fall back to the per-term greedy)."""
         meta = pruned.select(
             "term", "block_max", "block_firsts", "block_lasts"
         ).collect()
@@ -1230,7 +1192,7 @@ class SearchEngine:
                 full_terms.update(qterms)
         by_term = self._collect_block_meta(pruned) if (bmw_q or cand_q) else None
         if by_term is None:
-            # legacy/split-row layout (or no member wants driver masks):
+            # split-row terms (or no member wants driver masks):
             # max-fold members degrade to the executor greedy, conjunctive
             # members to full decode
             for _, qterms, _qdf in bmw_q:
@@ -1346,16 +1308,10 @@ class SearchEngine:
         [first_i, last_i] intersects the candidate set, and decoded rows
         outside the set are dropped — exact, because every true match is a
         candidate."""
-        cols = [
-            "term", "ids", "tfs", "dls",
-            "block_firsts", "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
-        ]
-        # block_lasts: per-block id upper bounds (r2 schema). Legacy indexes
-        # without it decode all blocks; the row filter keeps exactness.
-        has_lasts = "block_lasts" in pruned.columns
-        if has_lasts:
-            cols.append("block_lasts")
-        src = pruned.select(*cols)
+        src = pruned.select(
+            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+        )
         k1, b, avgdl = BM25_K1, BM25_B, self.avgdl
 
         def decode_map(batches):
@@ -1373,7 +1329,7 @@ class SearchEngine:
                             keep = g if keep is None else (keep | g)
                         if keep is not None and keep.all():
                             keep = None  # full decode, skip the gather path
-                    elif cand is not None and has_lasts:
+                    elif cand is not None:
                         keep = _select_blocks_intersect(r, cand)
                     ids, tfs, dls = decode_postings(
                         r.ids, r.tfs, r.dls, r.block_firsts, r.block_lens,

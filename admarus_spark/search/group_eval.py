@@ -99,13 +99,11 @@ def select_blocks_topk(
     nb = bmax.size
     keep = np.zeros(nb, dtype=bool)
     ranged = id_lo is not None
-    range_keep = None
-    if ranged:
-        range_keep = select_blocks_range(r, id_lo, id_hi)
+    range_keep = select_blocks_range(r, id_lo, id_hi) if ranged else None
     order = np.argsort(-bmax, kind="stable")
     best = np.empty(0, dtype=np.float64)
     for blk in order:
-        if range_keep is not None and not range_keep[blk]:
+        if ranged and not range_keep[blk]:
             continue
         if best.size >= k and bmax[blk] < best[best.size - k]:
             break
@@ -126,14 +124,10 @@ def select_blocks_topk(
     return keep
 
 
-def select_blocks_range(r, id_lo: int, id_hi: int) -> np.ndarray | None:
+def select_blocks_range(r, id_lo: int, id_hi: int) -> np.ndarray:
     """Keep mask for a shard's doc-id range [id_lo, id_hi): block i spans
     the closed id interval [first_i, last_i]; keep it iff that interval
-    intersects the range. Returns None on the legacy layout (no stored
-    ``block_lasts``) — the caller then decodes all blocks and relies on the
-    post-decode id clip, which is correct but unpruned."""
-    if not hasattr(r, "block_lasts") or r.block_lasts is None:
-        return None
+    intersects the range."""
     firsts = np.asarray(r.block_firsts, dtype=np.int64)
     lasts = np.asarray(r.block_lasts, dtype=np.int64)
     return (lasts >= id_lo) & (firsts < id_hi)
@@ -365,21 +359,16 @@ def evaluate_group(
         masks: list[np.ndarray | None] = []
         for r in trows:
             m: np.ndarray | None = None
-            full = False
             if t in greedy:
                 m = select_blocks_topk(r, k, k1, b, avgdl, id_lo, id_hi)
             for i, (qid, q, kind, _src) in enumerate(plans):
                 if kind not in ("conj", "nofm") or t not in q.terms():
                     continue
-                if not hasattr(r, "block_lasts") or r.block_lasts is None:
-                    full = True  # legacy layout: no id bounds -> full decode
-                    break
                 mi = select_blocks_intersect(r, member_cand[i])
                 m = mi if m is None else (m | mi)
-            if full or m is None:
-                # no query-driven mask: decode the shard range (None on an
-                # unsharded group or the legacy layout = all blocks; the
-                # post-decode clip keeps legacy correct)
+            if m is None:
+                # no query-driven mask: decode the shard range (all blocks
+                # on an unsharded group)
                 m = select_blocks_range(r, id_lo, id_hi) if ranged else None
             masks.append(m)
         decoded[t] = _decode_term(trows, masks, id_lo, id_hi)

@@ -10,6 +10,7 @@ from pyspark.sql import SparkSession
 # the former fixed default.
 MAX_DRIVER_HEAP_MB = 24 << 10
 MIN_DRIVER_HEAP_MB = 1 << 10
+JVM_LOCALE_OPTS = "-Duser.language=en -Duser.country=US"
 
 
 def local_cpus() -> str:
@@ -148,16 +149,18 @@ def get_spark(
         .config("spark.driver.memory", heap)
         .config("spark.driver.maxResultSize", "4g")
     )
-    if pin_heap:
-        # Pin -Xms to -Xmx and pre-touch at startup: Spark only sets -Xmx,
-        # so the heap grows mid-run and every G1 expansion commits+zeroes
-        # GBs inside stop-the-world pauses (observed as 20s+ stalls at 95%
-        # system time). One-time startup pretouch instead — only for a heap
-        # the host can hold (a 24g pre-touch on a 15 GB host killed the JVM
-        # at launch).
-        b = b.config(
-            "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
-        )
+    # Pin -Xms to -Xmx and pre-touch at startup: Spark only sets -Xmx, so
+    # the heap grows mid-run and every G1 expansion commits+zeroes GBs
+    # inside stop-the-world pauses (observed as 20s+ stalls at 95% system
+    # time). One-time startup pretouch instead — only for a heap the host
+    # can hold (a 24g pre-touch on a 15 GB host killed the JVM at launch).
+    # Every JVM runs in the en_US locale: Spark's lower() (tokenize_expr)
+    # folds non-ASCII case by the JVM default locale, and a tr/az default
+    # would split tokens from the Python/DuckDB tokenizers.
+    pinned = f"-Xms{heap} -XX:+AlwaysPreTouch " if pin_heap else ""
+    b = b.config(
+        "spark.driver.extraJavaOptions", pinned + JVM_LOCALE_OPTS
+    ).config("spark.executor.extraJavaOptions", JVM_LOCALE_OPTS)
     # Worker daemon that pre-imports the heavy stack (daemon_prewarm.py) so
     # cold forks skip the ~1s pandas/numpy/pyarrow import. The daemon
     # process starts BEFORE any task, so it can only import admarus_spark

@@ -63,8 +63,10 @@ from ..index.build import (
     IndexBuilder,
     IndexPaths,
     _tokenize_tf_map,
+    check_layout,
     heal_swap as _heal_swap,
     max_tuple_dedup as _max_tuple_dedup,
+    sort_encode_runs,
     swap_dir as _swap_dir,
     terms_bloom_of as _terms_bloom_of,
     write_swap as _write_swap,
@@ -124,6 +126,16 @@ class IncrementalIndexer:
         _heal_swap(paths.stats)
         _heal_swap(paths.summaries)
         t0 = time.time()
+        # layout check BEFORE any write; the stored meta bloom is read here
+        # too (summaries stay untouched until the swap at the end)
+        stored_summ = spark.read.parquet(paths.summaries)
+        rollup = {
+            r["kind"]: np.frombuffer(r["filter"], dtype=np.uint8)
+            for r in stored_summ.filter(F.col("kind").isin("meta", "global")).collect()
+        }
+        n_buckets = check_layout(
+            self.index_dir, spark.read.parquet(paths.postings), rollup
+        )
         stats = spark.read.parquet(paths.stats).collect()[0]
         dd = spark.read.parquet(paths.doc_dict)
         max_id = dd.agg(F.max("doc_id")).collect()[0][0]
@@ -273,7 +285,7 @@ class IncrementalIndexer:
                 .parquet(tomb_path)
             )
 
-        from ..index.build import MARKER_TERM, TF_SCHEMA, unpack_meta
+        from ..index.build import MARKER_TERM, TF_SCHEMA
 
         # persisted: tokenizing the delta is the dominant per-update cost and
         # tf_all has TWO consumers with separate materializations (new_posts
@@ -287,32 +299,11 @@ class IncrementalIndexer:
         tf = tf_all.filter(F.col("term") != MARKER_TERM)
         bm_avgdl = float(stats["bm_avgdl"]) if "bm_avgdl" in stats.__fields__ else float(stats["avgdl"])
         block_size = self.block_size
-        old = spark.read.parquet(paths.postings)
-        if "block_lasts" not in old.columns:
-            # fail FAST on legacy pre-r2 indexes (no per-block id bounds):
-            # the merge below reads block_lasts unconditionally, and dying
-            # mid-write would corrupt the bucket partitions (ADVICE r2)
-            raise ValueError(
-                "legacy index without block_lasts metadata: incremental "
-                "update unsupported — run a full rebuild first"
-            )
-        # the routing modulus comes from the persisted stage2 metrics — NEVER
-        # from max(occupied tb)+1, which under-counts when the highest bucket
-        # happens to hold zero terms (and would write the same term under a
-        # second tb, splitting its postings)
-        from ..index import checkpoint as ckpt
-
-        n_b = ckpt.read_metrics(self.index_dir, "stage2_postings").get("n_buckets")
-        if n_b is not None:
-            n_buckets = int(n_b)
-        else:  # legacy pre-r2 index: occupancy inference
-            n_buckets = int(old.agg(F.max("tb")).collect()[0][0] or 0) + 1
-
         # encode the delta's postings with ONE whole-partition pass per
-        # term-bucket group (the pandas twin of the full build's
-        # encode_bucket_arrow) — a per-TERM applyInPandas would pay Spark/
-        # Arrow group overhead x |delta vocabulary| (the anti-pattern the r3
-        # batched codec removed from the full build)
+        # term-bucket group (the kernel of the full build's stage 2) — a
+        # per-TERM applyInPandas would pay Spark/Arrow group overhead x
+        # |delta vocabulary| (the anti-pattern the r3 batched codec removed
+        # from the full build)
         def encode_delta(batches):
             pdfs = list(batches)
             if not pdfs:
@@ -324,22 +315,14 @@ class IncrementalIndexer:
             meta = np.concatenate([p["meta"].to_numpy(np.int64) for p in pdfs])
             tbs = np.concatenate([p["tb"].to_numpy(np.int64) for p in pdfs])
             codes, uniq = pd.factorize(terms_col, sort=False)
-            nuq = len(uniq)
-            if nuq < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
-                order = np.argsort((codes.astype(np.int64) << 41) | ids)
-            else:
-                order = np.lexsort((ids, codes))
-            codes_s, ids_s = codes[order], ids[order]
-            tfs_s, dls_s = unpack_meta(meta[order])
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(codes_s)) + 1))
-            from ..index.codec import encode_postings_many
-
-            cols = encode_postings_many(
-                ids_s, tfs_s, dls_s, starts, block_size, avgdl=bm_avgdl
+            codes = codes.astype(np.int64)
+            order, starts, cols = sort_encode_runs(
+                codes, ids, meta, block_size, bm_avgdl
             )
+            run = order[starts]
             yield pd.DataFrame(
                 {
-                    "term": np.asarray(uniq, dtype=object)[codes_s[starts]],
+                    "term": np.asarray(uniq, dtype=object)[codes[run]],
                     "df": cols["df"],
                     "ids": cols["ids"],
                     "tfs": cols["tfs"],
@@ -351,7 +334,7 @@ class IncrementalIndexer:
                     "tfs_offs": cols["tfs_offs"],
                     "dls_offs": cols["dls_offs"],
                     "block_max": cols["block_max"],
-                    "tb": tbs[order][starts].astype(np.int32),
+                    "tb": tbs[run].astype(np.int32),
                 }
             )
 
@@ -516,7 +499,6 @@ class IncrementalIndexer:
         # they recompute). The former recompute scanned the term column of
         # every affected bucket — O(index vocabulary) per update once a
         # realistic delta touches all buckets.
-        stored_summ = spark.read.parquet(paths.summaries)
         old_aff = {
             int(r["tb"]): np.frombuffer(r["filter"], dtype=np.uint8)
             for r in stored_summ.filter(
@@ -551,11 +533,7 @@ class IncrementalIndexer:
             *[c for c in ("lang", "repo") if c in with_ids.columns]
         )
         delta_bytes, _ = meta_bloom_bytes(delta_dd)
-        old_meta = stored_summ.filter(F.col("kind") == "meta").collect()
-        meta_acc = np.frombuffer(delta_bytes, dtype=np.uint8).copy()
-        for r in old_meta:
-            meta_acc |= np.frombuffer(r["filter"], dtype=np.uint8)
-        meta_bytes = meta_acc.tobytes()
+        meta_bytes = (np.frombuffer(delta_bytes, dtype=np.uint8) | rollup["meta"]).tobytes()
         summ = terms_all.unionByName(bloom_rollup_rows(spark, terms_all, meta_bytes))
         _write_swap(summ, paths.summaries)
         terms_all.unpersist()
@@ -661,6 +639,15 @@ class IncrementalIndexer:
             shutil.rmtree(tomb_path, ignore_errors=True)
             return {"dead": 0, "noop": True, "seconds": time.time() - t0}
 
+        post = spark.read.parquet(paths.postings)
+        rollup_kinds = {
+            r["kind"]
+            for r in spark.read.parquet(paths.summaries)
+            .filter(F.col("kind").isin("meta", "global"))
+            .select("kind")
+            .collect()
+        }
+        n_buckets = check_layout(self.index_dir, post, rollup_kinds)
         stats = spark.read.parquet(paths.stats).collect()[0]
         dd = spark.read.parquet(paths.doc_dict)
         # orphan detection, same rule as update(): marker lines record each
@@ -794,11 +781,6 @@ class IncrementalIndexer:
                 }
             )
 
-        post = spark.read.parquet(paths.postings)
-        if "block_lasts" not in post.columns:
-            raise ValueError(
-                "legacy index without block_lasts metadata: run a full rebuild"
-            )
         multi_bc = None
         if has_gens:
             # append updates leave a term's generations in SEPARATE files,
@@ -821,9 +803,8 @@ class IncrementalIndexer:
             ).persist()
             n_multi = multi_terms.count()
             multi_cap = int(os.environ.get("SPARK_GRAFT_COMPACT_MULTI_CAP", "2000000"))
-            n_b = int(post.agg(F.max("tb")).collect()[0][0] or 0) + 1
             parallelism = spark.sparkContext.defaultParallelism
-            n_parts = max(1, min(max(parallelism, 1) * 2, n_b))
+            n_parts = max(1, min(max(parallelism, 1) * 2, n_buckets))
             if n_multi == 0:
                 multi_terms.unpersist()
                 new_post = post.mapInPandas(

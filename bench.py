@@ -75,7 +75,7 @@ def main() -> None:
         idx_dir = f"/tmp/admarus_bench_idx_{os.getpid()}_{rnd}"
         shutil.rmtree(idx_dir, ignore_errors=True)
         t0 = time.time()
-        IndexBuilder(spark, idx_dir, n_buckets=32, salt_chunks=8).build(
+        IndexBuilder(spark, idx_dir, n_buckets=32).build(
             docs, input_token=f"bench:{SF_DIR}:{time.time()}", resume=False
         )
         times["index_build"] = time.time() - t0

@@ -3,7 +3,7 @@
 
     spark-submit --py-files admarus_spark.zip jobs/build_index.py \
         --docs /data/docs_parquet --index /data/index \
-        [--buckets 512] [--salt-chunks 64] [--token v1]
+        [--buckets 512] [--token v1]
 
 Package the library with:  python jobs/package.py  (writes admarus_spark.zip)
 
@@ -23,8 +23,6 @@ def main() -> None:
     ap.add_argument("--docs", required=True, help="input docs parquet/table path")
     ap.add_argument("--index", required=True, help="output index directory")
     ap.add_argument("--buckets", type=int, default=32)
-    ap.add_argument("--salt-chunks", type=int, default=8)
-    ap.add_argument("--hot-df-threshold", type=int, default=None)
     ap.add_argument("--token", default="default", help="input snapshot token (resume key)")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
@@ -34,13 +32,7 @@ def main() -> None:
 
     spark = get_spark(app_name="admarus-build")
     docs = spark.read.parquet(args.docs)
-    b = IndexBuilder(
-        spark,
-        args.index,
-        n_buckets=args.buckets,
-        salt_chunks=args.salt_chunks,
-        hot_df_threshold=args.hot_df_threshold,
-    )
+    b = IndexBuilder(spark, args.index, n_buckets=args.buckets)
     b.build(docs, input_token=args.token, resume=not args.no_resume)
     print(json.dumps(b.metrics, default=str))
 

@@ -87,14 +87,14 @@ def worker(cpus: int) -> None:
     docs = spark.read.parquet(CORPUS_PARQUET)
     widx = f"/tmp/admarus_scale_warm_{cpus}"
     shutil.rmtree(widx, ignore_errors=True)
-    IndexBuilder(spark, widx, n_buckets=8, salt_chunks=2).build(
+    IndexBuilder(spark, widx, n_buckets=8).build(
         docs.limit(1000), input_token=f"warm:{cpus}:{time.time()}", resume=False
     )
     shutil.rmtree(widx, ignore_errors=True)
     idx = f"/tmp/admarus_scale_idx_{cpus}"
     shutil.rmtree(idx, ignore_errors=True)
     t0 = time.time()
-    b = IndexBuilder(spark, idx, n_buckets=32, salt_chunks=8)
+    b = IndexBuilder(spark, idx, n_buckets=32)
     b.build(docs, input_token=f"scale:{cpus}:{time.time()}", resume=False)
     build_sec = time.time() - t0
     if os.environ.get("SPARK_GRAFT_SCALE_SKIP_QUERY"):

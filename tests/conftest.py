@@ -39,7 +39,7 @@ def docs_oracle(docs_pdf):
 def movies_engine(spark, movies_pdf, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_movies"))
     shutil.rmtree(d, ignore_errors=True)
-    IndexBuilder(spark, d, n_buckets=8, salt_chunks=4).build(
+    IndexBuilder(spark, d, n_buckets=8).build(
         spark.createDataFrame(movies_pdf), input_token="movies"
     )
     return SearchEngine(spark, d)
@@ -48,9 +48,9 @@ def movies_engine(spark, movies_pdf, tmp_path_factory):
 @pytest.fixture(scope="session")
 def docs_engine(spark, docs_pdf, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx_docs"))
-    # hot_df_threshold=100 forces the salted two-phase path for the skew
-    # fixture term ('license', df ~ n_docs)
-    IndexBuilder(spark, d, n_buckets=16, salt_chunks=8, hot_df_threshold=100).build(
+    # the default build (shuffle-encode); 'license' is the skew fixture
+    # term (df ~ n_docs)
+    IndexBuilder(spark, d, n_buckets=16).build(
         spark.createDataFrame(docs_pdf), input_token="docs"
     )
     return SearchEngine(spark, d)

@@ -50,7 +50,7 @@ def test_postings_roundtrip_and_merge(n, base, rnd):
     mask = np.repeat(keep, np.asarray(enc["block_lens"]))
     assert np.array_equal(i3, ids[mask]) and np.array_equal(t3, tfs[mask]) and np.array_equal(d3, dls[mask])
 
-    # salted-chunk merge == whole-list encode (decoded equality)
+    # partial-chunk merge == whole-list encode (decoded equality)
     if n > 4:
         cut = sorted(rng.choice(np.arange(1, n), size=min(3, n - 1), replace=False))
         parts = np.split(np.arange(n), cut)

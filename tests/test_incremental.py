@@ -21,7 +21,7 @@ def inc_setup(spark, tmp_path_factory):
     extra = make_docs_corpus(200, seed=99)
     extra["path"] = extra["path"].str.replace("src/", "extra/", regex=False)
     d = str(tmp_path_factory.mktemp("idx_inc"))
-    IndexBuilder(spark, d, n_buckets=8, salt_chunks=4).build(
+    IndexBuilder(spark, d, n_buckets=8).build(
         spark.createDataFrame(base), input_token="inc-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -92,7 +92,7 @@ def test_compaction_restores_wand_df_and_results(spark, tmp_path):
 
     base = make_docs_corpus(200, seed=3)
     d = str(tmp_path / "idx_compact")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="cp-base"
     )
     changed = base.iloc[10:40].copy()
@@ -117,7 +117,7 @@ def test_compaction_restores_wand_df_and_results(spark, tmp_path):
     final = base.copy()
     final.iloc[10:40] = changed
     d2 = str(tmp_path / "idx_fresh")
-    IndexBuilder(spark, d2, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d2, n_buckets=4).build(
         spark.createDataFrame(final), input_token="cp-fresh"
     )
     fresh = SearchEngine(spark, d2)
@@ -150,7 +150,7 @@ def test_auto_compaction_triggers(spark, tmp_path):
 
     base = make_docs_corpus(100, seed=21)
     d = str(tmp_path / "idx_auto")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="ac-base"
     )
     changed = base.iloc[:20].copy()
@@ -176,7 +176,7 @@ def test_partitioned_delta_ids_match_broadcast_path(spark, tmp_path):
     dicts = {}
     for mode, thresh in (("bcast", 10**6), ("ranged", 0)):
         d = str(tmp_path / f"idx_{mode}")
-        IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+        IndexBuilder(spark, d, n_buckets=4).build(
             spark.createDataFrame(base), input_token=f"ids-{mode}"
         )
         inc = IncrementalIndexer(spark, d, broadcast_delta_max=thresh)
@@ -199,7 +199,7 @@ def test_changed_content_reindexed(spark, tmp_path):
     out of results, and stats move to the new content."""
     base = make_docs_corpus(120, seed=7)
     d = str(tmp_path / "idx_upsert")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="up-base"
     )
     n0 = SearchEngine(spark, d).n_docs
@@ -238,7 +238,7 @@ def test_engine_refresh_sees_external_update(spark, tmp_path):
     cache, tombstone view, blooms all re-synced)."""
     base = make_docs_corpus(100, seed=5)
     d = str(tmp_path / "idx_refresh")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="rf-base"
     )
     eng = SearchEngine(spark, d)
@@ -270,7 +270,7 @@ def test_running_stats_equal_live_aggregate(spark, tmp_path):
 
     base = make_docs_corpus(120, seed=3)
     d = str(tmp_path / "idx_runstats")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="rs-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -327,7 +327,7 @@ def test_zero_token_delta_is_safe(spark, tmp_path):
 
     base = make_docs_corpus(60, seed=7)
     d = str(tmp_path / "idx_zero")
-    IndexBuilder(spark, d, n_buckets=8, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=8).build(
         spark.createDataFrame(base), input_token="zero-base"
     )
     eng0 = SearchEngine(spark, d)
@@ -370,7 +370,7 @@ def test_update_appends_without_rewriting_buckets(spark, tmp_path):
 
     base = make_docs_corpus(200, seed=11)
     d = str(tmp_path / "idx_app")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="app-base"
     )
 
@@ -407,7 +407,7 @@ def test_multi_generation_search_parity(spark, tmp_path):
     g3 = make_docs_corpus(40, seed=7)
     g3["path"] = "gen3/" + g3["path"]
     d = str(tmp_path / "idx_gens")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="g-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -461,7 +461,7 @@ def test_compact_folds_generations_without_tombstones(spark, tmp_path):
     g2 = make_docs_corpus(60, seed=9)
     g2["path"] = "gen2/" + g2["path"]
     d = str(tmp_path / "idx_fold")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="f-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -478,7 +478,7 @@ def test_compact_folds_generations_without_tombstones(spark, tmp_path):
 
     union = pd.concat([base, g2], ignore_index=True)
     d2 = str(tmp_path / "idx_fold_fresh")
-    IndexBuilder(spark, d2, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d2, n_buckets=4).build(
         spark.createDataFrame(union), input_token="f-fresh"
     )
     df_c = {
@@ -507,7 +507,7 @@ def test_auto_compaction_on_pending_generations(spark, tmp_path):
 
     base = make_docs_corpus(100, seed=31)
     d = str(tmp_path / "idx_gauto")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="ga-base"
     )
     inc = IncrementalIndexer(spark, d, auto_compact_frac=0.5, auto_compact_gens=2)
@@ -550,7 +550,7 @@ def test_crashed_update_rerun_never_duplicates(spark, tmp_path):
 
     base = make_docs_corpus(120, seed=41)
     dA = str(tmp_path / "idx_crash_base")
-    IndexBuilder(spark, dA, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, dA, n_buckets=4).build(
         spark.createDataFrame(base), input_token="cr-base"
     )
 
@@ -632,7 +632,7 @@ def test_tombstoned_search_is_float_exact_precompact(spark, tmp_path):
 
     base = make_docs_corpus(140, seed=51)
     d = str(tmp_path / "idx_tomb_exact")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="te-base"
     )
     changed = base.iloc[:50].copy()  # heavy churn: stale df would flip idf
@@ -677,7 +677,7 @@ def test_tombstone_only_crash_heals_stats(spark, tmp_path):
 
     base = make_docs_corpus(100, seed=61)
     d = str(tmp_path / "idx_tombcrash")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="tc-base"
     )
     # simulate the dead run's only surviving artifact: tombstones for the
@@ -743,7 +743,7 @@ def test_crash_before_docdict_append_rerun_heals(spark, tmp_path):
 
     base = make_docs_corpus(110, seed=71)
     dA = str(tmp_path / "idx_ddcrash_base")
-    IndexBuilder(spark, dA, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, dA, n_buckets=4).build(
         spark.createDataFrame(base), input_token="ddc-base"
     )
     changed = base.iloc[:20].copy()
@@ -815,7 +815,7 @@ def test_compact_folds_generations_across_arrow_batches(spark, tmp_path):
     g3 = make_docs_corpus(50, seed=83)
     g3["path"] = "gen3/" + g3["path"]
     d = str(tmp_path / "idx_foldbatch")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="fb-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -857,7 +857,7 @@ def test_compact_over_cap_takes_whole_table_exchange(spark, tmp_path, monkeypatc
     g2 = make_docs_corpus(50, seed=92)
     g2["path"] = "gen2/" + g2["path"]
     d = str(tmp_path / "idx_capfold")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="cap-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -898,7 +898,7 @@ def test_update_dedups_within_delta(spark, tmp_path):
 
     base = make_docs_corpus(60, seed=71)
     d = str(tmp_path / "idx_dupdelta")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="dup-base"
     )
     extra = make_docs_corpus(4, seed=72).reset_index(drop=True)
@@ -952,7 +952,7 @@ def test_heal_swap_recovers_interrupted_compaction(spark, tmp_path):
     g2 = make_docs_corpus(30, seed=82)
     g2["path"] = "g2/" + g2["path"]
     d = str(tmp_path / "idx_heal")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="heal-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -990,7 +990,7 @@ def test_heal_swap_recovers_summaries_and_stats(spark, tmp_path):
 
     base = make_docs_corpus(80, seed=83)
     d = str(tmp_path / "idx_heal_ss")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="heal-ss-base"
     )
     summ, stats = f"{d}/summaries", f"{d}/stats"
@@ -1030,7 +1030,7 @@ def test_torn_marker_tail_healed_on_next_update(spark, tmp_path):
 
     base = make_docs_corpus(60, seed=91)
     d = str(tmp_path / "idx_torn")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="torn-base"
     )
     inc = IncrementalIndexer(spark, d)
@@ -1068,7 +1068,7 @@ def test_all_invalid_delta_still_reports_invalid_count(spark, tmp_path):
     that is exactly the case a caller monitoring the metric exists for."""
     base = make_docs_corpus(40, seed=95)
     d = str(tmp_path / "idx_allbad")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="allbad-base"
     )
     bad = make_docs_corpus(5, seed=96)
@@ -1088,7 +1088,7 @@ def test_engine_init_heals_interrupted_swap(spark, tmp_path):
 
     base = make_docs_corpus(60, seed=97)
     d = str(tmp_path / "idx_roheal")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(base), input_token="roheal-base"
     )
     os.rename(f"{d}/stats", f"{d}/stats_next")
@@ -1114,7 +1114,7 @@ def test_shard_ranges_cover_sparse_live_ids(spark, tmp_path, monkeypatch):
     (r5 review)."""
     base = make_docs_corpus(100, seed=85)
     d = str(tmp_path / "idx_sparse")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(base), input_token="sparse-base"
     )
     changed = base.drop(columns=["content_sha256"]).copy()

@@ -134,7 +134,7 @@ def test_jobs_cli_end_to_end(cli):
     metrics = _submit(
         zip_path, "build_index.py",
         "--docs", docs_pq, "--index", idx,
-        "--buckets", "4", "--salt-chunks", "2", "--token", "cli-1",
+        "--buckets", "4", "--token", "cli-1",
         cwd=tmp,
     )[-1]
     assert set(metrics) == {"stage1_tokenize", "stage2_postings", "stage3_summaries"}
@@ -145,7 +145,7 @@ def test_jobs_cli_end_to_end(cli):
     metrics2 = _submit(
         zip_path, "build_index.py",
         "--docs", docs_pq, "--index", idx,
-        "--buckets", "4", "--salt-chunks", "2", "--token", "cli-1",
+        "--buckets", "4", "--token", "cli-1",
         cwd=tmp,
     )[-1]
     assert metrics2 == metrics

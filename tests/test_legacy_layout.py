@@ -1,10 +1,9 @@
-"""Pre-r2 index layouts (no per-block ``block_lasts`` id bounds) must still
-answer every query shape exactly — the engine's pruning layers each fall
-back (decode-all-blocks, no conjunctive id bounds, no driver BMW masks)
-rather than referencing the missing column (r5 review #2: _collect_block_meta
-selected block_lasts unconditionally and raised AnalysisException on any
-multi-term max-fold query against a legacy index)."""
+"""Only the layout today's build writes (lineage schema 5) is readable: an
+older index must be rebuilt. One layout check (``index.build.check_layout``)
+guards SearchEngine init, update() and compact(), and its error names the
+missing piece before anything is read through it or written to it."""
 
+import os
 import shutil
 
 import pytest
@@ -12,56 +11,48 @@ from pyspark.sql import functions as F
 
 from admarus_spark.corpus import make_docs_corpus
 from admarus_spark.index.build import IndexBuilder
-from admarus_spark.oracle import OracleIndex
 from admarus_spark.search.engine import SearchEngine
-
-QUERIES = [
-    "license",
-    "parser lexer bloom",          # max fold -> BMW mask path when wand auto
-    "parser AND lexer",            # conjunctive id-bounds path
-    "2(parser, lexer, bloom)",     # n-of-m pigeonhole path
-    "parser AND NOT bloom",
-]
+from admarus_spark.streaming.incremental import IncrementalIndexer
 
 
-@pytest.fixture(scope="module")
-def legacy_idx(spark, tmp_path_factory):
-    docs = make_docs_corpus(150, seed=33)
-    d = str(tmp_path_factory.mktemp("idx_legacy_post"))
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+def _rewrite(spark, d, table, transform, partition_by=None):
+    df = transform(spark.read.parquet(f"{d}/{table}"))
+    w = df.coalesce(1).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(f"{d}/{table}_stripped")
+    shutil.rmtree(f"{d}/{table}")
+    shutil.move(f"{d}/{table}_stripped", f"{d}/{table}")
+
+
+def test_legacy_layout_requires_rebuild(spark, tmp_path):
+    docs = make_docs_corpus(60, seed=33)
+    base = str(tmp_path / "idx_current")
+    IndexBuilder(spark, base, n_buckets=4).build(
         spark.createDataFrame(docs), input_token="legacy"
     )
-    # strip the r2 column the way a pre-r2 index simply never had it
-    post = spark.read.parquet(f"{d}/postings").drop("block_lasts")
-    nxt = f"{d}/postings_legacy"
-    post.write.mode("overwrite").partitionBy("tb").parquet(nxt)
-    shutil.rmtree(f"{d}/postings")
-    shutil.move(nxt, f"{d}/postings")
-    return d, docs
-
-
-def test_legacy_index_queries_are_exact(spark, legacy_idx):
-    d, docs = legacy_idx
-    eng = SearchEngine(spark, d)
-    assert eng.wand_safe is True  # stats carry bm_avgdl: BMW WOULD be tried
-    oracle = OracleIndex(docs)
-    opaths = {i: p for i, p in enumerate(oracle.docs["path"])}
-    for q in QUERIES:
-        got = sorted((r["path"], r["score"]) for r in eng.search(q, 10**6).collect())
-        want = sorted((opaths[i], s) for i, s in oracle.search(q, 10**6))
-        assert got == want, q
-
-
-def test_legacy_index_batched_queries_are_exact(spark, legacy_idx):
-    d, docs = legacy_idx
-    eng = SearchEngine(spark, d)
-    oracle = OracleIndex(docs)
-    opaths = {i: p for i, p in enumerate(oracle.docs["path"])}
-    qmap = {f"q{i}": q for i, q in enumerate(QUERIES)}
-    rows = eng.search_many(qmap, k=10).collect()
-    for i, q in enumerate(QUERIES):
-        got = sorted(
-            (r["path"], r["score"]) for r in rows if r["query_id"] == f"q{i}"
-        )
-        want = sorted((opaths[di], s) for di, s in oracle.search(q, 10))
-        assert got == want, q
+    SearchEngine(spark, base)  # the current layout opens
+    strips = {
+        # pre-r2: no per-block id upper bounds
+        "postings column block_lasts": lambda d: _rewrite(
+            spark, d, "postings", lambda p: p.drop("block_lasts"), "tb"
+        ),
+        # pre-r3: no global term-bloom rollup row
+        "summaries row kind='global'": lambda d: _rewrite(
+            spark, d, "summaries", lambda s: s.filter(F.col("kind") != "global")
+        ),
+    }
+    delta = spark.createDataFrame(make_docs_corpus(5, seed=34))
+    for i, (missing, strip) in enumerate(strips.items()):
+        d = str(tmp_path / f"idx_legacy{i}")
+        shutil.copytree(base, d)
+        strip(d)
+        with pytest.raises(ValueError, match="rebuild the index") as e:
+            SearchEngine(spark, d)
+        assert missing in str(e.value)
+        with pytest.raises(ValueError, match="rebuild the index") as e:
+            IncrementalIndexer(spark, d).update(delta, input_token="legacy-delta")
+        assert missing in str(e.value)
+        # the check runs before update() writes anything
+        assert not os.path.exists(f"{d}/generations")
+        assert not os.path.exists(f"{d}/tombstones")

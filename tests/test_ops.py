@@ -302,3 +302,32 @@ def test_windows_delta_empty_events(spark, tmp_path):
     out = ev.windows_delta(spark, d)
     assert out.count() == 0
     assert "delta_n" in out.columns
+
+
+def test_read_wide_memo_follows_rewrite(spark, tmp_path):
+    """The narrow/wide scan decision is memoized per path AND file layout: a
+    path rewritten from one row group to many files gets a fresh probe
+    instead of the stale 'narrow' answer."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from admarus_spark.ops._scan import read_wide
+
+    n = spark.sparkContext.defaultParallelism
+    path = tmp_path / "rewritten.parquet"
+    tbl = pa.table({"x": list(range(64 * n))})
+
+    def widened() -> bool:
+        plan = read_wide(spark, str(path))._jdf.queryExecution().logical().toString()
+        return "Repartition" in plan
+
+    path.mkdir()
+    pq.write_table(tbl, path / "part-00000.parquet")  # one row group
+    assert widened()
+    shutil.rmtree(path)
+    path.mkdir()
+    for i in range(2 * n):
+        pq.write_table(tbl.slice(32 * i, 32), path / f"part-{i:05d}.parquet")
+    assert not widened()

@@ -1,12 +1,14 @@
-"""Pure-python unit coverage for the session factory's sizing logic
-(shuffle partitions, driver heap, local cores) and the contract file's
-single-source parity constants (no Spark session)."""
+"""Unit coverage for the session factory's sizing logic (shuffle
+partitions, driver heap, local cores), its JVM options, and the contract
+file's single-source parity constants (only the JVM-option test uses the
+live session)."""
 
 from __future__ import annotations
 
 import os
 
 from admarus_spark.session import (
+    JVM_LOCALE_OPTS,
     _local_shuffle_partitions,
     _memory_limit_bytes,
     driver_heap,
@@ -80,3 +82,20 @@ def test_entry_contract_single_sources_parity_constants():
     assert entry.B == admarus_spark.BM25_B
     assert entry._TOK_EXPR == DUCKDB_TOKENS_EXPR.format(col="text")
     assert DUCKDB_TOKENS_EXPR.format(col="text") in entry._TOK_CTES
+
+
+def test_jvm_locale_pinned(spark):
+    """Driver and executor JVMs run in en_US whatever the host locale, so
+    Spark's lower() (tokenize_expr) folds non-ASCII case like Python; a
+    pinned heap keeps exactly its -Xms/AlwaysPreTouch flags."""
+    # Spark prepends its own module flags to both options at startup
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.executor.extraJavaOptions").endswith(" " + JVM_LOCALE_OPTS)
+    driver_opts = conf.get("spark.driver.extraJavaOptions")
+    assert driver_opts.endswith(" " + JVM_LOCALE_OPTS)
+    if "-Xms" in driver_opts:
+        heap = conf.get("spark.driver.memory")
+        assert driver_opts.endswith(f" -Xms{heap} -XX:+AlwaysPreTouch {JVM_LOCALE_OPTS}")
+    assert spark._jvm.java.util.Locale.getDefault().toString() == "en_US"
+    word = "\u0130STANBUL"  # dotted capital I: lowers differently under tr
+    assert spark.sql(f"SELECT lower('{word}') AS w").first()["w"] == word.lower()

@@ -18,7 +18,7 @@ DOCS_SCHEMA = "repo string, path string, commit string, lang string, content str
 def test_streaming_ingest(spark, tmp_path):
     base = make_docs_corpus(150, seed=1)
     idx = str(tmp_path / "idx_stream")
-    IndexBuilder(spark, idx, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, idx, n_buckets=4).build(
         spark.createDataFrame(base), input_token="stream-base"
     )
 
