@@ -86,6 +86,54 @@ def test_partition_count_invariance(spark, docs_pdf, docs_oracle, tmp_path):
     run_parity(eng, docs_oracle, ["license", "license AND parser", "2(parser, lexer, bloom)"])
 
 
+def test_tid_dict_parity_with_string_path(spark, docs_pdf, docs_oracle, tmp_path, monkeypatch):
+    """The tid-dictionary shuffle-encode (default) and the plan a vocabulary
+    above SPARK_GRAFT_S2_MAX_DICT_TERMS takes instead — local-merge, which
+    keeps string term keys and needs no dictionary; the string shuffle-encode
+    it replaces is gone — must produce the SAME postings (every term with its
+    df, bucket and decoded (doc id, tf, dl) entries, every block's id bounds
+    tight) and identical query results. Block boundaries may differ:
+    local-merge concatenates one encoded chunk per tf partition. Forces the
+    fallback by zeroing the dictionary-size gate."""
+    import numpy as np
+
+    from admarus_spark.index.codec import decode_postings
+
+    d1 = str(tmp_path / "idx_tid")
+    b1 = IndexBuilder(spark, d1, n_buckets=8)
+    b1.build(spark.createDataFrame(docs_pdf), input_token="tid")
+    assert b1.metrics["stage2_postings"]["strategy"] == "shuffle-encode"
+
+    monkeypatch.setenv("SPARK_GRAFT_S2_MAX_DICT_TERMS", "0")
+    d2 = str(tmp_path / "idx_str")
+    b2 = IndexBuilder(spark, d2, n_buckets=8)
+    b2.build(spark.createDataFrame(docs_pdf), input_token="str")
+    assert b2.metrics["stage2_postings"]["strategy"] == "local-merge"
+
+    def snapshot(d):
+        out = []
+        for r in spark.read.parquet(d + "/postings").collect():
+            ids, tfs, dls = decode_postings(
+                r["ids"], r["tfs"], r["dls"], r["block_firsts"], r["block_lens"]
+            )
+            assert ids.size == r["df"] == sum(r["block_lens"]), r["term"]
+            ends = np.cumsum(r["block_lens"])
+            for first, last, lo, hi in zip(
+                r["block_firsts"], r["block_lasts"], ends - r["block_lens"], ends
+            ):
+                assert (first, last) == (ids[lo:hi].min(), ids[lo:hi].max()), r["term"]
+            entries = tuple(sorted(zip(ids.tolist(), tfs.tolist(), dls.tolist())))
+            out.append((r["term"], r["df"], r["tb"], entries))
+        return sorted(out)
+
+    assert snapshot(d1) == snapshot(d2)
+    for d in (d1, d2):
+        run_parity(
+            SearchEngine(spark, d), docs_oracle,
+            ["license", "license AND parser", "parser lexer bloom"],
+        )
+
+
 def test_auto_guard_uses_largest_bucket(spark, tmp_path, monkeypatch):
     """The 'auto' memory guard must gate on the LARGEST bucket, not the
     cross-bucket mean (ADVICE r4): with a cap between the two, a skewed
@@ -121,26 +169,23 @@ def test_auto_guard_uses_largest_bucket(spark, tmp_path, monkeypatch):
 
 def test_auto_strategy_resolution(spark, docs_pdf, docs_oracle, tmp_path, monkeypatch):
     """Stage 2 resolves to shuffle-encode when the largest bucket fits
-    SPARK_GRAFT_S2_MAX_BUCKET_BYTES and the vocabulary fits
-    SPARK_GRAFT_S2_MAX_DICT_TERMS, and to local-merge above either cap —
-    with identical query results every way (the gate is a physical-plan
-    decision only)."""
-    b1 = IndexBuilder(spark, str(tmp_path / "idx_auto_se"), n_buckets=8)
+    SPARK_GRAFT_S2_MAX_BUCKET_BYTES, and to local-merge above the cap — with
+    identical query results either way (the gate is a physical-plan decision
+    only). The dictionary-size cap is checked by
+    test_tid_dict_parity_with_string_path."""
+    d1 = str(tmp_path / "idx_auto_se")
+    b1 = IndexBuilder(spark, d1, n_buckets=8)
     b1.build(spark.createDataFrame(docs_pdf), input_token="auto1")
     assert b1.metrics["stage2_postings"]["strategy"] == "shuffle-encode"
-    builders = [b1]
-    for i, (var, val) in enumerate(
-        [("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", "1"), ("SPARK_GRAFT_S2_MAX_DICT_TERMS", "0")]
-    ):
-        with monkeypatch.context() as m:
-            m.setenv(var, val)
-            b = IndexBuilder(spark, str(tmp_path / f"idx_auto_lm{i}"), n_buckets=8)
-            b.build(spark.createDataFrame(docs_pdf), input_token=f"auto_lm{i}")
-        assert b.metrics["stage2_postings"]["strategy"] == "local-merge", var
-        builders.append(b)
-    for b in builders:
+
+    monkeypatch.setenv("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", "1")  # force fallback
+    d2 = str(tmp_path / "idx_auto_lm")
+    b2 = IndexBuilder(spark, d2, n_buckets=8)
+    b2.build(spark.createDataFrame(docs_pdf), input_token="auto2")
+    assert b2.metrics["stage2_postings"]["strategy"] == "local-merge"
+    for d in (d1, d2):
         run_parity(
-            SearchEngine(spark, b.index_dir), docs_oracle,
+            SearchEngine(spark, d), docs_oracle,
             ["license", "parser lexer bloom", "license AND parser"],
         )
 
