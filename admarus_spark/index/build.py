@@ -588,19 +588,24 @@ class IndexPaths:
         return os.path.join(self.index_dir, "summaries")
 
 
-def check_layout(index_dir: str, postings: DataFrame, rollup_kinds) -> int:
+def check_layout(index_dir: str, postings: DataFrame, rollup_kinds, stats) -> int:
     """The one layout check of every reader and writer of a built index
     (SearchEngine init, update(), compact()): only the layout today's build
     writes (lineage schema 5) is accepted; older indexes are rebuilt, not
-    read through fallbacks. Looks only at the postings schema and the
-    summaries rollup-row kinds the caller already holds, plus the stage-2
-    metrics file — no Spark job. Returns the persisted routing modulus
-    ``n_buckets`` (never inferred from occupied buckets: a trailing
-    zero-term bucket writes no row)."""
+    read through fallbacks. Looks only at the postings schema, the
+    summaries rollup-row kinds and the stats row the caller already holds,
+    plus the stage-2 metrics file — no Spark job. Returns the persisted
+    routing modulus ``n_buckets`` (never inferred from occupied buckets: a
+    trailing zero-term bucket writes no row)."""
     missing = []
     if "block_lasts" not in postings.columns:
         missing.append("postings column block_lasts")
     missing += [f"summaries row kind='{k}'" for k in ("meta", "global") if k not in rollup_kinds]
+    missing += [
+        f"stats field {f}"
+        for f in ("bm_avgdl", "total_tokens", "n_dead_acc")
+        if f not in stats.__fields__
+    ]
     n_buckets = ckpt.read_metrics(index_dir, "stage2_postings").get("n_buckets")
     if n_buckets is None:
         missing.append("stage-2 metric n_buckets")

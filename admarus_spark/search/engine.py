@@ -9,20 +9,25 @@ driver:  parse AST → bloom gate (M1, ``matching.rs:19-41``) → per-term
          bucket routing (term-hash partition pruning + per-bucket bloom)
 stage A: scan postings WHERE tb IN (...) AND term IN (...)   [partition
          pruning + parquet predicate pushdown]
-stage B-D, group-eval route (postings-only folds, finite k, clean index):
-         one executor task decodes the scanned blobs with local rank-safe
-         block pruning, folds in NumPy and emits the top-k (group_eval.py)
-stage B-D, pivot route (metadata folds, tombstones, k=None, wand="off",
-         groups over the decoded-bytes cap): decode varint blocks
-         (Arrow-batched mapInPandas, NumPy inside) → per-doc AST fold
-         compiled to Catalyst expressions (fold.py) → global top-k:
+stage B-D, group-eval route (postings-only folds, finite k, clean or
+         dirty index): one executor task decodes the scanned blobs with
+         local rank-safe block pruning, drops tombstoned ids, folds in
+         NumPy and emits the top-k (group_eval.py)
+stage B-D, pivot route (metadata folds, k=None, wand="off", groups over
+         the decoded-bytes cap): decode varint blocks (Arrow-batched
+         mapInPandas, NumPy inside) → tombstone anti-join → per-doc AST
+         fold compiled to Catalyst expressions (fold.py) → global top-k:
          orderBy(score desc, doc_id asc).limit(k) → TakeOrderedAndProject
 stage E: broadcast-join the k winners back to doc_dict for display fields;
          one task sorts them
 
-Per-term idf is computed on the driver with NumPy from collected (term, df)
-rows and injected as float64 literals, so engine and oracle share the exact
-same ln() bits (float-parity note in oracle.py).
+Per-term idf is ``oracle.bm25_idf`` over the live df, so engine and oracle
+share the exact same ln() bits (float-parity note in oracle.py). The driver
+computes it from collected (term, df) rows; while tombstones are pending,
+the stored df still counts dead generations, so the pivot and sharded
+group-eval correct it with one extra job (``_live_df_map``), and an
+unsharded group-eval task counts the live df itself from the ids it
+decodes.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ from ..query.ast import Filter, NAmong, Not, Query, QueryComp, Word, required_wo
 from ..query.parser import parse_query
 from .fold import compile_fold, dlit, is_max_fold, sql_quote
 from .group_eval import (
+    dead_hits,
     evaluate_group,
     group_members,
     nofm_cover_words as _nofm_cover_words,
@@ -82,30 +88,8 @@ class SearchEngine:
             if not os.path.isdir(_p):
                 heal_swap(_p)
         stats = spark.read.parquet(self.paths.stats).collect()[0]
-        self.n_docs = int(stats["n_docs"])
-        self.avgdl = float(stats["avgdl"])
-        # block-max values are exact bounds only under the avgdl they were
-        # encoded with; stats drift (incremental updates) disables WAND
-        try:
-            self.wand_safe = float(stats["bm_avgdl"]) == self.avgdl
-        except (KeyError, TypeError, ValueError):
-            self.wand_safe = True
         self.doc_dict = spark.read.parquet(self.paths.doc_dict)
         self.postings = spark.read.parquet(self.paths.postings)
-        # tombstones: stale generations of changed documents (incremental
-        # upsert). Dead ids are anti-joined out of decoded postings BEFORE
-        # ranking and out of the dictionary; block-max skipping is disabled
-        # because the stored bounds may be dominated by dead docs (rank
-        # safety). The set stays small relative to the corpus (a full
-        # rebuild compacts); broadcast anti-join keeps this shuffle-free.
-        tomb_path = os.path.join(index_dir, "tombstones")
-        self.tombstones: DataFrame | None = None
-        if os.path.exists(tomb_path):
-            self.tombstones = spark.read.parquet(tomb_path)
-            self.doc_dict = self.doc_dict.join(
-                F.broadcast(self.tombstones), "doc_id", "left_anti"
-            )
-            self.wand_safe = False
         # driver-side summaries: init reads ONLY the two rollup rows (meta
         # bloom + global term bloom, precomputed by stage3) — n_buckets
         # scales with the corpus, so eagerly materializing every bucket's
@@ -120,9 +104,29 @@ class SearchEngine:
             for r in self._summaries.filter(F.col("kind").isin("meta", "global")).collect()
         }
         # n_buckets is the ROUTING modulus (persisted by stage 2)
-        self.n_buckets = check_layout(index_dir, self.postings, rollup)
+        self.n_buckets = check_layout(index_dir, self.postings, rollup, stats)
         self.meta_bloom = rollup["meta"]
         self.global_bloom = np.bitwise_or(rollup["global"], self.meta_bloom)
+        self.n_docs = int(stats["n_docs"])
+        self.avgdl = float(stats["avgdl"])
+        # block-max values are exact bounds only under the avgdl they were
+        # encoded with; stats drift (incremental updates) disables WAND
+        self.wand_safe = float(stats["bm_avgdl"]) == self.avgdl
+        # tombstones: stale generations of changed documents (incremental
+        # upsert). Dead ids are dropped from decoded postings BEFORE ranking
+        # (group-eval: in the task; pivot: broadcast anti-join) and
+        # anti-joined out of the dictionary; block-max skipping is disabled
+        # because the stored bounds may be dominated by dead docs (rank
+        # safety). The set stays small relative to the corpus (compact()
+        # clears it), so both stay shuffle-free.
+        tomb_path = os.path.join(index_dir, "tombstones")
+        self.tombstones: DataFrame | None = None
+        if os.path.exists(tomb_path):
+            self.tombstones = spark.read.parquet(tomb_path)
+            self.doc_dict = self.doc_dict.join(
+                F.broadcast(self.tombstones), "doc_id", "left_anti"
+            )
+            self.wand_safe = False
         from ..index import checkpoint as _ckpt
 
         stage2 = _ckpt.read_metrics(index_dir, "stage2_postings")
@@ -184,7 +188,8 @@ class SearchEngine:
         self.last_group_eval: dict | None = None
         # tombstoned ids pinned driver-side, lazily (bounded by design: the
         # set holds changed-doc old generations + crash-recovery orphans and
-        # compact() clears it) — feeds the live-df correction below
+        # compact() clears it) — shipped into group-eval tasks and feeding
+        # the driver's live-df correction (_live_df_map)
         self._dead_cache: np.ndarray | None = None
         # true max live doc id, lazily (one tiny columnar aggregate, cached
         # per engine life / refresh()): ids are append-assigned and never
@@ -221,15 +226,26 @@ class SearchEngine:
         serving session otherwise keeps the df cache, blooms and tombstone
         view from init — the guards keep results rank-safe (stale df_cache
         returns empty rather than wrong) but recall silently drops until
-        re-init (VERDICT r4 #7). Re-runs init: stats, rollup rows, df cache,
-        tombstones and n_buckets re-read; cached per-bucket blooms and
-        persisted intermediates dropped. Cost equals engine construction
-        (two O(1) summary collects + the size-gated dictionary cache) —
-        cheap enough for a periodic refresh tick."""
-        self.release_cache()
-        if getattr(self, "_dd_persisted", False):
-            self.doc_dict.unpersist()
+        re-init (VERDICT r4 #7). ``close()``s, then re-runs init: stats,
+        rollup rows, df cache, tombstones and n_buckets re-read. Cost equals
+        engine construction (two O(1) summary collects + the size-gated
+        dictionary cache) — cheap enough for a periodic refresh tick."""
+        self.close()
         self.__init__(self.spark, self.paths.index_dir)
+
+    def close(self) -> None:
+        """Release everything this engine pins: persisted query
+        intermediates, the doc_dict pin, and the driver-side caches (dead
+        ids, df cache, per-bucket blooms). Idempotent. A closed engine still
+        answers queries, without the doc_dict pin and the df cache."""
+        self.release_cache()
+        if self._dd_persisted:
+            self.doc_dict.unpersist()
+            self._dd_persisted = False
+        self._dead_cache = None
+        self.df_cache = None
+        self.bucket_blooms = {}
+        self._absent_buckets = set()
 
     # --- M1 bloom gate (matching.rs:19-41 semantics, u32 sum/gate) ------
     def _bloom_match_score(self, comp: QueryComp, filt: np.ndarray, optimistic: bool = True) -> int:
@@ -300,13 +316,14 @@ class SearchEngine:
         """Top-k results: (doc_id, score, repo, path, commit, lang).
 
         Postings-only queries (no metadata filter anywhere in the fold) with
-        a finite ``k`` on a clean index evaluate executor-side through
-        group-eval — ``search_many``'s one-member case
-        (``_search_many_groups``): decode, fold and top-k run next to the
-        postings and k rows come back. The pivot serves the rest: metadata
-        folds, tombstoned indexes, ``k=None``, groups over the decoded-bytes
-        cap (``group_eval_max_bytes``) and ``wand="off"``.
-        ``last_group_eval`` records the route (None = pivot).
+        a finite ``k`` evaluate executor-side through group-eval —
+        ``search_many``'s one-member case (``_search_many_groups``): decode,
+        tombstone drop, fold and top-k run next to the postings and k rows
+        come back, on a clean index and on one with pending tombstones or a
+        drifted avgdl alike. The pivot serves the rest: metadata folds,
+        ``k=None``, groups over the decoded-bytes cap
+        (``group_eval_max_bytes``) and ``wand="off"``. ``last_group_eval``
+        records the route (None = pivot).
 
         ``wand``: ``"auto"`` (default) prunes wherever it is rank-safe;
         ``"on"`` is accepted as an alias of ``"auto"``; ``"off"`` takes the
@@ -357,13 +374,13 @@ class SearchEngine:
                 df_map = {t: self.df_cache[t] for t in scan_terms if t in self.df_cache}
             else:
                 df_map = _sum_df(pruned.select("term", "df").collect())
-            if self.tombstones is not None and df_map:
-                df_map = self._live_df_map(pruned, df_map)
             if df_map and k is not None and k > 0:
                 groups, _pivot = self._route_batch_members({"": query}, df_map, wand)
                 if groups:
                     topk = self._search_many_groups(groups, df_map, k)
                     return self._dict_join(topk.select("doc_id", "score"), k)
+            if self.tombstones is not None and df_map:
+                df_map = self._live_df_map(pruned, df_map)
             # pivot. A max-fold with valid block maxes (a postings-only
             # query whose group is over the cap) decodes each term's
             # greedy top-k blocks executor-side — rank-safe, zero driver
@@ -418,18 +435,19 @@ class SearchEngine:
         ``search`` (same floats, same order). Members route across three
         paths and union:
 
-        - **group-eval** (the default for postings-only members on a clean
-          index): each connected component of queries sharing terms becomes
-          ONE identity-routed shuffle partition of posting blobs, evaluated
-          entirely executor-side (``group_eval.evaluate_group``: local
-          rank-safe block pruning, the oracle's NumPy fold, exact top-k) —
-          k rows per query come back, no per-doc pivot, no driver θ probes.
+        - **group-eval** (the default for postings-only members, clean or
+          dirty index): each connected component of queries sharing terms
+          becomes ONE identity-routed shuffle partition of posting blobs,
+          evaluated entirely executor-side (``group_eval.evaluate_group``:
+          tombstone drop, local rank-safe block pruning, the oracle's NumPy
+          fold, exact top-k) — k rows per query come back, no per-doc
+          pivot, no driver θ probes.
         - **pivot** (``_search_many_pivot``): shared scan + decode + BM25
           pivot + one exploded fold plan + windowed per-query top-k — for
-          members whose folds reference metadata, tombstoned indexes,
-          groups over the decoded-bytes cap, and the ``wand="off"``
-          full-decode baseline. The shared decode is pruned by the UNION of
-          the member queries' block masks (``_batch_masks``).
+          members whose folds reference metadata, groups over the
+          decoded-bytes cap, and the ``wand="off"`` full-decode baseline.
+          The shared decode is pruned by the UNION of the member queries'
+          block masks (``_batch_masks``).
         - **fallback**: members with positive metadata filters take the
           exact single-query path (their candidates come from doc_dict, not
           postings).
@@ -485,14 +503,6 @@ class SearchEngine:
                             F.col("tb").isin(buckets) & F.col("term").isin(scan_terms)
                         ).select("term", "df").collect()
                     )
-                if self.tombstones is not None and df_map:
-                    buckets = sorted({term_bucket(t, self.n_buckets) for t in df_map})
-                    df_map = self._live_df_map(
-                        self.postings.filter(
-                            F.col("tb").isin(buckets) & F.col("term").isin(list(df_map))
-                        ),
-                        df_map,
-                    )
                 if df_map:
                     self.last_batch_timings["prep_sec"] = time.time() - t_start
                     ge_groups, pivot_members = self._route_batch_members(
@@ -530,8 +540,11 @@ class SearchEngine:
         """Split batched members (or ``search``'s one query) between the
         executor-side group evaluation and the distributed pivot path.
         Group-eval takes postings-only members (no metadata filter anywhere
-        in the fold — group partitions carry no doc metadata) on a clean index (no tombstones to anti-join,
-        block-max bounds valid); members sharing terms form one group
+        in the fold — group partitions carry no doc metadata), on a clean
+        index and on a dirty one alike (the task drops tombstoned ids and
+        skips block-max pruning while the bounds are stale — ``df_map``
+        here is the STORED df, used only for the size estimates, which it
+        can only overstate); members sharing terms form one group
         (connected components) so a shared term's blobs ship and decode
         once; groups whose estimated decoded volume exceeds
         ``group_eval_max_bytes`` PER SHARD stay on the pivot path (its
@@ -541,7 +554,7 @@ class SearchEngine:
         keep each shard under the cap; routing and sharding use the same
         budget so a group admitted here always fits). ``wand="off"``
         forces the pivot full decode — the measured no-pruning baseline."""
-        if wand == "off" or not self.wand_safe or self.tombstones is not None:
+        if wand == "off":
             return [], dict(batched)
         ge: dict[str, Query] = {}
         pivot: dict[str, Query] = {}
@@ -611,7 +624,15 @@ class SearchEngine:
         component-bound: pre-sharding, the 10-query ladder's largest
         component (~3.7M posting rows) WAS the local[4] makespan
         (BENCH/QUERY_DECOMP.json). ``SPARK_GRAFT_GROUP_EVAL_SHARDS``:
-        ``auto`` (default), ``off``, or a forced per-group shard count."""
+        ``auto`` (default), ``off``, or a forced per-group shard count.
+
+        **Dirty index.** ``df_map`` is the stored df. With tombstones
+        pending, the driver-pinned dead ids (``_dead_ids_np``) ship into
+        the tasks, which drop them from every decode; an unsharded group
+        then counts each term's live df from its surviving ids and computes
+        idf itself, while a sharded group — which sees only part of each
+        posting list — gets its live df from the driver (``_live_df_map``).
+        ``wand_safe`` ships too: stale block maxes turn the greedy off."""
 
         def _est(comp: list[tuple[str, Query]]) -> int:
             gterms = {t for _qid, q in comp for t in q.terms() if t in df_map}
@@ -729,9 +750,27 @@ class SearchEngine:
         # tb/term-pruned scan into one partition instead — no exchange, so
         # no shuffle job ahead of the evaluation
         src = src.coalesce(1) if n == 1 else src.repartition(n, "gk")
-        idf_map = {t: bm25_idf(self.n_docs, df_map[t]) for t in terms}
+        idf_terms, live_df, dead = terms, df_map, None
+        if self.tombstones is not None:
+            dead = self._dead_ids_np()
+            idf_terms = sorted(
+                {
+                    t
+                    for i, comp in enumerate(groups)
+                    if n_shards[i] > 1
+                    for _qid, q in comp
+                    for t in q.terms()
+                    if t in df_map
+                }
+            )
+            if idf_terms:
+                live_df = self._live_df_map(
+                    pruned.filter(F.col("term").isin(idf_terms)),
+                    {t: df_map[t] for t in idf_terms},
+                )
+        idf_map = {t: bm25_idf(self.n_docs, live_df[t]) for t in idf_terms}
         dfm = {t: df_map[t] for t in terms}
-        avgdl, kk = self.avgdl, k
+        avgdl, kk, n_docs, bounds_valid = self.avgdl, k, self.n_docs, self.wand_safe
         k1, b = BM25_K1, BM25_B
         mbk = members_by_key
 
@@ -745,7 +784,8 @@ class SearchEngine:
                 comp, lo, hi = mbk[gk]
                 recs.extend(
                     evaluate_group(
-                        comp, rows, dfm, idf_map, kk, avgdl, k1, b, lo, hi
+                        comp, rows, dfm, idf_map, kk, avgdl, k1, b, lo, hi,
+                        dead, bounds_valid, n_docs,
                     )
                 )
             if recs:
@@ -802,9 +842,10 @@ class SearchEngine:
         plan_sec driver constant, BENCH/QUERY_DECOMP.json).
 
         This path serves the members group-eval cannot: folds referencing
-        metadata (doc_dict join), tombstoned indexes (anti-join), groups
-        over the decoded-bytes cap, and the ``wand="off"`` full-decode
-        baseline."""
+        metadata (doc_dict join), groups over the decoded-bytes cap, and
+        the ``wand="off"`` full-decode baseline. ``all_df_map`` is the
+        stored df; on a tombstoned index the members' terms take their
+        live df from ``_live_df_map`` and dead ids leave by anti-join."""
         terms = [
             t
             for t in dict.fromkeys(t for q in members.values() for t in q.terms())
@@ -817,6 +858,8 @@ class SearchEngine:
         pruned = self.postings.filter(
             F.col("tb").isin(buckets) & F.col("term").isin(terms)
         )
+        if self.tombstones is not None:
+            df_map = self._live_df_map(pruned, df_map)
         t_m = time.time()
         block_masks = self._batch_masks(pruned, members, df_map, k, wand)
         self.last_batch_timings["mask_sec"] += time.time() - t_m
@@ -913,12 +956,15 @@ class SearchEngine:
         tombstone set), ships only (term, dead_count) rows back, and
         subtracts: live df = stored sum − dead hits. Runs ONLY in the
         transient tombstoned state — compact() restores the single-pass
-        stored-df path — and makes every incremental state float64-exact
-        against the live-corpus oracle, not merely rank-bounded."""
+        stored-df path — and ONLY for terms an executor task cannot count
+        itself: pivot members and sharded group-eval groups (an unsharded
+        group-eval task decodes each term whole and counts its live df in
+        place). Makes every incremental state float64-exact against the
+        live-corpus oracle, not merely rank-bounded."""
         dead = self._dead_ids_np()
         if dead.size == 0 or not df_map:
             return df_map
-        _decode_postings = decode_postings
+        _decode_postings, _dead_hits = decode_postings, dead_hits
 
         def count_dead(batches):
             for pdf in batches:
@@ -932,12 +978,7 @@ class SearchEngine:
                         np.asarray(pdf["block_firsts"].iat[i], np.int64),
                         np.asarray(pdf["block_lens"].iat[i], np.int64),
                     )
-                    if ids.size:
-                        pos = np.searchsorted(dead, ids)
-                        pos[pos == dead.size] = dead.size - 1
-                        n_dead = int((dead[pos] == ids).sum())
-                    else:
-                        n_dead = 0
+                    n_dead = int(_dead_hits(dead, ids).sum()) if ids.size else 0
                     terms.append(pdf["term"].iat[i])
                     counts.append(n_dead)
                 yield pd.DataFrame({"term": terms, "dead": counts})

@@ -1,7 +1,7 @@
 """Executor-side batched query evaluation (the group-eval fast path).
 
-``search_many`` co-locates each member query's posting blobs in one shuffle
-partition (identity-routed via ``murmur.identity_partition_keys``, the same
+``search_many`` (and ``search``, as its one-member case) co-locates each
+member query's posting blobs in one shuffle partition (identity-routed via ``murmur.identity_partition_keys``, the same
 trick as the build's raw-tf exchange) and this module evaluates every member
 entirely inside the executor: decode with the same rank-safe block pruning
 as the single-query paths — now executor-LOCAL, so candidate-id
@@ -27,18 +27,32 @@ of bounded queries wants per-QUERY parallelism — both paths coexist and
 union).
 
 Float parity: identical op order as ``oracle.term_scores`` / ``_fold``
-(IEEE +,*,/ on float64, descending-order left-fold sums), idf computed
-driver-side with ``np.log`` from the TRUE corpus df and shipped as float64
-values — the batched parity suite (tests/test_search_many.py) asserts
-bit-equality against the sequential Catalyst path, which is itself
-oracle-gated.
+(IEEE +,*,/ on float64, descending-order left-fold sums), idf from
+``oracle.bm25_idf`` over the LIVE corpus df — the batched parity suite
+(tests/test_search_many.py) asserts bit-equality against the sequential
+Catalyst path, which is itself oracle-gated. On a clean index the driver
+computes every idf and ships the float64 values. On a tombstoned index
+(incremental upsert, before ``compact()``) the stored df still counts dead
+generations; there the task drops dead ids in ``_decode_term`` and an
+unsharded group decodes each term whose idf was not shipped whole, so its
+live df is the count of surviving ids and the task calls the same
+``bm25_idf`` — the same float64 bits as the driver. A sharded group sees
+only part of each posting list, so the driver ships its live df instead
+(``engine._live_df_map``).
 
 Rank-safety per member (same arguments as the driver-side mask union,
 engine._batch_masks):
 
+- dead ids (tombstones) are dropped from every decoded term before any
+  candidate set, range clip or score is formed, so they never rank and
+  never count toward a candidate cover.
 - max-fold members: per-term greedy block selection keeps >= k docs per
   term with the top saturations; under the max fold a doc's score is its
   best surviving component, and every top-k doc's best component survives.
+  This needs EXACT block-max bounds, which hold only under the avgdl they
+  were encoded with: once an update moves avgdl (``wand_safe`` False), a
+  rise makes the stored bounds LOWER than the true saturations, so the
+  greedy is off and max-fold members decode in full like the general kind.
 - conjunctive members: the rarest REQUIRED word decodes fully; its ids are
   an exact candidate superset, other terms keep exactly the blocks whose
   id range intersects it. Non-candidates cannot pass the gate; candidates
@@ -72,6 +86,7 @@ import numpy as np
 
 from .. import BM25_B, BM25_K1
 from ..index.codec import decode_postings
+from ..oracle import bm25_idf
 from ..query.ast import NAmong, Not, Query, QueryComp, Word, required_words
 from .fold import is_max_fold
 
@@ -167,13 +182,26 @@ def nofm_cover_words(comp: QueryComp, df_map: dict[str, int]) -> list[str] | Non
     return sorted(present, key=lambda t: (df_map[t], t))[:k]
 
 
+def dead_hits(dead: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Boolean mask of ``ids`` found in the sorted dead-id array (one
+    searchsorted pass; ``dead`` must be non-empty)."""
+    pos = np.searchsorted(dead, ids)
+    pos[pos == dead.size] = dead.size - 1
+    return dead[pos] == ids
+
+
 def _decode_term(
-    rows, keep_masks, id_lo: int | None = None, id_hi: int | None = None
+    rows,
+    keep_masks,
+    id_lo: int | None = None,
+    id_hi: int | None = None,
+    dead: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode a term's posting rows (one per generation) with per-row keep
     masks (None = full), concatenated and sorted ascending by doc id (block
     runs interleave after chunked merges; downstream searchsorted lookups
-    need global order). A shard range clips the result to ids in
+    need global order). Ids in the sorted ``dead`` array (tombstones) are
+    dropped first. A shard range then clips the result to ids in
     [id_lo, id_hi) — straddling blocks decode whole, their out-of-range
     tail is dropped here."""
     parts = []
@@ -189,6 +217,9 @@ def _decode_term(
     dls = np.concatenate([p[2] for p in parts])
     order = np.argsort(ids, kind="stable")
     ids, tfs, dls = ids[order], tfs[order], dls[order]
+    if dead is not None and dead.size and ids.size:
+        live = ~dead_hits(dead, ids)
+        ids, tfs, dls = ids[live], tfs[live], dls[live]
     if id_lo is not None:
         lo = np.searchsorted(ids, id_lo, side="left")
         hi = np.searchsorted(ids, id_hi, side="left")
@@ -209,7 +240,8 @@ def _term_scores(
     """(B, S) for a Word leaf over candidate doc ids — the executor twin of
     ``oracle.OracleIndex.term_scores`` (same searchsorted lookup, same
     float order), with tf sourced from the decoded (possibly rank-safely
-    pruned) arrays and idf from the driver-shipped TRUE-df literals."""
+    pruned) arrays and idf from the live-df values (driver-shipped, or
+    counted by ``evaluate_group`` on a tombstoned index)."""
     tf = np.zeros(cand.size, dtype=np.float64)
     entry = decoded.get(term)
     if entry is not None and entry[0].size:
@@ -282,13 +314,24 @@ def evaluate_group(
     b: float = BM25_B,
     id_lo: int | None = None,
     id_hi: int | None = None,
+    dead: np.ndarray | None = None,
+    bounds_valid: bool = True,
+    n_docs: int | None = None,
 ) -> list[tuple[str, int, float]]:
     """Evaluate one co-located group of member queries; returns
     (query_id, doc_id, score) rows — exact top-k per member, identical
     floats and (score desc, doc_id asc) order as the single-query path.
 
     ``rows``: term -> posting rows (itertuples of the scanned blob
-    columns, one per generation).
+    columns, one per generation). ``df_map`` (stored df) only orders the
+    candidate-source choices; scores read ``idf_map``.
+
+    ``dead``: sorted tombstoned doc ids, dropped from every decode.
+    ``bounds_valid``: the stored block maxes are exact (the engine's
+    ``wand_safe``); False turns the max-fold greedy off. A member term
+    missing from ``idf_map`` decodes whole and takes
+    ``bm25_idf(n_docs, surviving ids)`` — valid only on an unsharded group,
+    which sees the term's whole posting list.
 
     ``id_lo/id_hi``: the shard's doc-id range (None = unsharded). Every
     decode clips to the range, so the returned rows are the member's exact
@@ -309,7 +352,7 @@ def evaluate_group(
             continue  # no candidate source -> empty member result
         qdf = {t: df_map[t] for t in qterms}
         if is_max_fold(q.root):
-            greedy.update(pos)
+            (greedy if bounds_valid else need_full).update(pos)
             plans.append((qid, q, "maxfold", pos))
             continue
         req = required_words(q.root)
@@ -333,6 +376,14 @@ def evaluate_group(
         need_full.update(qterms)
         plans.append((qid, q, "general", pos))
 
+    # idf not shipped (tombstoned, unsharded group): decode whole and
+    # count the surviving ids — the term's live df
+    own_idf = {
+        t for _qid, q, _kind, _src in plans for t in q.terms()
+        if t in present and t not in idf_map
+    }
+    need_full |= own_idf
+
     ranged = id_lo is not None
     decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     for t in need_full:
@@ -340,7 +391,12 @@ def evaluate_group(
             select_blocks_range(r, id_lo, id_hi) if ranged else None
             for r in rows[t]
         ]
-        decoded[t] = _decode_term(rows[t], masks, id_lo, id_hi)
+        decoded[t] = _decode_term(rows[t], masks, id_lo, id_hi, dead)
+    if own_idf:
+        idf_map = {
+            **idf_map,
+            **{t: bm25_idf(n_docs, decoded[t][0].size) for t in own_idf},
+        }
 
     # ---- member candidate sets (from fully-decoded source terms) -------
     member_cand: dict[int, np.ndarray] = {}
@@ -371,7 +427,7 @@ def evaluate_group(
                 # on an unsharded group)
                 m = select_blocks_range(r, id_lo, id_hi) if ranged else None
             masks.append(m)
-        decoded[t] = _decode_term(trows, masks, id_lo, id_hi)
+        decoded[t] = _decode_term(trows, masks, id_lo, id_hi, dead)
 
     # ---- pass 3: evaluate each member over its candidates --------------
     recs: list[tuple[str, int, float]] = []

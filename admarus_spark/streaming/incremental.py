@@ -11,14 +11,18 @@ The reference re-crawls periodically, dedups against its ``listed`` /
   whose ``content_sha256`` changed is re-indexed as a NEW document (the
   reference keys documents by CID, so changed content IS a new document —
   ``index.rs:68-75``) and the stale doc id is appended to a ``tombstones``
-  table. The engine anti-joins tombstones out of decoded postings before
-  ranking and out of the dictionary, and disables block-max skipping
-  (bounds may count dead docs). Stored per-term ``df`` keeps counting dead
-  docs until compaction, but scoring stays EXACT: the engine subtracts each
-  query term's dead postings from its stored df at query time
-  (``engine._live_df_map`` — one bounded extra pass over the pruned terms,
-  only while tombstones exist), so idf matches the live corpus float64-
-  exactly in every incremental state — no Lucene-style rank drift window.
+  table. The engine drops tombstoned ids from decoded postings before
+  ranking and anti-joins them out of the dictionary, and disables
+  block-max skipping (bounds may count dead docs). Stored per-term ``df``
+  keeps counting dead docs until compaction, but scoring stays EXACT: the
+  engine uses each query term's LIVE df, so idf matches the live corpus
+  float64-exactly in every incremental state — no Lucene-style rank drift
+  window. A group-eval task (``search/group_eval.py``) that sees a term's
+  whole posting list counts the live df from the ids that survive the
+  tombstone drop; the pivot and doc-range-sharded group-eval subtract the
+  dead postings from the stored df with one bounded extra pass over the
+  pruned terms (``engine._live_df_map``). Both run only while tombstones
+  exist.
 - New docs get doc ids ``max_id + 1 ...`` in lexicographic (repo, path)
   order *within the delta* — arrival-order semantics, exactly the
   reference's ``LocalCid`` counter behavior across refresh rounds.
@@ -133,10 +137,10 @@ class IncrementalIndexer:
             r["kind"]: np.frombuffer(r["filter"], dtype=np.uint8)
             for r in stored_summ.filter(F.col("kind").isin("meta", "global")).collect()
         }
-        n_buckets = check_layout(
-            self.index_dir, spark.read.parquet(paths.postings), rollup
-        )
         stats = spark.read.parquet(paths.stats).collect()[0]
+        n_buckets = check_layout(
+            self.index_dir, spark.read.parquet(paths.postings), rollup, stats
+        )
         dd = spark.read.parquet(paths.doc_dict)
         max_id = dd.agg(F.max("doc_id")).collect()[0][0]
         max_id = -1 if max_id is None else int(max_id)
@@ -297,7 +301,7 @@ class IncrementalIndexer:
         pins.append(tf_all)
 
         tf = tf_all.filter(F.col("term") != MARKER_TERM)
-        bm_avgdl = float(stats["bm_avgdl"]) if "bm_avgdl" in stats.__fields__ else float(stats["avgdl"])
+        bm_avgdl = float(stats["bm_avgdl"])
         block_size = self.block_size
         # encode the delta's postings with ONE whole-partition pass per
         # term-bucket group (the kernel of the full build's stage 2) — a
@@ -448,24 +452,14 @@ class IncrementalIndexer:
         # ids its totals exclude; a mismatch with the tombstones actually on
         # disk forces this one update onto the exact recompute path (r5
         # review #1). bm_avgdl is unchanged (block-max staleness marker).
-        # Legacy stats rows without total_tokens/n_dead_acc take the
-        # recompute once and gain the fields here.
+        # orphan_recovery: the crashed update wrote its marker (and
+        # possibly postings) but died before its stats write — the same
+        # invariant break, detected by the marker instead of the tombstone
+        # count
         n_dead_seen = len(set(dead_prev))
-        try:
-            prev_n = int(stats["n_docs"])
-            prev_tt = int(stats["total_tokens"])
-            if int(stats["n_dead_acc"]) != n_dead_seen:
-                prev_n = prev_tt = None  # un-accounted tombstones on disk
-        except (KeyError, TypeError, ValueError):
-            prev_n = prev_tt = None
-        if orphan_recovery:
-            # the crashed update wrote its marker (and possibly postings)
-            # but died before its stats write — the same invariant break,
-            # detected by the marker instead of the tombstone count
-            prev_n = prev_tt = None
-        if prev_n is not None:
-            n_docs = prev_n + int(n_new) - n_changed
-            total_tokens = prev_tt + delta_len - changed_len
+        if int(stats["n_dead_acc"]) == n_dead_seen and not orphan_recovery:
+            n_docs = int(stats["n_docs"]) + int(n_new) - n_changed
+            total_tokens = int(stats["total_tokens"]) + delta_len - changed_len
             stats_mode = "running"
         else:
             # exact rebase: aggregate the pre-update LIVE corpus (doc_dict
@@ -647,8 +641,8 @@ class IncrementalIndexer:
             .select("kind")
             .collect()
         }
-        n_buckets = check_layout(self.index_dir, post, rollup_kinds)
         stats = spark.read.parquet(paths.stats).collect()[0]
+        n_buckets = check_layout(self.index_dir, post, rollup_kinds, stats)
         dd = spark.read.parquet(paths.doc_dict)
         # orphan detection, same rule as update(): marker lines record each
         # append's id range BEFORE its postings land, so ids above the

@@ -613,34 +613,65 @@ def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch)
         assert len(rows) == 1 and rows[0][0] < rows[0][1], (q, rows)
 
 
-def test_tombstoned_index_keeps_pivot(spark, movies_pdf, tmp_path):
-    """Pending tombstones keep single queries on the pivot (its anti-join
-    drops dead generations), float-exact against the live corpus."""
-    import hashlib
-
-    import pandas as pd
-
-    from admarus_spark.oracle import OracleIndex
-    from admarus_spark.streaming.incremental import IncrementalIndexer
-
-    d = str(tmp_path / "idx_tomb_route")
-    IndexBuilder(spark, d, n_buckets=4).build(
-        spark.createDataFrame(movies_pdf), input_token="tr-base"
-    )
-    changed = movies_pdf.iloc[:5].copy()
-    changed["content"] = "hunger " + changed["content"]
-    changed["content_sha256"] = [
-        hashlib.sha256(c.encode()).hexdigest() for c in changed["content"]
+def tomb_results(oracle, q, k):
+    """The oracle's answer as (repo, path, score) rows: engine and oracle
+    doc ids differ on an updated index, their order does not."""
+    return [
+        (oracle.docs["repo"][i], oracle.docs["path"][i], s)
+        for i, s in oracle.search(q, 10**9 if k is None else k)
     ]
-    IncrementalIndexer(spark, d).update(spark.createDataFrame(changed), "tr-delta")
-    oracle = OracleIndex(pd.concat([movies_pdf.iloc[5:], changed], ignore_index=True))
-    opaths = dict(enumerate(oracle.docs["path"]))
-    eng = SearchEngine(spark, d)
-    assert eng.tombstones is not None
+
+
+def tomb_search(eng, q, k, wand="auto"):
+    return [
+        (r["repo"], r["path"], r["score"])
+        for r in eng.search(q, k, wand=wand).collect()
+    ]
+
+
+def test_tombstoned_index_keeps_pivot(tomb_engine, tomb_oracle):
+    """On an index with pending tombstones, metadata folds, wand="off" and
+    k=None still take the pivot (its anti-join drops dead generations),
+    float-exact against the live corpus."""
+    eng = tomb_engine
+    cases = [("lang=en AND hunger", 10, "auto")]
     for q in ("hunger", "hunger AND games", "perfectly matching"):
-        got = sorted((r["path"], r["score"]) for r in eng.search(q, 10**6).collect())
-        assert got == sorted((opaths[i], s) for i, s in oracle.search(q, 10**6)), q
-        assert eng.last_group_eval is None, q
+        cases += [(q, 10, "off"), (q, None, "auto")]
+    for q, k, wand in cases:
+        assert tomb_search(eng, q, k, wand) == tomb_results(tomb_oracle, q, k), (q, k, wand)
+        assert eng.last_group_eval is None, (q, k, wand)
+
+
+def test_tombstoned_index_routes_to_group_eval(tomb_engine, tomb_oracle, monkeypatch):
+    """Postings-only queries on a tombstoned index take group-eval, which
+    drops dead ids and counts live df inside the task: results match the
+    live-corpus oracle float-exactly and the driver's live-df job never
+    runs. ``zzdoomedterm`` is still in the stored df (1) but its only
+    posting is dead, so it must come back exactly as empty as the
+    oracle's."""
+    eng = tomb_engine
+    calls = []
+    live_df = eng._live_df_map
+
+    def counting(pruned, df_map):
+        calls.append(sorted(df_map))
+        return live_df(pruned, df_map)
+
+    monkeypatch.setattr(eng, "_live_df_map", counting)
+    assert eng.df_cache["zzdoomedterm"] == 1
+    queries = ["hunger", "hunger AND games", "perfectly matching", "zzdoomedterm"]
+    queries += [q for q in DOCS_QUERIES if "=" not in q]
+    routed = 0
+    for k in (1, 5, 10):
+        for q in queries:
+            want = tomb_results(tomb_oracle, q, k)
+            assert tomb_search(eng, q, k) == want, (q, k)
+            if want or q == "zzdoomedterm":
+                assert eng.last_group_eval is not None, (q, k)
+                routed += 1
+    assert tomb_results(tomb_oracle, "zzdoomedterm", 10) == []
+    assert routed >= 3 * 12
+    assert not calls, calls
 
 
 def test_single_query_runs_two_jobs(spark, docs_engine):
@@ -658,6 +689,24 @@ def test_single_query_runs_two_jobs(spark, docs_engine):
         sc.setLocalProperty("spark.job.description", None)
     assert docs_engine.last_group_eval is not None
     jobs = sc.statusTracker().getJobIdsForGroup("single_query_jobs")
+    assert 0 < len(jobs) <= 2, jobs
+
+
+def test_tombstoned_single_query_runs_two_jobs(spark, tomb_engine):
+    """On a tombstoned index a postings-only single query also runs at most
+    2 Spark jobs once warm (bucket blooms and dead ids load lazily once):
+    no driver job for the live df."""
+    sc = spark.sparkContext
+    q = "hunger AND games"
+    tomb_engine.search(q, 10).collect()
+    sc.setJobGroup("tomb_single_query_jobs", q, False)
+    try:
+        tomb_engine.search(q, 10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tomb_engine.last_group_eval is not None
+    jobs = sc.statusTracker().getJobIdsForGroup("tomb_single_query_jobs")
     assert 0 < len(jobs) <= 2, jobs
 
 
@@ -690,6 +739,26 @@ def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_
     eng.refresh()
     assert eng._dd_persisted  # re-pinned once the gate admits again
     run_parity(eng, movies_oracle, ["hunger"])
+
+
+def test_close_releases_pins(spark, movies_engine, tmp_path):
+    """close() releases what an engine pins (the doc_dict pin, a filtered
+    query's persisted intermediate): repeated engine lives do not grow the
+    session's persistent RDDs, and a second close() is a no-op."""
+    d = str(tmp_path / "idx_close")
+    shutil.copytree(movies_engine.paths.index_dir, d)  # its own cache keys
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(5):
+        eng = SearchEngine(spark, d)
+        for q in ("hunger", "lang=en AND hunger"):
+            eng.search(q, 10).collect()
+        assert jsc.getPersistentRDDs().size() > before
+        eng.close()
+        assert jsc.getPersistentRDDs().size() <= before
+    eng.close()
+    assert jsc.getPersistentRDDs().size() <= before
+    assert not eng._dd_persisted and eng.df_cache is None and not eng.bucket_blooms
 
 
 def test_pivot_missing_required_word_skips_decode(docs_engine, monkeypatch):

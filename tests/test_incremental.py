@@ -624,10 +624,11 @@ def test_crashed_update_rerun_never_duplicates(spark, tmp_path):
 def test_tombstoned_search_is_float_exact_precompact(spark, tmp_path):
     """With tombstones pending (changed docs, NO compact), scoring must be
     float64-exact against the live-corpus oracle — not merely rank-bounded:
-    the engine subtracts each term's dead postings from its stored df
-    (_live_df_map) so idf matches the oracle's live df exactly. Covers the
-    single-query path AND the batched pivot path (tombstoned indexes route
-    every member to pivot)."""
+    idf comes from each term's live df, without its dead postings. The
+    postings-only queries take group-eval, whose task drops dead ids and
+    counts live df itself; the filtered query takes the pivot, whose live
+    df comes from _live_df_map. Covers the single-query path AND the
+    batched path (group-eval members plus a pivot member)."""
     import hashlib
 
     base = make_docs_corpus(140, seed=51)
@@ -1137,3 +1138,90 @@ def test_shard_ranges_cover_sparse_live_ids(spark, tmp_path, monkeypatch):
     for qid, q in batch.items():
         single = [(r["doc_id"], r["score"]) for r in eng.search(q, 10).collect()]
         assert by_qid.get(qid, []) == single, q
+
+
+def test_stale_bounds_maxfold_decodes_full(spark, tmp_path):
+    """A new-docs-only delta that RAISES avgdl leaves no tombstones but
+    stale block maxes: every saturation grows, long docs' most. In the
+    base, the short ``a/0000`` (tf 1, dl 1) tops ``zzfoo``'s first block
+    and the long ``a/0199`` (tf 5, dl 50) its second block, under a lower
+    bound. After the delta (avgdl ~10 -> ~100) a/0199 scores higher, yet
+    its stored bound stays below a/0000's new saturation: a greedy block
+    selection on the stored bounds would stop after the first block and
+    miss it. Max-fold queries at k=1 still take group-eval, which decodes
+    them in full while the bounds are stale."""
+    from admarus_spark.corpus import sha256_hex
+
+    filler = "alpha bravo charlie delta echo foxtrot golf hotel india"
+
+    def docs(rows):
+        pdf = pd.DataFrame(rows, columns=["repo", "path", "content"])
+        pdf["commit"], pdf["lang"] = "0" * 40, "en"
+        pdf["content_sha256"] = pdf["content"].map(sha256_hex)
+        return pdf
+
+    contents = ["zzfoo " + filler] * 200
+    contents[0] = "zzfoo"
+    contents[199] = "zzfoo " * 5 + " ".join([filler] * 5)
+    base = docs([("a", f"{i:04d}", c) for i, c in enumerate(contents)])
+    delta = docs([("b", f"{i:04d}", " ".join(["zzlong"] * 1000)) for i in range(20)])
+    d = str(tmp_path / "idx_stale_bounds")
+    IndexBuilder(spark, d, n_buckets=4).build(
+        spark.createDataFrame(base), input_token="sb-base"
+    )
+    IncrementalIndexer(spark, d).update(spark.createDataFrame(delta), "sb-delta")
+    eng = SearchEngine(spark, d)
+    assert eng.tombstones is None and eng.wand_safe is False
+    assert eng.avgdl > 9 * float(eng.spark.read.parquet(f"{d}/stats").first()["bm_avgdl"])
+    oracle = OracleIndex(pd.concat([base, delta], ignore_index=True))
+    assert oracle.docs["path"][oracle.search("zzfoo", 1)[0][0]] == "0199"
+    for q, k in (("zzfoo", 1), ("zzfoo", 2), ("zzfoo zzlong", 1)):
+        got = [(r["doc_id"], r["score"]) for r in eng.search(q, k).collect()]
+        assert got == oracle.search(q, k), (q, k)
+        assert eng.last_group_eval is not None, q
+    rows = eng.search_many({"a": "zzfoo", "b": "zzfoo zzlong"}, k=1).collect()
+    assert [(r["query_id"], r["doc_id"], r["score"]) for r in rows] == [
+        ("a", *oracle.search("zzfoo", 1)[0]),
+        ("b", *oracle.search("zzfoo zzlong", 1)[0]),
+    ]
+
+
+def test_sharded_tombstoned_group_takes_driver_live_df(
+    spark, tomb_engine, tomb_oracle, monkeypatch
+):
+    """Forced doc-range sharding on a tombstoned index: a shard sees only
+    part of each posting list, so the group takes its live df from the
+    driver (_live_df_map) — and stays float-exact, single and batched."""
+    eng = tomb_engine
+    calls = []
+    live_df = eng._live_df_map
+
+    def counting(pruned, df_map):
+        calls.append(sorted(df_map))
+        return live_df(pruned, df_map)
+
+    monkeypatch.setattr(eng, "_live_df_map", counting)
+    monkeypatch.setenv("SPARK_GRAFT_GROUP_EVAL_SHARDS", "2")
+    queries = ["hunger", "hunger AND games", "license", "parser lexer bloom",
+               "2(parser, lexer, bloom)", "parser AND NOT bloom", "zzdoomedterm"]
+
+    def want(q, k):
+        return [
+            (tomb_oracle.docs["repo"][i], tomb_oracle.docs["path"][i], s)
+            for i, s in tomb_oracle.search(q, k)
+        ]
+
+    for q in queries:
+        calls.clear()
+        got = [(r["repo"], r["path"], r["score"]) for r in eng.search(q, 10).collect()]
+        assert got == want(q, 10), q
+        assert eng.last_group_eval["sharded_groups"] >= 1, q
+        assert calls, q
+    calls.clear()
+    batch = {f"q{i}": q for i, q in enumerate(queries)}
+    rows = eng.search_many(batch, k=10).collect()
+    assert eng.last_group_eval["sharded_groups"] >= 1
+    assert calls
+    for qid, q in batch.items():
+        got = [(r["repo"], r["path"], r["score"]) for r in rows if r["query_id"] == qid]
+        assert got == want(q, 10), q

@@ -1,7 +1,8 @@
 """Only the layout today's build writes (lineage schema 5) is readable: an
 older index must be rebuilt rather than answered through fallbacks, so no
 query shape — single or batched — can come back inexact from a pre-r2 index
-(no per-block ``block_lasts`` id bounds). One layout check
+(no per-block ``block_lasts`` id bounds) or from a stats row without the
+fields update() and the block-max staleness check need. One layout check
 (``index.build.check_layout``) guards SearchEngine init (and so refresh()),
 update() and compact(), and its error names the missing piece before
 anything is read through it or written to it. The summaries-side check (no
@@ -71,6 +72,21 @@ def test_legacy_index_queries_are_exact(spark, current_idx, tmp_path):
     # the check runs before update() writes anything
     assert not os.path.exists(f"{d}/generations")
     assert not os.path.exists(f"{d}/tombstones")
+
+    # a stats row without bm_avgdl (the block-max staleness marker) is an
+    # older layout too: no reader guesses the bounds are valid
+    d = str(tmp_path / "idx_legacy_stats")
+    shutil.copytree(base, d)
+    rewrite_table(spark, d, "stats", lambda s: s.drop("bm_avgdl"))
+    with pytest.raises(ValueError, match="rebuild the index") as e:
+        SearchEngine(spark, d)
+    assert "stats field bm_avgdl" in str(e.value)
+    with pytest.raises(ValueError, match="rebuild the index") as e:
+        IncrementalIndexer(spark, d).update(delta, input_token="legacy-stats-delta")
+    assert "stats field bm_avgdl" in str(e.value)
+    assert not os.path.exists(f"{d}/generations")
+    assert not os.path.exists(f"{d}/tombstones")
+    assert "bm_avgdl" not in spark.read.parquet(f"{d}/stats").columns
 
 
 def test_legacy_index_batched_queries_are_exact(spark, current_idx, tmp_path):
