@@ -14,10 +14,13 @@ stage B-D, group-eval route (postings-only folds, finite k, clean or
          local rank-safe block pruning, drops tombstoned ids, folds in
          NumPy and emits the top-k (group_eval.py)
 stage B-D, pivot route (metadata folds, k=None, wand="off", groups over
-         the decoded-bytes cap): decode varint blocks (Arrow-batched
-         mapInPandas, NumPy inside) → tombstone anti-join → per-doc AST
-         fold compiled to Catalyst expressions (fold.py) → global top-k:
-         orderBy(score desc, doc_id asc).limit(k) → TakeOrderedAndProject
+         the decoded-bytes cap): decode every scanned block (Arrow-batched
+         mapInPandas, NumPy inside; a max-fold with exact block maxes
+         decodes each term's greedy top-k blocks) → tombstone anti-join →
+         per-doc AST fold compiled to Catalyst expressions (fold.py) →
+         global top-k: orderBy(score desc, doc_id asc).limit(k) →
+         TakeOrderedAndProject. ``search_many`` answers the members its
+         group-eval does not take one by one on this route.
 stage E: broadcast-join the k winners back to doc_dict for display fields;
          one task sorts them
 
@@ -54,7 +57,6 @@ from .group_eval import (
     evaluate_group,
     group_members,
     nofm_cover_words as _nofm_cover_words,
-    select_blocks_intersect as _select_blocks_intersect,
     select_blocks_topk as _select_blocks_topk,
 )
 
@@ -134,47 +136,14 @@ class SearchEngine:
         # once at init so queries skip the per-query df-collect job; at
         # billion-term scale this stays lazy (per-query pruned collect).
         self.df_cache: dict[str, int] | None = None
-        # conjunctive decode pruning kicks in when the rarest required word
-        # has df at or below this (its ids are decoded driver-side and
-        # shipped in the decode closure — ~8 bytes/doc)
-        self.and_prune_max_df = 100_000
-        # cross-term BMW θ-probing fetches whole posting blobs to the driver
-        # (blob columns are not block-sliceable in a collect); cap the fetch
-        # so a pathologically hot term cannot ship a multi-GB blob per query
-        # — above the cap BMW returns None and the executor-side per-term
-        # greedy (no driver fetch) takes over (ADVICE r4)
-        self.bmw_max_term_df = int(os.environ.get("SPARK_GRAFT_BMW_MAX_DF", 2_000_000))
-        # batched-decode pruning engages only when the batch's total posting
-        # volume exceeds this: below it the decode is cheaper than the
-        # driver-side mask computation the pruning spends (mask latency is
-        # constant in executor count; the decode it saves is not)
-        self.batch_prune_min_postings = int(
-            os.environ.get("SPARK_GRAFT_BATCH_PRUNE_MIN_POSTINGS", 50_000)
-        )
-        # the same trade for single queries on the pivot path (r6): below
-        # this total posting volume, the conjunctive/n-of-m rare-id fetches
-        # cost more than the full decode they avoid — measured at sf1.0
-        # (50k docs): wand="off" beat "auto" on every multi-term shape
-        # (n-of-m 0.87→0.64 s). Full decode is the exactness BASELINE, so
-        # the gate can only widen decoded volume, never change results.
-        self.single_prune_min_postings = int(
-            os.environ.get("SPARK_GRAFT_SINGLE_PRUNE_MIN_POSTINGS", 50_000)
-        )
-        # batched θ-probing fetches blobs ONLY for terms at or below this df:
-        # rare/mid blobs are small and carry the high actual scores that set
-        # a tight θ (the df-skew win case); hot blobs never ship driver-side
-        # in the batched path — hot uniform members use the executor-side
-        # per-term greedy instead, whose cost shrinks with executors
-        self.batch_probe_max_df = int(
-            os.environ.get("SPARK_GRAFT_BATCH_PROBE_MAX_DF", 100_000)
-        )
         # batched members whose group (connected component of queries
         # sharing terms) decodes under this many estimated bytes evaluate
         # entirely executor-side (group_eval.py: co-located blobs, local
-        # pruning, k rows out); larger groups take the distributed pivot
-        # path — at 10^12-doc scale a monster term's postings must fan out
-        # per-doc, while a batch of bounded queries wants per-QUERY
-        # parallelism. ~24 bytes per decoded posting (3 int64 arrays).
+        # pruning, k rows out); members of larger groups take the per-doc
+        # pivot one by one — at 10^12-doc scale a monster term's postings
+        # must fan out per-doc, while a batch of bounded queries wants
+        # per-QUERY parallelism. ~24 bytes per decoded posting (3 int64
+        # arrays).
         self.group_eval_max_bytes = int(
             os.environ.get("SPARK_GRAFT_GROUP_EVAL_MAX_BYTES", 1 << 30)
         )
@@ -182,9 +151,7 @@ class SearchEngine:
         # released at the next query (or via release_cache) so a long-lived
         # serving session does not leak executor cache (ADVICE r1).
         self._live_cache: list[DataFrame] = []
-        # decode-pruning evidence from the last batched search_many mask
-        # union / the last group-eval routing (search or search_many)
-        self.last_batch_prune: dict | None = None
+        # the last call's group-eval routing (search or search_many)
         self.last_group_eval: dict | None = None
         # tombstoned ids pinned driver-side, lazily (bounded by design: the
         # set holds changed-doc old generations + crash-recovery orphans and
@@ -315,31 +282,32 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k results: (doc_id, score, repo, path, commit, lang).
 
-        Postings-only queries (no metadata filter anywhere in the fold) with
-        a finite ``k`` evaluate executor-side through group-eval —
-        ``search_many``'s one-member case (``_search_many_groups``): decode,
-        tombstone drop, fold and top-k run next to the postings and k rows
-        come back, on a clean index and on one with pending tombstones or a
-        drifted avgdl alike. The pivot serves the rest: metadata folds,
-        ``k=None``, groups over the decoded-bytes cap
-        (``group_eval_max_bytes``) and ``wand="off"``. ``last_group_eval``
-        records the route (None = pivot).
+        Two routes. Postings-only queries (no metadata filter anywhere in
+        the fold) with a finite ``k`` evaluate executor-side through
+        group-eval — ``search_many``'s one-member case
+        (``_search_many_groups``): decode, tombstone drop, fold and top-k
+        run next to the postings and k rows come back, on a clean index and
+        on one with pending tombstones or a drifted avgdl alike. The pivot
+        serves the rest: metadata folds, ``k=None``, groups over the
+        decoded-bytes cap (``group_eval_max_bytes``) and ``wand="off"``.
+        ``last_group_eval`` records the route (None = pivot).
 
         ``wand``: ``"auto"`` (default) prunes wherever it is rank-safe;
-        ``"on"`` is accepted as an alias of ``"auto"``; ``"off"`` takes the
-        pivot with a full decode, the exactness baseline.
+        ``"off"`` takes the pivot with a full decode, the exactness
+        baseline. Any other value raises ``ValueError``.
 
         ``k=None`` returns EVERY gated match ranked (no limit, no broadcast
         dictionary join) — the shape downstream group-bys aggregate directly
         instead of flowing through a huge top-k broadcast."""
+        _check_wand(wand)
         self.release_cache()
         self.last_group_eval = None
         return self._search_one(query, k, wand)
 
     def _search_one(self, query: str | Query, k: int | None, wand: str) -> DataFrame:
         """``search`` without releasing cached intermediates or resetting
-        ``last_group_eval`` — ``search_many`` routes its positive-filter
-        members here."""
+        ``last_group_eval`` — ``search_many`` answers the members its
+        group-eval does not take here."""
         if isinstance(query, str):
             query = parse_query(query)
         # driver-side bloom short-circuit (inner_im.rs:91-94)
@@ -381,18 +349,12 @@ class SearchEngine:
                     return self._dict_join(topk.select("doc_id", "score"), k)
             if self.tombstones is not None and df_map:
                 df_map = self._live_df_map(pruned, df_map)
-            # pivot. A max-fold with valid block maxes (a postings-only
-            # query whose group is over the cap) decodes each term's
-            # greedy top-k blocks executor-side — rank-safe, zero driver
-            # bytes. Conjunctive / n-of-m shapes decode only the blocks
-            # that can hold a candidate (``_query_cand_ids``: the rarest
-            # required word's ids, or the pigeonhole cover's id union — an
-            # exact candidate superset); the small-volume gate (r6) skips
-            # that driver round-trip where the full decode is cheaper. Full
-            # decode is the exactness baseline, so no choice here changes
-            # results.
-            cand_ids = None
-            block_masks = None
+            # pivot: a plain decode of the scanned terms. Two driver-only
+            # early exits skip it: an unindexed required word, and an n-of-m
+            # query with fewer than n children indexed. A max-fold with
+            # valid block maxes decodes each term's greedy top-k blocks in
+            # the task (rank-safe, zero driver bytes).
+            greedy_k = None
             if wand != "off":
                 req = required_words(query.root)
                 if req - set(df_map):
@@ -400,16 +362,9 @@ class SearchEngine:
                 if not req and _nofm_cover_words(query.root, df_map) == []:
                     return self._empty_result()  # fewer than n children present
                 if is_max_fold(query.root) and self.wand_safe and k:
-                    block_masks = {t: (None, k) for t in df_map}
-                elif (
-                    len(df_map) > 1
-                    and sum(df_map.values()) >= self.single_prune_min_postings
-                ):
-                    cand_ids = self._query_cand_ids(query, df_map)
-                    if cand_ids is not None and cand_ids.size == 0:
-                        return self._empty_result()  # no doc can match
+                    greedy_k = k
             if df_map:
-                decoded = self._decode(pruned, cand_ids, block_masks)
+                decoded = self._decode(pruned, greedy_k)
                 scored, term_col = self._score(decoded, df_map)
 
         if scored is None and not has_filter_cands:
@@ -432,42 +387,38 @@ class SearchEngine:
         self, queries: dict[str, str | Query], k: int = 10, wand: str = "auto"
     ) -> DataFrame:
         """Batched execution: MANY queries, per-query results identical to
-        ``search`` (same floats, same order). Members route across three
-        paths and union:
+        ``search`` (same floats, same order). Members take one of two routes
+        and union:
 
-        - **group-eval** (the default for postings-only members, clean or
-          dirty index): each connected component of queries sharing terms
-          becomes ONE identity-routed shuffle partition of posting blobs,
-          evaluated entirely executor-side (``group_eval.evaluate_group``:
-          tombstone drop, local rank-safe block pruning, the oracle's NumPy
-          fold, exact top-k) — k rows per query come back, no per-doc
-          pivot, no driver θ probes.
-        - **pivot** (``_search_many_pivot``): shared scan + decode + BM25
-          pivot + one exploded fold plan + windowed per-query top-k — for
-          members whose folds reference metadata, groups over the
-          decoded-bytes cap, and the ``wand="off"`` full-decode baseline.
-          The shared decode is pruned by the UNION of the member queries'
-          block masks (``_batch_masks``).
-        - **fallback**: members with positive metadata filters take the
-          exact single-query path (their candidates come from doc_dict, not
-          postings).
+        - **group-eval** (postings-only members, clean or dirty index):
+          each connected component of queries sharing terms becomes ONE
+          identity-routed shuffle partition of posting blobs, evaluated
+          entirely executor-side (``group_eval.evaluate_group``: tombstone
+          drop, local rank-safe block pruning, the oracle's NumPy fold,
+          exact top-k) — k rows per query come back, no per-doc pivot.
+        - **one by one** (``_search_one``, the route ``search`` takes): the
+          members group-eval does not take — folds that reference metadata
+          (positive filters source candidates from doc_dict, not postings),
+          members of groups over the decoded-bytes cap, and every member of
+          a ``wand="off"`` batch (the full-decode baseline).
 
-        Returns (query_id, doc_id, score, repo, path, commit, lang), top-k
-        per query by (score desc, doc_id asc).
+        ``last_group_eval`` describes the batch's group-eval route (None
+        when no group took it). Returns (query_id, doc_id, score, repo,
+        path, commit, lang), top-k per query by (score desc, doc_id asc).
         """
         # Phase timings for the scaling decomposition (BENCH/BASELINE.md):
-        # prep = parse + bloom gates + df lookup; mask = _batch_masks θ
-        # probes; plan = plan construction after masks. All DRIVER-side
-        # constants — the distributed job itself is timed by the caller.
+        # prep = parse + bloom gates + df lookup; plan = plan construction
+        # after that. Both DRIVER-side constants — the distributed job
+        # itself is timed by the caller.
+        _check_wand(wand)
         t_start = time.time()
-        self.last_batch_timings = {"prep_sec": 0.0, "mask_sec": 0.0, "plan_sec": 0.0}
-        self.last_group_eval = None
+        self.last_batch_timings = {"prep_sec": 0.0, "plan_sec": 0.0}
         self.release_cache()
         parsed: dict[str, Query] = {
             qid: (parse_query(q) if isinstance(q, str) else q) for qid, q in queries.items()
         }
         batched: dict[str, Query] = {}
-        fallback: dict[str, Query] = {}
+        one_by_one: dict[str, Query] = {}
         for qid, q in parsed.items():
             if self._bloom_match_score(q.root, self.global_bloom) == 0:
                 continue
@@ -477,9 +428,9 @@ class SearchEngine:
             if q.positive_terms() and not q.positive_filters():
                 batched[qid] = q
             elif q.positive_filters():
-                fallback[qid] = q
+                one_by_one[qid] = q
 
-        parts: list[DataFrame] = []
+        ge_groups: list[list[tuple[str, Query]]] = []
         if batched:
             union_terms: list[str] = list(
                 dict.fromkeys(t for q in batched.values() for t in q.terms())
@@ -505,21 +456,19 @@ class SearchEngine:
                     )
                 if df_map:
                     self.last_batch_timings["prep_sec"] = time.time() - t_start
-                    ge_groups, pivot_members = self._route_batch_members(
-                        batched, df_map, wand
-                    )
-                    if ge_groups:
-                        parts.append(self._search_many_groups(ge_groups, df_map, k))
-                    if pivot_members:
-                        part = self._search_many_pivot(pivot_members, df_map, k, wand)
-                        if part is not None:
-                            parts.append(part)
-        for qid, q in fallback.items():
-            parts.append(
-                self._search_one(q, k, wand).select(
-                    F.lit(qid).alias("query_id"), "doc_id", "score"
-                )
+                    ge_groups, rest = self._route_batch_members(batched, df_map, wand)
+                    one_by_one.update(rest)
+        parts: list[DataFrame] = [
+            self._search_one(q, k, wand).select(
+                F.lit(qid).alias("query_id"), "doc_id", "score"
             )
+            for qid, q in one_by_one.items()
+        ]
+        # a member routed here alone may fit group-eval on its own; the
+        # record describes the batch's groups only
+        self.last_group_eval = None
+        if ge_groups:
+            parts.append(self._search_many_groups(ge_groups, df_map, k))
         if not parts:
             return self.spark.createDataFrame([], "query_id string, " + RESULT_SCHEMA)
         topk = parts[0]
@@ -527,9 +476,7 @@ class SearchEngine:
             topk = topk.unionByName(p)
         result = self._dict_join(topk, k, by=("query_id",))
         self.last_batch_timings["plan_sec"] = (
-            time.time() - t_start
-            - self.last_batch_timings["prep_sec"]
-            - self.last_batch_timings["mask_sec"]
+            time.time() - t_start - self.last_batch_timings["prep_sec"]
         )
         return result
 
@@ -537,23 +484,23 @@ class SearchEngine:
     def _route_batch_members(
         self, batched: dict[str, Query], df_map: dict[str, int], wand: str
     ) -> tuple[list[list[tuple[str, Query]]], dict[str, Query]]:
-        """Split batched members (or ``search``'s one query) between the
-        executor-side group evaluation and the distributed pivot path.
-        Group-eval takes postings-only members (no metadata filter anywhere
-        in the fold — group partitions carry no doc metadata), on a clean
-        index and on a dirty one alike (the task drops tombstoned ids and
-        skips block-max pruning while the bounds are stale — ``df_map``
-        here is the STORED df, used only for the size estimates, which it
-        can only overstate); members sharing terms form one group
-        (connected components) so a shared term's blobs ship and decode
-        once; groups whose estimated decoded volume exceeds
-        ``group_eval_max_bytes`` PER SHARD stay on the pivot path (its
+        """Split batched members (or ``search``'s one query) between
+        group-eval and the rest, which ``search_many`` answers one by one
+        through ``_search_one`` (the pivot). Group-eval takes postings-only
+        members (no metadata filter anywhere in the fold — group partitions
+        carry no doc metadata), on a clean index and on a dirty one alike
+        (the task drops tombstoned ids and skips block-max pruning while the
+        bounds are stale — ``df_map`` here is the STORED df, used only for
+        the size estimates, which it can only overstate); members sharing
+        terms form one group (connected components) so a shared term's
+        blobs ship and decode once; groups whose estimated decoded volume
+        exceeds ``group_eval_max_bytes`` PER SHARD go to the pivot (its
         per-doc parallelism is the right shape for monster terms) — with
         doc-range sharding enabled a group may exceed the cap by up to the
         shard budget (``_search_many_groups`` raises its shard count to
         keep each shard under the cap; routing and sharding use the same
-        budget so a group admitted here always fits). ``wand="off"``
-        forces the pivot full decode — the measured no-pruning baseline."""
+        budget so a group admitted here always fits). ``wand="off"`` sends
+        every member to the pivot full decode — the no-pruning baseline."""
         if wand == "off":
             return [], dict(batched)
         ge: dict[str, Query] = {}
@@ -820,112 +767,6 @@ class SearchEngine:
             )
         return out
 
-    def _search_many_pivot(
-        self,
-        members: dict[str, Query],
-        all_df_map: dict[str, int],
-        k: int,
-        wand: str,
-    ) -> DataFrame | None:
-        """Distributed batched evaluation (the per-doc-parallel shape):
-        shared scan + decode of the member terms, per-(doc, term) BM25
-        pivot, ALL per-query folds in ONE plan — each query contributes a
-        conditional score column (null when its gate/candidate pred fails),
-        exploded to (query_id, doc_id, score) rows, then a row_number window
-        takes top-k per query. Spark's InferWindowGroupLimit turns the
-        rn <= k filter into a map-side partial top-k BEFORE the query_id
-        shuffle, so this is one job with a k-row-per-query-per-partition
-        exchange — not Q sequential driver-launched top-k jobs (the per-job
-        overhead was the measured query-scaling bottleneck at local[1] vs
-        local[4], VERDICT r3 #4). Folds are SQL strings, ONE F.expr for the
-        whole batch — hundreds of py4j round-trips per query otherwise (the
-        plan_sec driver constant, BENCH/QUERY_DECOMP.json).
-
-        This path serves the members group-eval cannot: folds referencing
-        metadata (doc_dict join), groups over the decoded-bytes cap, and
-        the ``wand="off"`` full-decode baseline. ``all_df_map`` is the
-        stored df; on a tombstoned index the members' terms take their
-        live df from ``_live_df_map`` and dead ids leave by anti-join."""
-        terms = [
-            t
-            for t in dict.fromkeys(t for q in members.values() for t in q.terms())
-            if t in all_df_map
-        ]
-        if not terms:
-            return None
-        df_map = {t: all_df_map[t] for t in terms}
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        pruned = self.postings.filter(
-            F.col("tb").isin(buckets) & F.col("term").isin(terms)
-        )
-        if self.tombstones is not None:
-            df_map = self._live_df_map(pruned, df_map)
-        t_m = time.time()
-        block_masks = self._batch_masks(pruned, members, df_map, k, wand)
-        self.last_batch_timings["mask_sec"] += time.time() - t_m
-        decoded = self._decode(pruned, block_masks=block_masks)
-        scored, term_col = self._score(decoded, df_map)
-        needs_meta = any(_collect_filter_names(q.root) for q in members.values())
-        if needs_meta:
-            meta_cols = ["doc_id"] + [
-                c for c in ("lang", "repo") if c in self.doc_dict.columns
-            ]
-            scored = scored.join(self.doc_dict.select(*meta_cols), "doc_id", "left")
-        term_cols = {t: f"coalesce({c}, 0.0D)" for t, c in term_col.items()}
-        meta_exprs = {n: n for n in ("lang", "repo") if n in scored.columns}
-        entries = []
-        for qid, q in members.items():
-            gate, score = compile_fold(q.root, term_cols, meta_exprs)
-            pos_cols = [
-                term_col[t]
-                for t in dict.fromkeys(q.positive_terms())
-                if t in term_col
-            ]
-            if not pos_cols:
-                continue
-            pred = " OR ".join(f"({c} > 0.0D)" for c in pos_cols)
-            entries.append(
-                f"named_struct('query_id', {sql_quote(qid)}, "
-                f"'score', CASE WHEN ({pred}) AND {gate} "
-                f"THEN {score} END)"
-            )
-        if not entries:
-            return None
-        from pyspark.sql import Window
-
-        exploded = (
-            scored.select(
-                "doc_id",
-                F.expr(
-                    "explode(array({}))".format(", ".join(entries))
-                ).alias("qs"),
-            )
-            .select("doc_id", "qs.query_id", "qs.score")
-            .filter(F.col("score").isNotNull())
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            exploded.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "doc_id", "score")
-        )
-
-    # --------------------------------------------------------------------
-    def _collect_block_meta(self, pruned: DataFrame):
-        """Per-term block metadata for driver-side mask computation (one
-        KB-scale collect for the whole query/batch). None when a term is
-        split across rows (generations pending compaction — masks cannot be
-        keyed by term alone; callers fall back to the per-term greedy)."""
-        meta = pruned.select(
-            "term", "block_max", "block_firsts", "block_lasts"
-        ).collect()
-        by_term: dict[str, object] = {}
-        for r in meta:
-            if r["term"] in by_term:
-                return None
-            by_term[r["term"]] = r
-        return by_term
-
     def _max_live_doc_id(self) -> int:
         """Max doc id in the live dictionary (column-pruned aggregate, one
         KB-scale job, cached until ``refresh()``). -1 on an empty corpus."""
@@ -993,401 +834,35 @@ class SearchEngine:
             dead_by[r["term"]] = dead_by.get(r["term"], 0) + int(r["dead"])
         return {t: d - dead_by.get(t, 0) for t, d in df_map.items()}
 
-    def _fetch_blob_row(self, term: str):
-        """Partition/term-pruned driver fetch of one term's posting blobs."""
-        tb = term_bucket(term, self.n_buckets)
-        return (
-            self.postings.filter((F.col("tb") == tb) & (F.col("term") == term))
-            .select("ids", "tfs", "dls", "block_firsts", "block_lens",
-                    "ids_offs", "tfs_offs", "dls_offs")
-            .collect()[0]
-        )
-
-    def _prefetch_blobs(
-        self, pruned: DataFrame, terms: list[str], df_map: dict[str, int],
-        budget: int = 64 << 20,
-    ) -> dict[str, object]:
-        """ONE partition/term-pruned collect of many terms' posting blobs
-        (driver-side job latency is per-JOB, not per-row — a per-term fetch
-        loop serializes ~0.1 s jobs that no executor count can hide).
-        Largest-df terms drop out first when the ~6 B/posting estimate
-        exceeds the byte budget; misses simply fall back to the per-term
-        fetch in the θ probe."""
-        if not terms:
-            return {}
-        keep: list[str] = []
-        est = 0
-        for t in sorted(terms, key=lambda t: df_map[t]):
-            est += df_map[t] * 6
-            if est > budget:
-                break
-            keep.append(t)
-        if not keep:
-            return {}
-        tbs = sorted({term_bucket(t, self.n_buckets) for t in keep})
-        rows = (
-            self.postings.filter(F.col("tb").isin(tbs) & F.col("term").isin(keep))
-            .select("term", "ids", "tfs", "dls", "block_firsts", "block_lens",
-                    "ids_offs", "tfs_offs", "dls_offs")
-            .collect()
-        )
-        return {r["term"]: r for r in rows}
-
-    def _bmw_masks_meta(
-        self,
-        by_term: dict,
-        df_map: dict[str, int],
-        k: int,
-        blob_cache: dict,
-        probe_df_cap: int | None = None,
-    ) -> tuple[dict[str, np.ndarray], float] | None:
-        """Core of cross-term BMW over precollected block metadata; returns
-        ({term: keep-mask}, θ) or None. The blob cache is shared by the
-        caller so a batch of queries probing the same hot terms fetches each
-        blob once.
-
-        With ``probe_df_cap`` set (batched path), θ is established from
-        rare/mid-term blocks ONLY (df ≤ cap — small blobs, high actual
-        scores); hot blobs are never fetched. Rank-safe: θ over a SUBSET of
-        actual scores still lower-bounds the true k-th best. If the capped
-        probe cannot reach k distinct docs, returns None so the caller falls
-        back to the executor-side per-term greedy."""
-        if any(df_map[t] > self.bmw_max_term_df for t in df_map):
-            return None
-        k1, b, avgdl = BM25_K1, BM25_B, self.avgdl
-        idf = {t: bm25_idf(self.n_docs, df_map[t]) for t in by_term if t in df_map}
-        flat: list[tuple[float, str, int]] = []  # (ub, term, block_idx)
-        ub_by_term: dict[str, np.ndarray] = {}
-        for t in df_map:
-            r = by_term.get(t)
-            if r is None:
-                continue
-            ub = idf[t] * np.asarray(r["block_max"], dtype=np.float64)
-            ub_by_term[t] = ub
-            flat.extend((float(u), t, i) for i, u in enumerate(ub))
-        if not flat:
-            return None
-        flat.sort(key=lambda x: (-x[0], x[1], x[2]))
-        # establish θ: decode highest-ub blocks until k distinct docs seen.
-        # The probe loop is budgeted: a corpus matching fewer than k distinct
-        # docs would otherwise decode EVERY block of every term driver-side
-        # only to produce all-True masks (ADVICE r4)
-        best: dict[int, float] = {}
-        theta = -np.inf
-        probe_budget = max(64, 4 * k)
-        probes = 0
-        for ub, t, bi in flat:
-            if len(best) >= k:
-                break
-            if probe_df_cap is not None and df_map[t] > probe_df_cap:
-                continue  # batched path: hot blobs never ship driver-side
-            probes += 1
-            if probes > probe_budget:
-                return None
-            row = blob_cache.get(t)
-            if row is None:
-                row = self._fetch_blob_row(t)
-                blob_cache[t] = row
-            nb = len(row["block_lens"])
-            one = np.zeros(nb, dtype=bool)
-            one[bi] = True
-            ids, tfs, dls = decode_postings(
-                row["ids"], row["tfs"], row["dls"], list(row["block_firsts"]),
-                list(row["block_lens"]), one, list(row["ids_offs"]),
-                list(row["tfs_offs"]), list(row["dls_offs"]),
-            )
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            sat = tf / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-            sc = idf[t] * sat
-            for d, s in zip(ids.tolist(), sc.tolist()):
-                prev = best.get(d)
-                if prev is None or s > prev:
-                    best[d] = s
-        if len(best) >= k:
-            theta = float(np.sort(np.fromiter(best.values(), dtype=np.float64))[-k])
-        elif probe_df_cap is not None:
-            # capped probe could not establish θ (no/too-few rare matches):
-            # signal the caller to use the greedy fallback rather than
-            # shipping all-True masks
-            return None
-        return {t: ub >= theta for t, ub in ub_by_term.items()}, theta
-
     # --------------------------------------------------------------------
-    def _query_cand_ids(
-        self, q: Query, qdf: dict[str, int], blob_cache: dict | None = None
-    ) -> np.ndarray | None:
-        """Exact candidate-id superset for conjunctive / n-of-m shapes (the
-        driver half of the single-query pivot pruning in ``search``), or
-        None when the shape / df caps do not apply. An EMPTY array means no
-        doc can match the query at all.
-
-        Conjunctive: every match contains ALL required words, so the rarest
-        one's ids bound the candidates exactly. n-of-m (1 < n < m, VERDICT
-        r2 #9): a doc matching at least n of m' present children misses at
-        most m'-n of them, so it appears in at least one of ANY m'-n+1
-        children's postings — the m'-n+1 rarest children's id union is an
-        exact superset. Exact, not merely rank-safe: non-candidates cannot
-        pass the gate, and candidate rows survive in every term's list."""
-        req = required_words(q.root)
-        if req:
-            if req - set(qdf):
-                return np.empty(0, np.int64)  # a required word is unindexed
-            rare = min(req, key=lambda t: qdf[t])
-            if qdf[rare] <= self.and_prune_max_df:
-                return self._collect_term_ids(rare, blob_cache)
-            return None
-        cover = _nofm_cover_words(q.root, qdf)
-        if cover is not None:
-            if not cover:
-                return np.empty(0, np.int64)  # fewer than n children present
-            uniq_cover = list(dict.fromkeys(cover))
-            if sum(qdf[t] for t in uniq_cover) <= self.and_prune_max_df:
-                parts = [self._collect_term_ids(t, blob_cache) for t in uniq_cover]
-                return np.unique(np.concatenate(parts))
-        return None
-
-    def _cand_fetch_terms(self, q: Query, qdf: dict[str, int]) -> list[str]:
-        """The terms ``_query_cand_ids`` would fetch blobs for (its fetch
-        PLAN, same caps) — lets the batched path prefetch them in one job."""
-        req = required_words(q.root)
-        if req:
-            if req - set(qdf):
-                return []
-            rare = min(req, key=lambda t: qdf[t])
-            return [rare] if qdf[rare] <= self.and_prune_max_df else []
-        cover = _nofm_cover_words(q.root, qdf)
-        if cover:
-            uniq = list(dict.fromkeys(cover))
-            if sum(qdf[t] for t in uniq) <= self.and_prune_max_df:
-                return uniq
-        return []
-
-    def _batch_masks(
-        self,
-        pruned: DataFrame,
-        batched: dict[str, Query],
-        df_map: dict[str, int],
-        k: int,
-        wand: str,
-    ) -> dict[str, np.ndarray] | None:
-        """Per-term block keep-masks for the batched decode: the UNION of
-        each member query's single-query masks (VERDICT r4 'what's wrong'
-        #1 — the batched path used to decode the full union of all terms).
-        A block kept for ANY member is decoded. Per-term spec shipped to
-        the decode: ``(mask | None, greedy_k | None)`` — the executor ORs
-        the driver mask with its own per-term greedy selection; a term
-        absent from the spec decodes full.
-
-        Exactness per member is the same argument as the single-query
-        paths: BMW masks keep every top-k doc's best component (max-fold
-        members — extra unioned blocks only add lower components that the
-        max-fold ignores), the per-term greedy keeps ≥ k docs per term
-        (rank-safe for max-fold), and id-bound masks keep every block
-        containing a candidate (conjunctive / n-of-m members —
-        non-candidates cannot pass the fold gate, candidates keep complete
-        scores). ORing specs only ADDS blocks, so each member's guarantee
-        survives the union. Stats land in ``self.last_batch_prune``.
-        Returns None for full decode.
-
-        Cost control (the load-bearing part): driver-side mask latency is
-        CONSTANT in executor count, while the decode it saves shrinks — so
-        the driver fetches only rare/mid blobs (θ-probes ≤
-        ``batch_probe_max_df``, conjunctive rare/cover ≤
-        ``and_prune_max_df``) in ONE partition-pruned job; hot and uniform
-        max-fold members prune executor-side instead (per-term greedy, zero
-        driver bytes). Below ``batch_prune_min_postings`` total volume the
-        whole machinery disengages."""
-        if wand == "off" or not self.wand_safe:
-            return None
-        if sum(df_map.values()) < self.batch_prune_min_postings:
-            return None
-        probe_cap = self.batch_probe_max_df
-        # Classify members: driver-side masks only where a BOUNDED driver
-        # fetch buys the measured reductions (θ from rare blobs, conjunctive
-        # id-bounds); hot/uniform max-fold members prune EXECUTOR-side via
-        # the per-term greedy, whose cost shrinks with executors — driver
-        # latency must stay constant in batch heat or the batched path
-        # stops scaling (the r5 ladder regression this replaces).
-        bmw_q: list[tuple[Query, list[str], dict[str, int]]] = []
-        cand_q: list[tuple[Query, list[str], dict[str, int]]] = []
-        greedy_terms: set[str] = set()
-        full_terms: set[str] = set()
-        for q in batched.values():
-            qterms = [t for t in dict.fromkeys(q.terms()) if t in df_map]
-            if not qterms:
-                continue
-            qdf = {t: df_map[t] for t in qterms}
-            if is_max_fold(q.root):
-                if any(d <= probe_cap for d in qdf.values()) and all(
-                    d <= self.bmw_max_term_df for d in qdf.values()
-                ):
-                    bmw_q.append((q, qterms, qdf))
-                else:
-                    greedy_terms.update(qterms)
-            elif len(qdf) > 1:
-                cand_q.append((q, qterms, qdf))
-            else:
-                # single positive term under a NOT/filter gate: greedy is
-                # not rank-safe (excluded docs may occupy the top-k)
-                full_terms.update(qterms)
-        by_term = self._collect_block_meta(pruned) if (bmw_q or cand_q) else None
-        if by_term is None:
-            # split-row terms (or no member wants driver masks):
-            # max-fold members degrade to the executor greedy, conjunctive
-            # members to full decode
-            for _, qterms, _qdf in bmw_q:
-                greedy_terms.update(qterms)
-            for _, qterms, _qdf in cand_q:
-                full_terms.update(qterms)
-            bmw_q, cand_q = [], []
-        # ONE bounded prefetch job: θ-probe blobs (df ≤ probe_cap) plus the
-        # conjunctive rare/cover blobs (_query_cand_ids' own fetch plan)
-        want: set[str] = set()
-        for q, qterms, qdf in bmw_q:
-            want.update(t for t in qterms if qdf[t] <= probe_cap)
-        for q, qterms, qdf in cand_q:
-            want.update(self._cand_fetch_terms(q, qdf))
-        blob_cache: dict[str, object] = self._prefetch_blobs(
-            pruned, sorted(want), df_map
-        )
-        masks: dict[str, np.ndarray] = {}
-
-        def _or(t: str, m: np.ndarray) -> None:
-            masks[t] = (masks[t] | m) if t in masks else m
-
-        for q, qterms, qdf in bmw_q:
-            out = self._bmw_masks_meta(
-                by_term, qdf, k, blob_cache, probe_df_cap=probe_cap
-            )
-            if out is None:
-                greedy_terms.update(qterms)  # θ not establishable from rare blobs
-            else:
-                for t, m in out[0].items():
-                    _or(t, m)
-        for q, qterms, qdf in cand_q:
-            cand = self._query_cand_ids(q, qdf, blob_cache)
-            if cand is None:
-                full_terms.update(qterms)
-            else:
-                # empty cand → all-False masks: no doc can match the member
-                for t in qterms:
-                    r = by_term.get(t)
-                    if r is None:
-                        # stale df_cache: the term is cached but its posting
-                        # rows are gone (external compact without refresh());
-                        # it has nothing to decode — contributes empty rather
-                        # than KeyError-ing the whole batch (engine contract)
-                        continue
-                    _or(t, _select_blocks_intersect(r, cand))
-        # merge into per-term decode specs; a full-decode need overrides
-        spec: dict[str, tuple[np.ndarray | None, int | None]] = {}
-        for t in set(masks) | greedy_terms:
-            if t in full_terms:
-                continue
-            spec[t] = (masks.get(t), k if t in greedy_terms else None)
-        total = sum(int(m.size) for m, gk in spec.values() if m is not None and gk is None)
-        kept = sum(int(m.sum()) for m, gk in spec.values() if m is not None and gk is None)
-        self.last_batch_prune = {
-            "blocks_total": total,
-            "blocks_kept": kept,
-            "greedy_terms": sum(1 for _m, gk in spec.values() if gk is not None),
-            "full_terms": len(full_terms),
-            "terms": len(df_map),
-        }
-        if not spec:
-            return None
-        return spec
-
-    # --------------------------------------------------------------------
-    def _collect_term_ids(self, term: str, blob_cache: dict | None = None) -> np.ndarray:
-        """Driver-side decode of ONE term's posting ids (for conjunctive
-        pruning): fetch the term's compressed blobs (partition-pruned,
-        bounded by its df — or straight from a batch prefetch cache) and
-        decode locally. Returns sorted int64 ids."""
-        if blob_cache is not None and term in blob_cache:
-            rows = [blob_cache[term]]
-        else:
-            tb = term_bucket(term, self.n_buckets)
-            rows = (
-                self.postings.filter((F.col("tb") == tb) & (F.col("term") == term))
-                .select("ids", "tfs", "dls", "block_firsts", "block_lens",
-                        "ids_offs", "tfs_offs", "dls_offs")
-                .collect()
-            )
-        parts = [
-            decode_postings(
-                r["ids"], r["tfs"], r["dls"], list(r["block_firsts"]),
-                list(r["block_lens"]), None,
-                list(r["ids_offs"]), list(r["tfs_offs"]), list(r["dls_offs"]),
-            )[0]
-            for r in rows
-        ]
-        ids = np.concatenate(parts) if parts else np.empty(0, np.int64)
-        return np.sort(ids)
-
-    # --------------------------------------------------------------------
-    def _decode(
-        self,
-        pruned: DataFrame,
-        cand_ids: np.ndarray | None = None,
-        block_masks: dict[str, tuple[np.ndarray | None, int | None]] | None = None,
-    ) -> DataFrame:
+    def _decode(self, pruned: DataFrame, greedy_k: int | None = None) -> DataFrame:
         """Arrow-batched posting decode; the inner loop is NumPy over blocks.
-
-        With ``block_masks`` set (``_batch_masks``), each term decodes per
-        its ``(mask | None, greedy_k | None)`` spec: the executor ORs the
-        driver mask with its own per-term greedy block-max selection
-        (blocks visited in descending block-max order, skipped once >= k
-        docs with saturation >= the block's upper bound are known — rank-
-        safe for max-fold members, SURVEY.md §4 O12), so hot terms prune
-        without any driver-side blob fetch. A term without a spec decodes
-        full.
-
-        With ``cand_ids`` set (conjunctive pruning; exclusive with
-        ``block_masks``), a block is decoded only when its id range
-        [first_i, last_i] intersects the candidate set, and decoded rows
-        outside the set are dropped — exact, because every true match is a
-        candidate."""
+        Every block decodes, except that with ``greedy_k`` set (a max-fold
+        with exact block maxes) each term decodes only its greedy top-k
+        blocks, selected in the task: blocks are visited in descending
+        block-max order and skipped once >= k docs with saturation >= the
+        block's upper bound are known. Rank-safe under the max fold
+        (SURVEY.md §4 O12), and no bytes go through the driver. Tombstoned
+        ids leave by broadcast anti-join."""
         src = pruned.select(
-            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
-            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+            "term", "ids", "tfs", "dls", "block_firsts", "block_lens",
+            "ids_offs", "tfs_offs", "dls_offs", "block_max",
         )
         k1, b, avgdl = BM25_K1, BM25_B, self.avgdl
 
         def decode_map(batches):
-            cand = None if cand_ids is None else np.asarray(cand_ids, dtype=np.int64)
             for pdf in batches:
                 frames = []
                 for r in pdf.itertuples():  # one row per term — tiny row count
                     keep = None
-                    if block_masks is not None:
-                        # OR of both selections (adding blocks is always
-                        # rank-safe)
-                        keep, gk = block_masks.get(r.term, (None, None))
-                        if gk is not None:
-                            g = _select_blocks_topk(r, gk, k1, b, avgdl)
-                            keep = g if keep is None else (keep | g)
-                        if keep is not None and keep.all():
+                    if greedy_k is not None:
+                        keep = _select_blocks_topk(r, greedy_k, k1, b, avgdl)
+                        if keep.all():
                             keep = None  # full decode, skip the gather path
-                    elif cand is not None:
-                        keep = _select_blocks_intersect(r, cand)
                     ids, tfs, dls = decode_postings(
                         r.ids, r.tfs, r.dls, r.block_firsts, r.block_lens,
                         keep, r.ids_offs, r.tfs_offs, r.dls_offs,
                     )
-                    if cand is not None and ids.size:
-                        # guard the empty candidate set (stale df_cache or a
-                        # corrupt index could hand us one): cand[pos] on an
-                        # empty array would raise; the right answer is simply
-                        # "no rows survive" (ADVICE r2)
-                        if cand.size:
-                            pos = np.searchsorted(cand, ids)
-                            pos[pos == cand.size] = cand.size - 1
-                            m = cand[pos] == ids
-                            ids, tfs, dls = ids[m], tfs[m], dls[m]
-                        else:
-                            ids, tfs, dls = ids[:0], tfs[:0], dls[:0]
                     frames.append(
                         pd.DataFrame(
                             {
@@ -1533,6 +1008,11 @@ class SearchEngine:
         return out.coalesce(1).sortWithinPartitions(*order)
 
 
+def _check_wand(wand: str) -> None:
+    if wand not in ("auto", "off"):
+        raise ValueError(f"wand must be 'auto' or 'off', not {wand!r}")
+
+
 def _collect_filter_names(comp: QueryComp) -> set[str]:
     if isinstance(comp, Filter):
         return {comp.name}
@@ -1546,6 +1026,6 @@ def _collect_filter_names(comp: QueryComp) -> set[str]:
     return set()
 
 
-# _select_blocks_intersect / _select_blocks_topk / _nofm_cover_words live in
-# group_eval.py (shared by the executor-side group evaluation) and are
-# imported above under their historical names.
+# _select_blocks_topk / _nofm_cover_words live in group_eval.py (shared by
+# the executor-side group evaluation) and are imported above under their
+# historical names.

@@ -20,11 +20,11 @@ over the group's co-located posting lists.
 
 Scale shape: a "group" is a connected component of queries sharing terms —
 its work is bounded by the member terms' total posting volume, NOT the
-corpus. The engine routes groups whose estimated decoded bytes exceed
-``SPARK_GRAFT_GROUP_EVAL_MAX_BYTES`` to the distributed pivot path instead
-(monster terms at 10^12-doc scale must fan out per-doc; a batch of hundreds
-of bounded queries wants per-QUERY parallelism — both paths coexist and
-union).
+corpus. The engine answers the members of groups whose estimated decoded
+bytes exceed ``SPARK_GRAFT_GROUP_EVAL_MAX_BYTES`` one by one on the
+distributed pivot instead (monster terms at 10^12-doc scale must fan out
+per-doc; a batch of hundreds of bounded queries wants per-QUERY
+parallelism — both routes coexist and union).
 
 Float parity: identical op order as ``oracle.term_scores`` / ``_fold``
 (IEEE +,*,/ on float64, descending-order left-fold sums), idf from
@@ -40,8 +40,8 @@ live df is the count of surviving ids and the task calls the same
 only part of each posting list, so the driver ships its live df instead
 (``engine._live_df_map``).
 
-Rank-safety per member (same arguments as the driver-side mask union,
-engine._batch_masks):
+Rank-safety per member: each member's top-k equals the full-decode
+answer, for these reasons by shape:
 
 - dead ids (tombstones) are dropped from every decoded term before any
   candidate set, range clip or score is formed, so they never rank and
@@ -57,12 +57,17 @@ engine._batch_masks):
   an exact candidate superset, other terms keep exactly the blocks whose
   id range intersects it. Non-candidates cannot pass the gate; candidates
   keep complete per-term scores.
-- n-of-m members: pigeonhole — the (m'-n+1) rarest present children's id
-  union is an exact candidate superset (engine._nofm_cover_words).
+- n-of-m members: pigeonhole — a doc matching at least n of the m'
+  present children misses at most m'-n of them, so it appears in at
+  least one of ANY m'-n+1 children's postings; the m'-n+1 rarest
+  children's id union (``nofm_cover_words``) is an exact candidate
+  superset.
 - any other shape decodes its terms fully (exact by construction).
-- a term shared by several members decodes the UNION of their needs;
-  extra rows are true postings and can only move a member's computed
-  result toward the full-decode answer.
+- a term shared by several members decodes the UNION of their needs
+  (keep masks ORed). A mask only ADDS blocks for the other members, and
+  each member's fold reads only its own candidates (conjunctive, n-of-m)
+  or takes the max over components whose top-k blocks are kept
+  (max-fold), so every member's guarantee survives the union.
 
 Doc-range sharding (r5): a LARGE component's makespan would otherwise be
 one task — the measured query-scaling ceiling (BENCH/QUERY_DECOMP.json:

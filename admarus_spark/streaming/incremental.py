@@ -361,9 +361,9 @@ class IncrementalIndexer:
         # rows (generations) in its bucket; every reader handles that:
         # decode paths concatenate per-term rows (generations hold disjoint
         # doc ids, new > old), df is summed per term (engine._sum_df), and
-        # the driver-side BMW mask builder bails to the rank-safe per-row
-        # greedy on multi-row terms (_collect_block_meta). compact() folds
-        # generations back to one row per term and re-tightens the bounds.
+        # block pruning works per row (group_eval: one keep mask per
+        # generation). compact() folds generations back to one row per
+        # term and re-tightens the bounds.
         affected = sorted(
             r["tb"] for r in new_posts.select("tb").distinct().collect()
         )

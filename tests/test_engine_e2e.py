@@ -4,6 +4,7 @@ scores, bit-for-bit) to the NumPy oracle on the reference query set
 
 import shutil
 
+import numpy as np
 import pytest
 
 from admarus_spark.index import checkpoint as ckpt
@@ -448,7 +449,7 @@ def test_conjunctive_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     k, on the group-eval route and on the pivot: with the rarest required
     word bounding candidates, results equal the unpruned oracle
     bit-for-bit. Also covers required-word-missing early exit and the
-    pruning-disabled control."""
+    full-decode control (wand="off")."""
     queries = [
         "license AND parser",
         "license AND rareterm000063z",
@@ -458,18 +459,12 @@ def test_conjunctive_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     ]
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # the pivot's candidate pruning: group-eval cap and volume gate zeroed
+    # the pivot: group-eval cap zeroed
     monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
-    monkeypatch.setattr(docs_engine, "single_prune_min_postings", 0)
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # control: pruning off (threshold 0) gives identical results
-    old = docs_engine.and_prune_max_df
-    try:
-        docs_engine.and_prune_max_df = 0
-        run_parity(docs_engine, docs_oracle, queries)
-    finally:
-        docs_engine.and_prune_max_df = old
+    # control: the full decode gives identical results
+    run_parity(docs_engine, docs_oracle, queries, wand="off")
 
 
 def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
@@ -477,7 +472,7 @@ def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     rarest children) must be EXACT at any k, on the group-eval route and on
     the pivot, including with a hot child in the cover complement,
     unindexed children shrinking m', and the fewer-than-n-present early
-    exit."""
+    exit; the full decode (wand="off") is the control."""
     queries = [
         "2(parser, lexer, bloom)",
         "2(license, parser, bloom)",          # hot child pruned by rare cover
@@ -487,18 +482,12 @@ def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     ]
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # the pivot's candidate pruning: group-eval cap and volume gate zeroed
+    # the pivot: group-eval cap zeroed
     monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
-    monkeypatch.setattr(docs_engine, "single_prune_min_postings", 0)
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # control: pruning off gives identical results
-    old = docs_engine.and_prune_max_df
-    try:
-        docs_engine.and_prune_max_df = 0
-        run_parity(docs_engine, docs_oracle, queries)
-    finally:
-        docs_engine.and_prune_max_df = old
+    # control: the full decode gives identical results
+    run_parity(docs_engine, docs_oracle, queries, wand="off")
 
 
 def test_nofm_cover_selection():
@@ -520,43 +509,69 @@ def test_nofm_cover_selection():
     assert _nofm_cover_words(parse_query("2(aaa, bbb, NOT ccc)").root, df_map) is None
 
 
-def test_nofm_pruning_reduces_decode(docs_engine):
-    """A hot term's decode must shrink when candidates come from the rare
-    cover of a 2-of-3 query (the measured win recorded in BENCH/PLANS.md)."""
-    import numpy as np
+def _term_rows(eng, term):
+    """The term's posting rows (itertuples of the blob columns)."""
     from pyspark.sql import functions as F
 
-    from admarus_spark.murmur import term_bucket
+    return list(
+        eng.postings.filter(F.col("term") == term)
+        .select(
+            "ids", "tfs", "dls", "block_firsts", "block_lasts", "block_lens",
+            "ids_offs", "tfs_offs", "dls_offs",
+        )
+        .toPandas()
+        .itertuples()
+    )
 
+
+def _decode_ids(r, keep=None):
+    from admarus_spark.index.codec import decode_postings
+
+    return decode_postings(
+        r.ids, r.tfs, r.dls, r.block_firsts, r.block_lens,
+        keep, r.ids_offs, r.tfs_offs, r.dls_offs,
+    )[0]
+
+
+def _term_ids(eng, term):
+    return np.sort(np.concatenate([_decode_ids(r) for r in _term_rows(eng, term)]))
+
+
+def _license_decodes(eng, cand):
+    """Ids of the hot term 'license' decoded in full, and the rows left when
+    only the blocks whose id range meets the sorted candidate array decode
+    and only candidate ids are kept (what group-eval's fold reads)."""
+    from admarus_spark.search.group_eval import select_blocks_intersect
+
+    (r,) = _term_rows(eng, "license")
+    kept = _decode_ids(r, select_blocks_intersect(r, cand))
+    return _decode_ids(r), kept[np.isin(kept, cand)]
+
+
+def test_nofm_pruning_reduces_decode(docs_engine):
+    """A hot term's decode must shrink when candidates come from the rare
+    cover of a 2-of-3 query (the measured win recorded in BENCH/PLANS.md),
+    and keep every candidate it holds."""
     eng = docs_engine
     cover = np.unique(
-        np.concatenate(
-            [eng._collect_term_ids("parser"), eng._collect_term_ids("bloom")]
-        )
+        np.concatenate([_term_ids(eng, "parser"), _term_ids(eng, "bloom")])
     )
-    tb = term_bucket("license", eng.n_buckets)
-    pruned = eng.postings.filter((F.col("tb") == tb) & (F.col("term") == "license"))
-    full = eng._decode(pruned).count()
-    cut = eng._decode(pruned, cover).count()
-    assert cut < full
+    full, cut = _license_decodes(eng, cover)
+    assert cut.size < full.size
+    assert set(np.intersect1d(full, cover)) <= set(cut)
 
 
 def test_conjunctive_pruning_reduces_decode(docs_engine):
     """The pruned decode must emit strictly fewer rows for a hot term when
-    candidates come from a rare conjunct."""
-    from pyspark.sql import functions as F
-
+    candidates come from a rare conjunct, and keep every candidate it
+    holds."""
     eng = docs_engine
-    rare_ids = eng._collect_term_ids("rareterm000063z")
+    rare_ids = _term_ids(eng, "rareterm000063z")
     assert rare_ids.size >= 1
-    tb = __import__("admarus_spark.murmur", fromlist=["term_bucket"]).term_bucket(
-        "license", eng.n_buckets
-    )
-    pruned = eng.postings.filter((F.col("tb") == tb) & (F.col("term") == "license"))
-    full = eng._decode(pruned).count()
-    cut = eng._decode(pruned, rare_ids).count()
-    assert cut < full
-    assert cut == rare_ids.size or cut <= rare_ids.size  # only candidate rows
+    full, cut = _license_decodes(eng, rare_ids)
+    assert cut.size < full.size
+    assert cut.size <= rare_ids.size  # only candidate rows
+    assert set(np.intersect1d(full, rare_ids)) <= set(cut)
 
 
 def test_single_query_routes_to_group_eval(docs_engine, docs_oracle):
@@ -581,7 +596,13 @@ def test_single_query_routes_to_group_eval(docs_engine, docs_oracle):
 def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch):
     """Metadata folds, k=None, wand="off" and a zero group-eval byte cap
     keep the pivot (last_group_eval is None), with oracle-exact results;
-    capped max-folds keep their executor-side block pruning."""
+    capped max-folds keep their executor-side block pruning. A wand value
+    other than "auto" or "off" raises."""
+    for bad in ("on", "of", ""):
+        with pytest.raises(ValueError):
+            docs_engine.search("license", 10, wand=bad)
+        with pytest.raises(ValueError):
+            docs_engine.search_many({"q": "license"}, 10, wand=bad)
 
     def check(eng, q, k, wand="auto"):
         got = [(r["doc_id"], r["score"]) for r in eng.search(q, k, wand=wand).collect()]
@@ -601,8 +622,8 @@ def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch)
     # only its greedy top-k blocks, fewer rows than the full decode
     decode, rows = capped._decode, []
 
-    def counting(pruned, cand_ids=None, block_masks=None):
-        out = decode(pruned, cand_ids, block_masks)
+    def counting(pruned, greedy_k=None):
+        out = decode(pruned, greedy_k)
         rows.append((out.count(), decode(pruned).count()))
         return out
 
@@ -764,44 +785,40 @@ def test_close_releases_pins(spark, movies_engine, tmp_path):
 def test_pivot_missing_required_word_skips_decode(docs_engine, monkeypatch):
     """A metadata-filtered query whose required word is not indexed (here:
     every bloom probe answers "maybe", as on a false positive) returns
-    nothing before any decode, whatever the small-volume gate says."""
+    nothing before any decode."""
     from admarus_spark.search import engine as engine_mod
 
     monkeypatch.setattr(engine_mod, "filter_get", lambda bloom, word: True)
     calls = []
     monkeypatch.setattr(docs_engine, "_decode", lambda *a, **kw: calls.append(a))
-    for gate in (1 << 60, 0):
-        monkeypatch.setattr(docs_engine, "single_prune_min_postings", gate)
-        got = docs_engine.search("lang=python AND bloom AND nosuchwordzz", 10).collect()
-        assert got == [] and docs_engine.last_group_eval is None
+    got = docs_engine.search("lang=python AND bloom AND nosuchwordzz", 10).collect()
+    assert got == [] and docs_engine.last_group_eval is None
     assert not calls
 
 
 def test_small_volume_gate_skips_driver_pruning(docs_engine, docs_oracle, monkeypatch):
-    """r6: on the pivot, under single_prune_min_postings the multi-term
-    shapes take the full decode (no rare-id fetch) with results still
-    exact; with the gate at zero the candidate fetch runs. The group-eval
-    cap is zeroed to keep these queries on the pivot."""
+    """On the pivot (group-eval cap zeroed) each multi-term shape takes one
+    plain ``_decode``, with no driver-side candidate fetch; only the
+    max-fold carries the executor greedy. Results stay oracle-exact."""
     eng = docs_engine
     calls = []
-    fetch = eng._query_cand_ids
+    decode = eng._decode
 
-    def counting(q, qdf, blob_cache=None):
-        calls.append(q)
-        return fetch(q, qdf, blob_cache)
+    def counting(pruned, greedy_k=None):
+        calls.append(greedy_k)
+        return decode(pruned, greedy_k)
 
-    monkeypatch.setattr(eng, "_query_cand_ids", counting)
+    monkeypatch.setattr(eng, "_decode", counting)
     monkeypatch.setattr(eng, "group_eval_max_bytes", 0)
-    for gate, fetches in ((1 << 60, False), (0, True)):
-        monkeypatch.setattr(eng, "single_prune_min_postings", gate)
+    for q, gk in (
+        ("parser lexer bloom", 5),
+        ("license AND parser", None),
+        ("2(parser, lexer, bloom)", None),
+    ):
         calls.clear()
-        run_parity(
-            eng, docs_oracle,
-            ["parser lexer bloom", "license AND parser", "2(parser, lexer, bloom)"],
-            k=5,
-        )
+        run_parity(eng, docs_oracle, [q], k=5)
         assert eng.last_group_eval is None
-        assert bool(calls) == fetches, gate
+        assert calls == [gk], q
 
 
 def test_zero_term_corpus_builds_empty_index(spark, tmp_path):

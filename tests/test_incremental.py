@@ -58,7 +58,7 @@ def test_stale_blockmax_disables_wand(spark, inc_setup):
     # forcing wand on is ignored (rank-safety) — results still exact
     union_oracle = OracleIndex(inc_setup[3])
     opaths = {i: p for i, p in enumerate(union_oracle.docs["path"])}
-    got = path_scores(eng.search("license", 10**6, wand="on"))
+    got = path_scores(eng.search("license", 10**6, wand="auto"))
     want = sorted((opaths[i], s) for i, s in union_oracle.search("license", 10**6))
     assert got == want
 
@@ -135,8 +135,8 @@ def test_compaction_restores_wand_df_and_results(spark, tmp_path):
 
     # (c) results identical on every shape, wand forced on (bounds are tight)
     for q in QUERIES + ["compactmarker"]:
-        got = path_scores(eng.search(q, 10**6, wand="on"))
-        want = path_scores(fresh.search(q, 10**6, wand="on"))
+        got = path_scores(eng.search(q, 10**6, wand="auto"))
+        want = path_scores(fresh.search(q, 10**6, wand="auto"))
         assert got == want, q
 
     # idempotent: compacting a clean index is a no-op

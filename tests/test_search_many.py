@@ -35,23 +35,20 @@ def test_search_many_empty_batch(docs_engine):
 
 
 def test_search_many_forced_pruning_matches_single(docs_engine):
-    """With the posting-volume gate lowered, EVERY batched shape must still
-    match its sequential result while the union masks prune the decode."""
-    prev = docs_engine.batch_prune_min_postings
-    docs_engine.batch_prune_min_postings = 0
-    try:
-        batch = docs_engine.search_many(QUERIES, k=10).collect()
-    finally:
-        docs_engine.batch_prune_min_postings = prev
-    assert docs_engine.last_batch_prune is not None
-    by_q: dict[str, list] = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    for qid, q in QUERIES.items():
-        single = [
-            (r["doc_id"], r["score"]) for r in docs_engine.search(q, 10, wand="off").collect()
-        ]
-        assert by_q.get(qid, []) == single, qid
+    """At small k group-eval's greedy top-k block selection discards the
+    most blocks: EVERY batched shape must still match its sequential
+    full-decode result at k = 1 and 3."""
+    for k in (1, 3):
+        batch = docs_engine.search_many(QUERIES, k=k).collect()
+        by_q: dict[str, list] = {}
+        for r in batch:
+            by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for qid, q in QUERIES.items():
+            single = [
+                (r["doc_id"], r["score"])
+                for r in docs_engine.search(q, k, wand="off").collect()
+            ]
+            assert by_q.get(qid, []) == single, (qid, k)
 
 
 def test_search_many_wand_off_matches_single(docs_engine):
@@ -67,54 +64,85 @@ def test_search_many_wand_off_matches_single(docs_engine):
         assert by_q.get(qid, []) == single, qid
 
 
-def test_search_many_batched_decode_prunes(docs_engine):
-    """The PIVOT path's batched decode must skip blocks when member-query
-    masks apply: a hot∧rare conjunction bounds the hot term's decode to the
-    blocks holding the rare term's single posting (VERDICT r4 #2). The
-    group-eval cap is zeroed to force the pivot path (whose mask machinery
-    serves over-cap groups and metadata folds), and the posting-volume gate
-    is lowered for the fixture-sized corpus."""
-    prev = docs_engine.batch_prune_min_postings
-    prev_cap = docs_engine.group_eval_max_bytes
-    docs_engine.batch_prune_min_postings = 0
-    docs_engine.group_eval_max_bytes = 0
-    try:
-        got = docs_engine.search_many(
-            {"andrare": "license AND rareterm000063z"}, k=5
-        ).collect()
-    finally:
-        docs_engine.batch_prune_min_postings = prev
-        docs_engine.group_eval_max_bytes = prev_cap
-    st = docs_engine.last_batch_prune
-    assert st is not None
-    assert 0 < st["blocks_kept"] < st["blocks_total"]
-    single = [
-        (r["doc_id"], r["score"])
-        for r in docs_engine.search("license AND rareterm000063z", 5, wand="off").collect()
-    ]
-    assert [(r["doc_id"], r["score"]) for r in got] == single
+def _pivot_decodes(eng, monkeypatch) -> list:
+    """Zero the group-eval cap and record the ``greedy_k`` of every pivot
+    ``_decode`` call."""
+    monkeypatch.setattr(eng, "group_eval_max_bytes", 0)
+    decode, calls = eng._decode, []
+
+    def counting(pruned, greedy_k=None):
+        calls.append(greedy_k)
+        return decode(pruned, greedy_k)
+
+    monkeypatch.setattr(eng, "_decode", counting)
+    return calls
 
 
-def test_search_many_greedy_fallback_matches_single(docs_engine):
-    """With the driver θ-probe disabled (batch_probe_max_df=0), every
-    max-fold member must fall to the EXECUTOR-side per-term greedy and still
-    match its sequential result — the zero-driver-cost path hot/uniform
-    batches take at scale."""
-    prev_gate, prev_cap, prev_ge = (
-        docs_engine.batch_prune_min_postings, docs_engine.batch_probe_max_df,
-        docs_engine.group_eval_max_bytes,
+def test_search_many_batched_decode_prunes(docs_engine, monkeypatch):
+    """Group-eval's in-task decode must skip blocks when a member's shape
+    bounds its candidates: a hot∧rare conjunction decodes the hot term only
+    in the blocks holding the rare term's postings (VERDICT r4 #2). The
+    group runs in the test process on the collected posting rows, with the
+    codec's decode wrapped to count ids per term."""
+    from pyspark.sql import functions as F
+
+    from admarus_spark.oracle import bm25_idf
+    from admarus_spark.query.parser import parse_query
+    from admarus_spark.search import group_eval
+
+    eng = docs_engine
+    q = "license AND rareterm000063z"
+    terms = ["license", "rareterm000063z"]
+    pdf = (
+        eng.postings.filter(F.col("term").isin(terms))
+        .select(
+            "term", "df", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+        )
+        .toPandas()
     )
-    docs_engine.batch_prune_min_postings = 0
-    docs_engine.batch_probe_max_df = 0
-    docs_engine.group_eval_max_bytes = 0
-    try:
-        batch = docs_engine.search_many(QUERIES, k=10).collect()
-    finally:
-        docs_engine.batch_prune_min_postings = prev_gate
-        docs_engine.batch_probe_max_df = prev_cap
-        docs_engine.group_eval_max_bytes = prev_ge
-    st = docs_engine.last_batch_prune
-    assert st is not None and st["greedy_terms"] > 0
+    rows: dict[str, list] = {}
+    for r in pdf.itertuples():
+        rows.setdefault(r.term, []).append(r)
+    df_map = {t: int(sum(r.df for r in rows[t])) for t in terms}
+    idf_map = {t: bm25_idf(eng.n_docs, df_map[t]) for t in terms}
+    term_of = {id(r.ids): t for t, rs in rows.items() for r in rs}
+    decoded: dict[str, int] = {}
+    decode = group_eval.decode_postings
+
+    def counting(ids, *a, **kw):
+        out = decode(ids, *a, **kw)
+        t = term_of[id(ids)]
+        decoded[t] = decoded.get(t, 0) + out[0].size
+        return out
+
+    monkeypatch.setattr(group_eval, "decode_postings", counting)
+    got = group_eval.evaluate_group(
+        [("q", parse_query(q))], rows, df_map, idf_map, 5, eng.avgdl
+    )
+    assert decoded["rareterm000063z"] == df_map["rareterm000063z"]
+    assert 0 < decoded["license"] < df_map["license"]
+    single = [(r["doc_id"], r["score"]) for r in eng.search(q, 5, wand="off").collect()]
+    assert single and [(d, s) for _q, d, s in got] == single
+
+
+def test_search_many_greedy_fallback_matches_single(docs_engine, monkeypatch):
+    """With the group-eval cap at zero every member takes the pivot one by
+    one: one ``_decode`` per member with postings to scan, the executor-side
+    per-term greedy (``greedy_k``) only for max-fold shapes, and results
+    equal to the sequential full decode."""
+    from admarus_spark.query.parser import parse_query
+    from admarus_spark.search.fold import is_max_fold
+
+    calls = _pivot_decodes(docs_engine, monkeypatch)
+    batch = docs_engine.search_many(QUERIES, k=10).collect()
+    # pure_meta has no term to decode; missing is bloom-gated out
+    decoding = [q for qid, q in QUERIES.items() if qid not in ("pure_meta", "missing")]
+    want = sorted(
+        (10 if is_max_fold(parse_query(q).root) else 0) for q in decoding
+    )
+    assert sorted(gk or 0 for gk in calls) == want
+    assert 10 in want and 0 in want
     by_q: dict[str, list] = {}
     for r in batch:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
@@ -125,27 +153,15 @@ def test_search_many_greedy_fallback_matches_single(docs_engine):
         assert by_q.get(qid, []) == single, qid
 
 
-def test_search_many_capped_probe_failure_degrades_to_greedy(docs_engine):
-    """probe cap of 1: only the df-1 rare term's block is probe-eligible, so
-    θ cannot reach k distinct docs — _bmw_masks_meta must return None and
-    the member must degrade to greedy, never ship all-True masks."""
-    prev_gate, prev_cap, prev_ge = (
-        docs_engine.batch_prune_min_postings, docs_engine.batch_probe_max_df,
-        docs_engine.group_eval_max_bytes,
-    )
-    docs_engine.batch_prune_min_postings = 0
-    docs_engine.batch_probe_max_df = 1
-    docs_engine.group_eval_max_bytes = 0
-    try:
-        got = docs_engine.search_many(
-            {"skew": "license rareterm000063z"}, k=10
-        ).collect()
-    finally:
-        docs_engine.batch_prune_min_postings = prev_gate
-        docs_engine.batch_probe_max_df = prev_cap
-        docs_engine.group_eval_max_bytes = prev_ge
-    st = docs_engine.last_batch_prune
-    assert st is not None and st["greedy_terms"] > 0
+def test_search_many_capped_probe_failure_degrades_to_greedy(docs_engine, monkeypatch):
+    """A skewed max-fold (hot term OR rare term) on the pivot decodes with
+    the executor-side greedy in one ``_decode``, never through a driver
+    fetch, and matches the sequential full decode."""
+    calls = _pivot_decodes(docs_engine, monkeypatch)
+    got = docs_engine.search_many(
+        {"skew": "license rareterm000063z"}, k=10
+    ).collect()
+    assert calls == [10]
     single = [
         (r["doc_id"], r["score"])
         for r in docs_engine.search("license rareterm000063z", 10, wand="off").collect()
@@ -169,16 +185,28 @@ def test_group_eval_routing_stats(docs_engine):
     assert st["groups"] == 2
 
 
-def test_group_eval_zero_cap_routes_all_to_pivot(docs_engine):
-    """With the group byte cap at zero every group is 'over cap' and must
-    take the distributed pivot path — results identical."""
-    prev = docs_engine.group_eval_max_bytes
-    docs_engine.group_eval_max_bytes = 0
-    try:
-        batch = docs_engine.search_many(QUERIES, k=10).collect()
-    finally:
-        docs_engine.group_eval_max_bytes = prev
+def test_group_eval_zero_cap_routes_all_to_pivot(docs_engine, monkeypatch):
+    """With the group byte cap at zero every group is 'over cap': each
+    member that passes the bloom gate is answered one by one through
+    ``_search_one`` — results identical."""
+    from admarus_spark.query.parser import parse_query
+
+    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
+    one, calls = docs_engine._search_one, []
+
+    def counting(q, k, wand):
+        calls.append(q)
+        return one(q, k, wand)
+
+    monkeypatch.setattr(docs_engine, "_search_one", counting)
+    batch = docs_engine.search_many(QUERIES, k=10).collect()
+    monkeypatch.undo()
     assert docs_engine.last_group_eval is None
+    gated_in = [
+        q for q in QUERIES.values()
+        if docs_engine._bloom_match_score(parse_query(q).root, docs_engine.global_bloom)
+    ]
+    assert len(calls) == len(gated_in) == len(QUERIES) - 1
     by_q: dict[str, list] = {}
     for r in batch:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
