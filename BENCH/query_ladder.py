@@ -8,9 +8,9 @@ query-side change can be re-laddered in minutes without rebuilds. Per-cell
 MIN over rounds (one-sided host noise); every sample is committed, with the
 per-phase driver timings (``SearchEngine.last_batch_timings``: ``prep_sec``
 and ``plan_sec``) that separate the distributed job from the driver's
-planning constant. An ``auto`` cell's postings-only members take
-group-eval; a ``wand="off"`` cell runs one single-query pivot (full
-decode) per member, so its time grows with the batch size.
+planning constant. Every cell's members take group-eval; an ``auto``
+cell prunes blocks in the task, a ``wand="off"`` cell decodes every
+member term whole (the unpruned reference).
 
 Usage: python BENCH/query_ladder.py   (QL_ROUNDS=3 by default; resumes from
 /tmp/qdecomp_r5.jsonl if a prior run was interrupted)

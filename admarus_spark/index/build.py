@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE, FILTER_BITS
 from ..hashword import build_filter
+from ..oracle import META_COLUMNS
 from . import checkpoint as ckpt
 from .codec import decode_postings, encode_postings_many, merge_encoded_chunks
 
@@ -155,7 +156,7 @@ def _tokenize_tf_map(batches):
         )
 
 
-def meta_bloom_bytes(dd: DataFrame, names: tuple[str, ...] = ("lang", "repo")) -> tuple[bytes, int]:
+def meta_bloom_bytes(dd: DataFrame, names: tuple[str, ...] = META_COLUMNS) -> tuple[bytes, int]:
     """Metadata ``name=value`` bloom built DISTRIBUTED: distinct values stay
     on executors — each partition of the distinct stream folds its words into
     a partial bloom, and only the fixed-size partial filters (one per

@@ -11,6 +11,7 @@ AST-derived term extraction mirrors ``daemon/src/query/query.rs:73-107``:
   generation, ``daemon/src/query/matching.rs:70-84``),
 - ``terms`` — all words including those under NOT,
 - ``positive_filters`` — (name, value) pairs outside NOT subtrees,
+- ``filters`` — all (name, value) pairs including those under NOT,
 - ``weighted_terms`` — weight 1.0 at root divided by fan-out per level
   (``query.rs:91-98``), computed on ``clone_only_words`` (``query.rs:48-71``).
 """
@@ -79,6 +80,9 @@ class Query:
     def positive_filters(self) -> list[tuple[str, str]]:
         return _positive_filters(self.root)
 
+    def filters(self) -> list[tuple[str, str]]:
+        return _filters(self.root)
+
     def weighted_terms(self) -> list[tuple[str, float]]:
         only = clone_only_words(self.root)
         return _weighted_terms(only, 1.0) if only is not None else []
@@ -128,12 +132,28 @@ def _positive_filters(c: QueryComp) -> list[tuple[str, str]]:
     raise TypeError(type(c))
 
 
+def _filters(c: QueryComp) -> list[tuple[str, str]]:
+    if isinstance(c, Filter):
+        return [(c.name, c.value)]
+    if isinstance(c, Word):
+        return []
+    if isinstance(c, Not):
+        return _filters(c.comp)
+    if isinstance(c, NAmong):
+        out: list[tuple[str, str]] = []
+        for ch in c.among:
+            out.extend(_filters(ch))
+        return out
+    raise TypeError(type(c))
+
+
 def required_words(c: QueryComp) -> set[str]:
     """Words that EVERY matching doc must contain: a Word matches only docs
     holding it, and an NAmong with n == len(among) requires all children.
     Any other shape guarantees nothing. Drives conjunctive decode pruning
-    (engine._decode): candidates are bounded by the rarest required word's
-    postings — exact, since docs lacking it fail the fold gate."""
+    (group_eval.evaluate_group): candidates are bounded by the rarest
+    required word's postings — exact, since docs lacking it fail the fold
+    gate."""
     if isinstance(c, Word):
         return {c.word}
     if isinstance(c, NAmong) and c.n == len(c.among):

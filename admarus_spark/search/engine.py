@@ -3,34 +3,33 @@
 Query lifecycle (mirrors the reference's local search slice,
 ``/root/reference/daemon/src/api/local_search.rs:3-18`` →
 ``daemon/src/index/inner_im.rs:90-104``, re-expressed Spark-first —
-SURVEY.md §4 physical plan):
+SURVEY.md §4 physical plan). ``search`` is the one-member case of
+``search_many``; both take the same two steps:
 
 driver:  parse AST → bloom gate (M1, ``matching.rs:19-41``) → per-term
          bucket routing (term-hash partition pruning + per-bucket bloom)
+         → df lookup → driver-only exits (an unindexed required word, an
+         empty n-of-m cover, no positive indexed term and no positive
+         metadata filter): such a member returns empty with no Spark job
 stage A: scan postings WHERE tb IN (...) AND term IN (...)   [partition
-         pruning + parquet predicate pushdown]
-stage B-D, group-eval route (postings-only folds, finite k, clean or
-         dirty index): one executor task decodes the scanned blobs with
-         local rank-safe block pruning, drops tombstoned ids, folds in
-         NumPy and emits the top-k (group_eval.py)
-stage B-D, pivot route (metadata folds, k=None, wand="off", groups over
-         the decoded-bytes cap): decode every scanned block (Arrow-batched
-         mapInPandas, NumPy inside; a max-fold with exact block maxes
-         decodes each term's greedy top-k blocks) → tombstone anti-join →
-         per-doc AST fold compiled to Catalyst expressions (fold.py) →
-         global top-k: orderBy(score desc, doc_id asc).limit(k) →
-         TakeOrderedAndProject. ``search_many`` answers the members its
-         group-eval does not take one by one on this route.
+         pruning + parquet predicate pushdown], plus — only when a member
+         uses a metadata filter — the filter's live doc ids from the pinned
+         dictionary, keyed ``name=value``
+stage B-D: group-eval — one executor task per group of members (a
+         connected component of queries sharing terms; a group over the
+         per-task byte budget splits into doc-range shards) decodes the
+         scanned blobs with local rank-safe block pruning, drops tombstoned
+         ids, folds in NumPy (filters as membership tests) and emits the
+         top-k, or every match for ``k=None`` (group_eval.py)
 stage E: broadcast-join the k winners back to doc_dict for display fields;
          one task sorts them
 
 Per-term idf is ``oracle.bm25_idf`` over the live df, so engine and oracle
 share the exact same ln() bits (float-parity note in oracle.py). The driver
 computes it from collected (term, df) rows; while tombstones are pending,
-the stored df still counts dead generations, so the pivot and sharded
-group-eval correct it with one extra job (``_live_df_map``), and an
-unsharded group-eval task counts the live df itself from the ids it
-decodes.
+the stored df still counts dead generations, so a sharded group takes its
+live df from one extra job (``_live_df_map``), and an unsharded task counts
+the live df itself from the ids it decodes.
 """
 
 from __future__ import annotations
@@ -48,19 +47,16 @@ from ..hashword import filter_get
 from ..index.build import IndexPaths, check_layout, heal_swap
 from ..index.codec import decode_postings
 from ..murmur import identity_partition_keys, term_bucket
-from ..oracle import bm25_idf
+from ..oracle import META_COLUMNS, bm25_idf
 from ..query.ast import Filter, NAmong, Not, Query, QueryComp, Word, required_words
 from ..query.parser import parse_query
-from .fold import compile_fold, dlit, is_max_fold, sql_quote
 from .group_eval import (
-    dead_hits,
     evaluate_group,
+    filter_key,
     group_members,
-    nofm_cover_words as _nofm_cover_words,
-    select_blocks_topk as _select_blocks_topk,
+    in_sorted,
+    nofm_cover_words,
 )
-
-RESULT_SCHEMA = "doc_id long, score double, repo string, path string, commit string, lang string"
 
 
 def _sum_df(rows) -> dict[str, int]:
@@ -115,9 +111,9 @@ class SearchEngine:
         # encoded with; stats drift (incremental updates) disables WAND
         self.wand_safe = float(stats["bm_avgdl"]) == self.avgdl
         # tombstones: stale generations of changed documents (incremental
-        # upsert). Dead ids are dropped from decoded postings BEFORE ranking
-        # (group-eval: in the task; pivot: broadcast anti-join) and
-        # anti-joined out of the dictionary; block-max skipping is disabled
+        # upsert). Dead ids are dropped from decoded postings in the task
+        # BEFORE ranking and anti-joined out of the dictionary (so filter
+        # ids, read from it, are live); block-max skipping is disabled
         # because the stored bounds may be dominated by dead docs (rank
         # safety). The set stays small relative to the corpus (compact()
         # clears it), so both stay shuffle-free.
@@ -136,22 +132,16 @@ class SearchEngine:
         # once at init so queries skip the per-query df-collect job; at
         # billion-term scale this stays lazy (per-query pruned collect).
         self.df_cache: dict[str, int] | None = None
-        # batched members whose group (connected component of queries
-        # sharing terms) decodes under this many estimated bytes evaluate
-        # entirely executor-side (group_eval.py: co-located blobs, local
-        # pruning, k rows out); members of larger groups take the per-doc
-        # pivot one by one — at 10^12-doc scale a monster term's postings
-        # must fan out per-doc, while a batch of bounded queries wants
-        # per-QUERY parallelism. ~24 bytes per decoded posting (3 int64
-        # arrays).
+        # per-task memory budget of group-eval: a group (connected
+        # component of queries sharing terms) splits into at least
+        # ceil(estimated decoded bytes / budget) doc-range shards, so each
+        # task decodes about this much at most. ~24 bytes per decoded
+        # posting (3 int64 arrays).
         self.group_eval_max_bytes = int(
             os.environ.get("SPARK_GRAFT_GROUP_EVAL_MAX_BYTES", 1 << 30)
         )
-        # persisted intermediates from the previous search_many/_finish call;
-        # released at the next query (or via release_cache) so a long-lived
-        # serving session does not leak executor cache (ADVICE r1).
-        self._live_cache: list[DataFrame] = []
-        # the last call's group-eval routing (search or search_many)
+        # the last call's group-eval plan (search or search_many); None
+        # when no Spark evaluation ran
         self.last_group_eval: dict | None = None
         # tombstoned ids pinned driver-side, lazily (bounded by design: the
         # set holds changed-doc old generations + crash-recovery orphans and
@@ -201,11 +191,10 @@ class SearchEngine:
         self.__init__(self.spark, self.paths.index_dir)
 
     def close(self) -> None:
-        """Release everything this engine pins: persisted query
-        intermediates, the doc_dict pin, and the driver-side caches (dead
-        ids, df cache, per-bucket blooms). Idempotent. A closed engine still
-        answers queries, without the doc_dict pin and the df cache."""
-        self.release_cache()
+        """Release everything this engine pins: the doc_dict pin and the
+        driver-side caches (dead ids, df cache, per-bucket blooms).
+        Idempotent. A closed engine still answers queries, without the
+        doc_dict pin and the df cache."""
         if self._dd_persisted:
             self.doc_dict.unpersist()
             self._dd_persisted = False
@@ -228,7 +217,7 @@ class SearchEngine:
         if isinstance(comp, Word):
             return 1 if filter_get(filt, comp.word) else 0
         if isinstance(comp, Filter):
-            return 1 if filter_get(filt, f"{comp.name}={comp.value}") else 0
+            return 1 if filter_get(filt, filter_key(comp.name, comp.value)) else 0
         if isinstance(comp, Not):
             if optimistic:
                 return 1
@@ -244,8 +233,14 @@ class SearchEngine:
             return total if matching >= comp.n else 0
         raise TypeError(type(comp))
 
-    def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+    def _empty_result(self, by: tuple[str, ...] = ()) -> DataFrame:
+        """The result columns with no rows. A zero limit plans as an empty
+        local relation, so collecting it runs no Spark job (a DataFrame
+        made from an empty Python list would run one)."""
+        return self.doc_dict.select(
+            *[F.lit("").alias(c) for c in by], "doc_id", F.lit(0.0).alias("score"),
+            "repo", "path", "commit", "lang",
+        ).limit(0)
 
     def _ensure_bucket_blooms(self, tbs: set[int]) -> None:
         """Lazily load the queried buckets' term blooms: ONE tb-pruned
@@ -266,110 +261,33 @@ class SearchEngine:
             self.bucket_blooms[int(r["tb"])] = np.frombuffer(r["filter"], dtype=np.uint8)
         self._absent_buckets.update(set(missing) - set(self.bucket_blooms))
 
-    def _track(self, df: DataFrame) -> DataFrame:
-        self._live_cache.append(df.persist())
-        return df
-
-    def release_cache(self) -> None:
-        """Unpersist intermediates cached by previous queries."""
-        for df in self._live_cache:
-            df.unpersist()
-        self._live_cache.clear()
-
     # --------------------------------------------------------------------
     def search(
         self, query: str | Query, k: int | None = 10, wand: str = "auto"
     ) -> DataFrame:
         """Top-k results: (doc_id, score, repo, path, commit, lang).
 
-        Two routes. Postings-only queries (no metadata filter anywhere in
-        the fold) with a finite ``k`` evaluate executor-side through
-        group-eval — ``search_many``'s one-member case
-        (``_search_many_groups``): decode, tombstone drop, fold and top-k
-        run next to the postings and k rows come back, on a clean index and
-        on one with pending tombstones or a drifted avgdl alike. The pivot
-        serves the rest: metadata folds, ``k=None``, groups over the
-        decoded-bytes cap (``group_eval_max_bytes``) and ``wand="off"``.
-        ``last_group_eval`` records the route (None = pivot).
+        ``search_many``'s one-member case: the same driver prep
+        (``_prep``), then group-eval (``_search_many_groups``) — decode,
+        tombstone drop, fold and top-k run next to the postings and k rows
+        come back, for every query shape, on a clean or dirty index.
+        ``last_group_eval`` records the plan (None when no Spark evaluation
+        ran).
 
         ``wand``: ``"auto"`` (default) prunes wherever it is rank-safe;
-        ``"off"`` takes the pivot with a full decode, the exactness
-        baseline. Any other value raises ``ValueError``.
+        ``"off"`` decodes every term whole, the exactness baseline. Any
+        other value raises ``ValueError``.
 
         ``k=None`` returns EVERY gated match ranked (no limit, no broadcast
         dictionary join) — the shape downstream group-bys aggregate directly
         instead of flowing through a huge top-k broadcast."""
         _check_wand(wand)
-        self.release_cache()
         self.last_group_eval = None
-        return self._search_one(query, k, wand)
-
-    def _search_one(self, query: str | Query, k: int | None, wand: str) -> DataFrame:
-        """``search`` without releasing cached intermediates or resetting
-        ``last_group_eval`` — ``search_many`` answers the members its
-        group-eval does not take here."""
-        if isinstance(query, str):
-            query = parse_query(query)
-        # driver-side bloom short-circuit (inner_im.rs:91-94)
-        if self._bloom_match_score(query.root, self.global_bloom) == 0:
+        members, df_map = self._prep({"": query})
+        if not members:
             return self._empty_result()
-
-        all_terms = list(dict.fromkeys(query.terms()))
-        pos_filters = query.positive_filters()
-
-        # route terms to buckets; per-bucket bloom drops absent terms early
-        self._ensure_bucket_blooms({term_bucket(t, self.n_buckets) for t in all_terms})
-        scan_terms: list[str] = []
-        buckets: set[int] = set()
-        for t in all_terms:
-            tb = term_bucket(t, self.n_buckets)
-            bloom = self.bucket_blooms.get(tb)
-            if bloom is not None and filter_get(bloom, t):
-                scan_terms.append(t)
-                buckets.add(tb)
-
-        has_filter_cands = any(n in self.doc_dict.columns for n, _ in pos_filters)
-        if not scan_terms and not has_filter_cands:
-            return self._empty_result()
-
-        scored: DataFrame | None = None
-        term_col: dict[str, str] = {}
-        if scan_terms:
-            pruned = self.postings.filter(
-                F.col("tb").isin(sorted(buckets)) & F.col("term").isin(scan_terms)
-            )
-            if self.df_cache is not None:
-                df_map = {t: self.df_cache[t] for t in scan_terms if t in self.df_cache}
-            else:
-                df_map = _sum_df(pruned.select("term", "df").collect())
-            if df_map and k is not None and k > 0:
-                groups, _pivot = self._route_batch_members({"": query}, df_map, wand)
-                if groups:
-                    topk = self._search_many_groups(groups, df_map, k)
-                    return self._dict_join(topk.select("doc_id", "score"), k)
-            if self.tombstones is not None and df_map:
-                df_map = self._live_df_map(pruned, df_map)
-            # pivot: a plain decode of the scanned terms. Two driver-only
-            # early exits skip it: an unindexed required word, and an n-of-m
-            # query with fewer than n children indexed. A max-fold with
-            # valid block maxes decodes each term's greedy top-k blocks in
-            # the task (rank-safe, zero driver bytes).
-            greedy_k = None
-            if wand != "off":
-                req = required_words(query.root)
-                if req - set(df_map):
-                    return self._empty_result()  # a required word is unindexed
-                if not req and _nofm_cover_words(query.root, df_map) == []:
-                    return self._empty_result()  # fewer than n children present
-                if is_max_fold(query.root) and self.wand_safe and k:
-                    greedy_k = k
-            if df_map:
-                decoded = self._decode(pruned, greedy_k)
-                scored, term_col = self._score(decoded, df_map)
-
-        if scored is None and not has_filter_cands:
-            return self._empty_result()
-        return self._finish(query, scored, term_col, pos_filters, k)
+        topk = self._search_many_groups(members, df_map, k, wand == "auto")
+        return self._dict_join(topk.select("doc_id", "score"), k)
 
     # --------------------------------------------------------------------
     def search_with_snippets(self, query, docs: DataFrame, k: int = 10) -> DataFrame:
@@ -384,27 +302,19 @@ class SearchEngine:
 
     # --------------------------------------------------------------------
     def search_many(
-        self, queries: dict[str, str | Query], k: int = 10, wand: str = "auto"
+        self, queries: dict[str, str | Query], k: int | None = 10, wand: str = "auto"
     ) -> DataFrame:
         """Batched execution: MANY queries, per-query results identical to
-        ``search`` (same floats, same order). Members take one of two routes
-        and union:
+        ``search`` (same floats, same order). Each connected component of
+        members sharing terms becomes ONE identity-routed shuffle partition
+        of posting blobs (plus the filter ids its members use), evaluated
+        entirely executor-side (``group_eval.evaluate_group``: tombstone
+        drop, local rank-safe block pruning, the oracle's NumPy fold, exact
+        top-k) — k rows per query come back.
 
-        - **group-eval** (postings-only members, clean or dirty index):
-          each connected component of queries sharing terms becomes ONE
-          identity-routed shuffle partition of posting blobs, evaluated
-          entirely executor-side (``group_eval.evaluate_group``: tombstone
-          drop, local rank-safe block pruning, the oracle's NumPy fold,
-          exact top-k) — k rows per query come back, no per-doc pivot.
-        - **one by one** (``_search_one``, the route ``search`` takes): the
-          members group-eval does not take — folds that reference metadata
-          (positive filters source candidates from doc_dict, not postings),
-          members of groups over the decoded-bytes cap, and every member of
-          a ``wand="off"`` batch (the full-decode baseline).
-
-        ``last_group_eval`` describes the batch's group-eval route (None
-        when no group took it). Returns (query_id, doc_id, score, repo,
-        path, commit, lang), top-k per query by (score desc, doc_id asc).
+        ``last_group_eval`` describes the batch's plan (None when no member
+        reached Spark). Returns (query_id, doc_id, score, repo, path,
+        commit, lang), top-k per query by (score desc, doc_id asc).
         """
         # Phase timings for the scaling decomposition (BENCH/BASELINE.md):
         # prep = parse + bloom gates + df lookup; plan = plan construction
@@ -413,67 +323,12 @@ class SearchEngine:
         _check_wand(wand)
         t_start = time.time()
         self.last_batch_timings = {"prep_sec": 0.0, "plan_sec": 0.0}
-        self.release_cache()
-        parsed: dict[str, Query] = {
-            qid: (parse_query(q) if isinstance(q, str) else q) for qid, q in queries.items()
-        }
-        batched: dict[str, Query] = {}
-        one_by_one: dict[str, Query] = {}
-        for qid, q in parsed.items():
-            if self._bloom_match_score(q.root, self.global_bloom) == 0:
-                continue
-            # any positive metadata filter can source candidates beyond the
-            # positive-term posting union (e.g. `lang=en / word`) -> take the
-            # exact single-query path for those
-            if q.positive_terms() and not q.positive_filters():
-                batched[qid] = q
-            elif q.positive_filters():
-                one_by_one[qid] = q
-
-        ge_groups: list[list[tuple[str, Query]]] = []
-        if batched:
-            union_terms: list[str] = list(
-                dict.fromkeys(t for q in batched.values() for t in q.terms())
-            )
-            self._ensure_bucket_blooms(
-                {term_bucket(t, self.n_buckets) for t in union_terms}
-            )
-            scan_terms = []
-            for t in union_terms:
-                tb = term_bucket(t, self.n_buckets)
-                bloom = self.bucket_blooms.get(tb)
-                if bloom is not None and filter_get(bloom, t):
-                    scan_terms.append(t)
-            if scan_terms:
-                if self.df_cache is not None:
-                    df_map = {t: self.df_cache[t] for t in scan_terms if t in self.df_cache}
-                else:
-                    buckets = sorted({term_bucket(t, self.n_buckets) for t in scan_terms})
-                    df_map = _sum_df(
-                        self.postings.filter(
-                            F.col("tb").isin(buckets) & F.col("term").isin(scan_terms)
-                        ).select("term", "df").collect()
-                    )
-                if df_map:
-                    self.last_batch_timings["prep_sec"] = time.time() - t_start
-                    ge_groups, rest = self._route_batch_members(batched, df_map, wand)
-                    one_by_one.update(rest)
-        parts: list[DataFrame] = [
-            self._search_one(q, k, wand).select(
-                F.lit(qid).alias("query_id"), "doc_id", "score"
-            )
-            for qid, q in one_by_one.items()
-        ]
-        # a member routed here alone may fit group-eval on its own; the
-        # record describes the batch's groups only
         self.last_group_eval = None
-        if ge_groups:
-            parts.append(self._search_many_groups(ge_groups, df_map, k))
-        if not parts:
-            return self.spark.createDataFrame([], "query_id string, " + RESULT_SCHEMA)
-        topk = parts[0]
-        for p in parts[1:]:
-            topk = topk.unionByName(p)
+        members, df_map = self._prep(queries)
+        self.last_batch_timings["prep_sec"] = time.time() - t_start
+        if not members:
+            return self._empty_result(by=("query_id",))
+        topk = self._search_many_groups(members, df_map, k, wand == "auto")
         result = self._dict_join(topk, k, by=("query_id",))
         self.last_batch_timings["plan_sec"] = (
             time.time() - t_start - self.last_batch_timings["prep_sec"]
@@ -481,82 +336,89 @@ class SearchEngine:
         return result
 
     # --------------------------------------------------------------------
-    def _route_batch_members(
-        self, batched: dict[str, Query], df_map: dict[str, int], wand: str
-    ) -> tuple[list[list[tuple[str, Query]]], dict[str, Query]]:
-        """Split batched members (or ``search``'s one query) between
-        group-eval and the rest, which ``search_many`` answers one by one
-        through ``_search_one`` (the pivot). Group-eval takes postings-only
-        members (no metadata filter anywhere in the fold — group partitions
-        carry no doc metadata), on a clean index and on a dirty one alike
-        (the task drops tombstoned ids and skips block-max pruning while the
-        bounds are stale — ``df_map`` here is the STORED df, used only for
-        the size estimates, which it can only overstate); members sharing
-        terms form one group (connected components) so a shared term's
-        blobs ship and decode once; groups whose estimated decoded volume
-        exceeds ``group_eval_max_bytes`` PER SHARD go to the pivot (its
-        per-doc parallelism is the right shape for monster terms) — with
-        doc-range sharding enabled a group may exceed the cap by up to the
-        shard budget (``_search_many_groups`` raises its shard count to
-        keep each shard under the cap; routing and sharding use the same
-        budget so a group admitted here always fits). ``wand="off"`` sends
-        every member to the pivot full decode — the no-pruning baseline."""
-        if wand == "off":
-            return [], dict(batched)
-        ge: dict[str, Query] = {}
-        pivot: dict[str, Query] = {}
-        for qid, q in batched.items():
-            if _collect_filter_names(q.root):
-                pivot[qid] = q
-            else:
-                ge[qid] = q
-        if not ge:
-            return [], pivot
-        groups: list[list[tuple[str, Query]]] = []
-        cap = self.group_eval_max_bytes * self._max_group_shards()
-        for comp in group_members(ge, df_map):
-            terms = {t for qid in comp for t in ge[qid].terms() if t in df_map}
-            est = sum(df_map[t] for t in terms) * 24
-            if est > cap:
-                for qid in comp:
-                    pivot[qid] = ge[qid]
-            else:
-                groups.append([(qid, ge[qid]) for qid in comp])
-        return groups, pivot
-
-    def _max_group_shards(self) -> int:
-        """Upper bound on doc-range shards per group-eval component —
-        scales the routing cap: a group is group-eval-eligible iff its
-        decoded estimate fits ``group_eval_max_bytes`` in SOME admissible
-        shard count."""
-        sh_mode = os.environ.get("SPARK_GRAFT_GROUP_EVAL_SHARDS", "auto")
-        if sh_mode == "off":
-            return 1
-        if sh_mode != "auto":
-            return max(1, int(sh_mode))
-        return max(1, self.spark.sparkContext.defaultParallelism)
+    def _prep(
+        self, queries: dict[str, str | Query]
+    ) -> tuple[dict[str, Query], dict[str, int]]:
+        """Driver prep shared by ``search`` and ``search_many``: parse,
+        global bloom gate, per-bucket blooms and the df lookup (the df
+        cache, or one tb/term-pruned collect). Returns the members that
+        can match anything, with the stored df of their indexed terms.
+        Three driver-only exits drop a member before any Spark job, each
+        exact: a required word is unindexed; an n-of-m query has fewer than
+        n children indexed; no positive term is indexed and no positive
+        filter names a metadata column (``oracle.META_COLUMNS``) — the
+        member has no candidate."""
+        parsed: dict[str, Query] = {}
+        for qid, q in queries.items():
+            q = parse_query(q) if isinstance(q, str) else q
+            # driver-side bloom short-circuit (inner_im.rs:91-94)
+            if self._bloom_match_score(q.root, self.global_bloom):
+                parsed[qid] = q
+        terms = list(dict.fromkeys(t for q in parsed.values() for t in q.terms()))
+        self._ensure_bucket_blooms({term_bucket(t, self.n_buckets) for t in terms})
+        scan_terms = []
+        for t in terms:
+            bloom = self.bucket_blooms.get(term_bucket(t, self.n_buckets))
+            if bloom is not None and filter_get(bloom, t):
+                scan_terms.append(t)
+        df_map: dict[str, int] = {}
+        if scan_terms and self.df_cache is not None:
+            df_map = {t: self.df_cache[t] for t in scan_terms if t in self.df_cache}
+        elif scan_terms:
+            buckets = sorted({term_bucket(t, self.n_buckets) for t in scan_terms})
+            df_map = _sum_df(
+                self.postings.filter(
+                    F.col("tb").isin(buckets) & F.col("term").isin(scan_terms)
+                ).select("term", "df").collect()
+            )
+        members: dict[str, Query] = {}
+        for qid, q in parsed.items():
+            req = required_words(q.root)
+            if req - set(df_map):
+                continue
+            if not req and nofm_cover_words(q.root, df_map) == []:
+                continue
+            if not any(t in df_map for t in q.positive_terms()) and not any(
+                n in META_COLUMNS for n, _v in q.positive_filters()
+            ):
+                continue
+            members[qid] = q
+        return members, df_map
 
     def _search_many_groups(
         self,
-        groups: list[list[tuple[str, Query]]],
+        members: dict[str, Query],
         df_map: dict[str, int],
-        k: int,
+        k: int | None,
+        prune: bool,
     ) -> DataFrame:
-        """Executor-side batched evaluation: ONE tb/term-pruned scan of the
-        member terms' posting blobs, identity-routed so each group's blobs
-        land whole and alone in their shuffle partition (same trick as the
-        build's raw-tf exchange, murmur.identity_partition_keys — no
-        sampling pass, no balls-in-bins collision), then one Arrow-batched
-        pass evaluates every member locally (group_eval.evaluate_group:
-        rank-safe block pruning with zero driver bytes, the oracle's NumPy
-        fold, exact top-k) and emits k rows per member. Driver cost is one
-        plan — no θ probes, no blob fetches, no per-term pivot columns.
+        """Executor-side evaluation, the engine's one route: ONE
+        tb/term-pruned scan of the member terms' posting blobs,
+        identity-routed so each group's blobs land whole and alone in their
+        shuffle partition (same trick as the build's raw-tf exchange,
+        murmur.identity_partition_keys — no sampling pass, no balls-in-bins
+        collision), then one Arrow-batched pass evaluates every member
+        locally (group_eval.evaluate_group: rank-safe block pruning with
+        zero driver bytes unless ``prune`` is False, the oracle's NumPy
+        fold, exact top-k) and emits k rows per member (every match for
+        ``k=None``). Driver cost is one plan — no θ probes, no blob
+        fetches.
 
-        Partition order IS launch order in Spark's scheduler, so tasks are
-        keyed largest-estimated-first (LPT): with G skewed groups over C
-        cores, an unlucky order that launches the biggest group last
-        inflates the makespan by up to its whole runtime — measured 40-query
-        ladder batches carry a 10× est spread across 17 components.
+        Groups are connected components of members sharing indexed terms
+        (``group_members``); filters do not join components. Partition
+        order IS launch order in Spark's scheduler, so tasks are keyed
+        largest-estimated-first (LPT): with G skewed groups over C cores,
+        an unlucky order that launches the biggest group last inflates the
+        makespan by up to its whole runtime — measured 40-query ladder
+        batches carry a 10× est spread across 17 components.
+
+        **Metadata filters.** Only when a member uses a ``name=value``
+        filter on a metadata column: the filter's live doc ids (from the
+        pinned, tombstone-free dictionary, collected into one array per
+        filter) are unioned into the same source under
+        ``filter_key(name, value)``, routed to every task whose members use
+        it and clipped to each shard's range. Postings-only batches keep the
+        plain postings plan.
 
         **Doc-range sharding** (r5): a group whose posting estimate exceeds
         an even per-core share splits into S shards by doc-id range — BM25
@@ -571,7 +433,10 @@ class SearchEngine:
         component-bound: pre-sharding, the 10-query ladder's largest
         component (~3.7M posting rows) WAS the local[4] makespan
         (BENCH/QUERY_DECOMP.json). ``SPARK_GRAFT_GROUP_EVAL_SHARDS``:
-        ``auto`` (default), ``off``, or a forced per-group shard count.
+        ``auto`` (default; at most one shard per core), ``off``, or a
+        forced per-group shard count. Whatever the mode, a group gets at
+        least ``ceil(est * 24 / group_eval_max_bytes)`` shards, so each
+        task decodes within the per-task byte budget.
 
         **Dirty index.** ``df_map`` is the stored df. With tombstones
         pending, the driver-pinned dead ids (``_dead_ids_np``) ship into
@@ -580,6 +445,10 @@ class SearchEngine:
         idf itself, while a sharded group — which sees only part of each
         posting list — gets its live df from the driver (``_live_df_map``).
         ``wand_safe`` ships too: stale block maxes turn the greedy off."""
+        groups = [
+            [(qid, members[qid]) for qid in comp]
+            for comp in group_members(members, df_map)
+        ]
 
         def _est(comp: list[tuple[str, Query]]) -> int:
             gterms = {t for _qid, q in comp for t in q.terms() if t in df_map}
@@ -598,23 +467,15 @@ class SearchEngine:
         else:
             # split any group bigger than an even per-core share, but never
             # below min_rows per shard (a shard's fixed cost — blob
-            # replication + task launch — must stay amortized); ALSO raise
-            # the count until each shard's decoded estimate fits the
-            # group-eval byte cap (routing admits over-cap groups on the
-            # promise that sharding divides them back under it)
+            # replication + task launch — must stay amortized)
             target = max(total_est / max(ncores, 1), float(min_rows))
-            cap_rows = max(self.group_eval_max_bytes // 24, 1)
             n_shards = [
-                min(
-                    max(
-                        1,
-                        -(-ests[id(c)] // int(target)),
-                        -(-ests[id(c)] // cap_rows),
-                    ),
-                    ncores,
-                )
-                for c in groups
+                min(max(1, -(-ests[id(c)] // int(target))), ncores) for c in groups
             ]
+        budget = max(self.group_eval_max_bytes, 1)
+        n_shards = [
+            max(s, -(-ests[id(c)] * 24 // budget)) for s, c in zip(n_shards, groups)
+        ]
         # shard ranges cover the TRUE live id span [0, max doc_id]: ids are
         # append-assigned and never reused, so n_docs (the live COUNT) can
         # be far below the max id after update()+compact() cycles — sizing
@@ -641,6 +502,7 @@ class SearchEngine:
         keys = identity_partition_keys(n)
         members_by_key: dict[int, tuple[list[tuple[str, Query]], int | None, int | None]] = {}
         term_keys: dict[str, list[int]] = {}
+        filter_keys: dict[tuple[str, str], list[int]] = {}
         key_range: dict[int, tuple[int, int]] = {}
         for kidx, (gi, lo, hi, _share) in enumerate(tasks):
             kkey = keys[kidx]
@@ -649,53 +511,81 @@ class SearchEngine:
                 key_range[kkey] = (lo, hi)
             for _qid, q in groups[gi]:
                 for t in q.terms():
-                    if t in df_map:
-                        term_keys.setdefault(t, [])
-                        if kkey not in term_keys[t]:
-                            term_keys[t].append(kkey)
-        terms = sorted(term_keys)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        pruned = self.postings.filter(
-            F.col("tb").isin(buckets) & F.col("term").isin(terms)
-        )
-        cols = [
-            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
-            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
-        ]
-        case = (
-            "CASE "
-            + " ".join(
-                "WHEN term = {} THEN array({})".format(
-                    sql_quote(t), ", ".join(str(kk_) for kk_ in term_keys[t])
-                )
-                for t in terms
-            )
-            + " END"
-        )
-        src = pruned.select(*cols).withColumn("gk", F.explode(F.expr(case)))
+                    if t in df_map and kkey not in term_keys.setdefault(t, []):
+                        term_keys[t].append(kkey)
+                for nv in q.filters():
+                    if nv[0] in META_COLUMNS and kkey not in filter_keys.setdefault(nv, []):
+                        filter_keys[nv].append(kkey)
+        # each task key's shard bounds, for dropping replicas whose whole
+        # row misses the shard's id range — per-block masks inside
+        # evaluate_group re-check exactly
+        lo_case = hi_case = None
         if key_range:
-            # drop replicas whose whole row misses the shard's id range —
-            # per-block masks inside evaluate_group re-check exactly
-            lo_case = (
+            lo_case, hi_case = (
                 "CASE "
-                + " ".join(f"WHEN gk = {kk_} THEN {r[0]}L" for kk_, r in key_range.items())
+                + " ".join(f"WHEN gk = {kk_} THEN {r[i]}L" for kk_, r in key_range.items())
                 + " ELSE NULL END"
+                for i in (0, 1)
             )
-            hi_case = (
+        terms = sorted(term_keys)
+        pruned = src = None
+        if terms:
+            buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+            pruned = self.postings.filter(
+                F.col("tb").isin(buckets) & F.col("term").isin(terms)
+            )
+            cols = [
+                "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+                "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+            ]
+            case = (
                 "CASE "
-                + " ".join(f"WHEN gk = {kk_} THEN {r[1]}L" for kk_, r in key_range.items())
-                + " ELSE NULL END"
-            )
-            src = src.filter(
-                F.expr(
-                    f"({lo_case}) IS NULL OR "
-                    f"(array_max(block_lasts) >= ({lo_case}) "
-                    f"AND array_min(block_firsts) < ({hi_case}))"
+                + " ".join(
+                    "WHEN term = {} THEN array({})".format(
+                        sql_quote(t), ", ".join(str(kk_) for kk_ in term_keys[t])
+                    )
+                    for t in terms
                 )
+                + " END"
             )
+            src = pruned.select(*cols).withColumn("gk", F.explode(F.expr(case)))
+            if key_range:
+                src = src.filter(
+                    F.expr(
+                        f"({lo_case}) IS NULL OR "
+                        f"(array_max(block_lasts) >= ({lo_case}) "
+                        f"AND array_min(block_firsts) < ({hi_case}))"
+                    )
+                )
+        if filter_keys:
+            # one row per (filter, task): the filter's live doc ids as one
+            # array (aggregated over one partition — no exchange), clipped
+            # to the task's shard range
+            fsrc = None
+            for (name, value), gks in filter_keys.items():
+                part = (
+                    self.doc_dict.where(F.col(name) == value)
+                    .coalesce(1)
+                    .agg(F.collect_list("doc_id").alias("fids"))
+                    .select(
+                        F.lit(filter_key(name, value)).alias("term"),
+                        "fids",
+                        F.explode(F.array(*[F.lit(g) for g in gks])).alias("gk"),
+                    )
+                )
+                fsrc = part if fsrc is None else fsrc.unionByName(part)
+            if key_range:
+                fsrc = fsrc.withColumn(
+                    "fids",
+                    F.expr(
+                        f"filter(fids, x -> ({lo_case}) IS NULL OR "
+                        f"(x >= ({lo_case}) AND x < ({hi_case})))"
+                    ),
+                )
+            src = fsrc if src is None else src.unionByName(fsrc, allowMissingColumns=True)
         # one unsharded task (a single query's usual plan): collapse the
-        # tb/term-pruned scan into one partition instead — no exchange, so
-        # no shuffle job ahead of the evaluation
+        # scan into one partition instead — no exchange, so no shuffle job
+        # ahead of the evaluation
         src = src.coalesce(1) if n == 1 else src.repartition(n, "gk")
         idf_terms, live_df, dead = terms, df_map, None
         if self.tombstones is not None:
@@ -720,19 +610,24 @@ class SearchEngine:
         avgdl, kk, n_docs, bounds_valid = self.avgdl, k, self.n_docs, self.wand_safe
         k1, b = BM25_K1, BM25_B
         mbk = members_by_key
+        has_filters = bool(filter_keys)
 
         def eval_map(batches):
             rows_by_key: dict[int, dict[str, list]] = {}
+            fids_by_key: dict[int, dict[str, np.ndarray]] = {}
             for pdf in batches:
                 for r in pdf.itertuples():
-                    rows_by_key.setdefault(r.gk, {}).setdefault(r.term, []).append(r)
+                    if has_filters and r.fids is not None:
+                        fids_by_key.setdefault(r.gk, {})[r.term] = np.asarray(r.fids, np.int64)
+                    else:
+                        rows_by_key.setdefault(r.gk, {}).setdefault(r.term, []).append(r)
             recs: list[tuple[str, int, float]] = []
-            for gk, rows in rows_by_key.items():
+            for gk in rows_by_key.keys() | fids_by_key.keys():
                 comp, lo, hi = mbk[gk]
                 recs.extend(
                     evaluate_group(
-                        comp, rows, dfm, idf_map, kk, avgdl, k1, b, lo, hi,
-                        dead, bounds_valid, n_docs,
+                        comp, rows_by_key.get(gk, {}), dfm, idf_map, kk, avgdl, k1, b,
+                        lo, hi, dead, bounds_valid, n_docs, fids_by_key.get(gk), prune,
                     )
                 )
             if recs:
@@ -748,11 +643,12 @@ class SearchEngine:
             "groups": len(groups),
             "members": sum(len(c) for c in groups),
             "terms": len(terms),
+            "filters": len(filter_keys),
             "tasks": n,
             "sharded_groups": sum(1 for s in n_shards if s > 1),
         }
         out = src.mapInPandas(eval_map, "query_id string, doc_id long, score double")
-        if key_range:
+        if key_range and k is not None:
             # merge shard top-ks: tiny input (<= k rows per member-shard),
             # and Spark's InferWindowGroupLimit keeps it map-side partial
             from pyspark.sql import Window
@@ -798,14 +694,13 @@ class SearchEngine:
         subtracts: live df = stored sum − dead hits. Runs ONLY in the
         transient tombstoned state — compact() restores the single-pass
         stored-df path — and ONLY for terms an executor task cannot count
-        itself: pivot members and sharded group-eval groups (an unsharded
-        group-eval task decodes each term whole and counts its live df in
-        place). Makes every incremental state float64-exact against the
+        itself: sharded group-eval groups (an unsharded group-eval task
+        decodes each term whole and counts its live df in place). Makes every incremental state float64-exact against the
         live-corpus oracle, not merely rank-bounded."""
         dead = self._dead_ids_np()
         if dead.size == 0 or not df_map:
             return df_map
-        _decode_postings, _dead_hits = decode_postings, dead_hits
+        _decode_postings, _in_sorted = decode_postings, in_sorted
 
         def count_dead(batches):
             for pdf in batches:
@@ -819,7 +714,7 @@ class SearchEngine:
                         np.asarray(pdf["block_firsts"].iat[i], np.int64),
                         np.asarray(pdf["block_lens"].iat[i], np.int64),
                     )
-                    n_dead = int(_dead_hits(dead, ids).sum()) if ids.size else 0
+                    n_dead = int(_in_sorted(dead, ids).sum())
                     terms.append(pdf["term"].iat[i])
                     counts.append(n_dead)
                 yield pd.DataFrame({"term": terms, "dead": counts})
@@ -833,157 +728,6 @@ class SearchEngine:
         for r in rows:
             dead_by[r["term"]] = dead_by.get(r["term"], 0) + int(r["dead"])
         return {t: d - dead_by.get(t, 0) for t, d in df_map.items()}
-
-    # --------------------------------------------------------------------
-    def _decode(self, pruned: DataFrame, greedy_k: int | None = None) -> DataFrame:
-        """Arrow-batched posting decode; the inner loop is NumPy over blocks.
-        Every block decodes, except that with ``greedy_k`` set (a max-fold
-        with exact block maxes) each term decodes only its greedy top-k
-        blocks, selected in the task: blocks are visited in descending
-        block-max order and skipped once >= k docs with saturation >= the
-        block's upper bound are known. Rank-safe under the max fold
-        (SURVEY.md §4 O12), and no bytes go through the driver. Tombstoned
-        ids leave by broadcast anti-join."""
-        src = pruned.select(
-            "term", "ids", "tfs", "dls", "block_firsts", "block_lens",
-            "ids_offs", "tfs_offs", "dls_offs", "block_max",
-        )
-        k1, b, avgdl = BM25_K1, BM25_B, self.avgdl
-
-        def decode_map(batches):
-            for pdf in batches:
-                frames = []
-                for r in pdf.itertuples():  # one row per term — tiny row count
-                    keep = None
-                    if greedy_k is not None:
-                        keep = _select_blocks_topk(r, greedy_k, k1, b, avgdl)
-                        if keep.all():
-                            keep = None  # full decode, skip the gather path
-                    ids, tfs, dls = decode_postings(
-                        r.ids, r.tfs, r.dls, r.block_firsts, r.block_lens,
-                        keep, r.ids_offs, r.tfs_offs, r.dls_offs,
-                    )
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "term": np.repeat(r.term, ids.size),
-                                "doc_id": ids,
-                                "tf": tfs,
-                                "dl": dls,
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        out = src.mapInPandas(decode_map, "term string, doc_id long, tf long, dl long")
-        if self.tombstones is not None:
-            out = out.join(F.broadcast(self.tombstones), "doc_id", "left_anti")
-        return out
-
-    # --------------------------------------------------------------------
-    def _score(self, decoded: DataFrame, df_map: dict[str, int]) -> tuple[DataFrame, dict[str, str]]:
-        """Per-(doc, term) BM25 score (JVM-side, pinned float order identical
-        to oracle.term_scores), then pivot to per-doc term-score columns via
-        conditional aggregation — whole-stage codegen, no Python."""
-        # SQL strings, not Column chains: idf injection + the per-term pivot
-        # were ~8 py4j round-trips per term — the dominant share of the
-        # batched path's driver plan constant (BENCH/QUERY_DECOMP.json).
-        # CASE branches are mutually exclusive so branch order can't change
-        # the selected idf literal; the arithmetic shape (idf * (tf / (tf +
-        # k1*((1-b) + (b*dl)/avgdl)))) is char-for-char the pinned one.
-        terms = sorted(df_map)
-        idf_sql = (
-            "CASE "
-            + " ".join(
-                f"WHEN term = {sql_quote(t)} THEN {dlit(bm25_idf(self.n_docs, df_map[t]))}"
-                for t in terms
-            )
-            + " ELSE 0.0D END"
-        )
-        s_sql = (
-            f"({idf_sql}) * (CAST(tf AS DOUBLE) / (CAST(tf AS DOUBLE) + "
-            f"{dlit(BM25_K1)} * ({dlit(1.0 - BM25_B)} + "
-            f"({dlit(BM25_B)} * CAST(dl AS DOUBLE)) / {dlit(self.avgdl)})))"
-        )
-        s = decoded.withColumn("s", F.expr(s_sql))
-        term_col = {t: f"_s_{i}" for i, t in enumerate(terms)}
-        aggs = [
-            F.expr(
-                f"coalesce(max(CASE WHEN term = {sql_quote(t)} THEN s END), 0.0D)"
-            ).alias(term_col[t])
-            for t in terms
-        ]
-        return s.groupBy("doc_id").agg(*aggs), term_col
-
-    # --------------------------------------------------------------------
-    def _finish(
-        self,
-        query: Query,
-        scored: DataFrame | None,
-        term_col: dict[str, str],
-        pos_filters,
-        k: int,
-    ) -> DataFrame:
-        # candidate union (M2, matching.rs:70-84): POSITIVE term postings ∪
-        # positive filter lists. The pivot table also carries NOT-subtree
-        # terms (needed by the fold), so restrict to docs matching at least
-        # one positive term.
-        pred = None
-        if scored is not None:
-            pos_cols = [
-                term_col[t]
-                for t in dict.fromkeys(query.positive_terms())
-                if t in term_col
-            ]
-            for c in pos_cols:
-                p = F.col(c) > F.lit(0.0)
-                pred = p if pred is None else (pred | p)
-
-        filter_sources = [
-            (name, value) for name, value in pos_filters if name in self.doc_dict.columns
-        ]
-        if scored is not None and pred is not None and not filter_sources:
-            # common case: candidates == positive-term pivot rows; keep the
-            # pivot single-referenced (a self-join here would recompute the
-            # whole scan+decode twice — visible as duplicate postings scans
-            # in the physical plan)
-            return self._rank(query, scored.filter(pred), term_col, k)
-
-        cand = None
-        if scored is not None and pred is not None:
-            scored = self._track(scored)  # referenced twice below
-            cand = scored.filter(pred).select("doc_id")
-        for name, value in filter_sources:
-            ids = self.doc_dict.filter(F.col(name) == F.lit(value)).select("doc_id")
-            cand = ids if cand is None else cand.unionByName(ids)
-        if cand is None:
-            return self._empty_result()
-        cand = cand.distinct()
-        if scored is not None:
-            cand = cand.join(scored, "doc_id", "left")
-        return self._rank(query, cand, term_col, k)
-
-    # --------------------------------------------------------------------
-    def _rank(self, query: Query, cand: DataFrame, term_col: dict[str, str], k: int | None) -> DataFrame:
-        """Fold + gate + global top-k + dictionary join over a candidate
-        pivot table (doc_id + per-term score columns [+ meta columns])."""
-        meta_names = _collect_filter_names(query.root)
-        if meta_names:
-            meta_cols = ["doc_id"] + [c for c in ("lang", "repo") if c in self.doc_dict.columns]
-            cand = cand.join(self.doc_dict.select(*meta_cols), "doc_id", "left")
-
-        term_cols = {t: f"coalesce({c}, 0.0D)" for t, c in term_col.items()}
-        meta_exprs = {n: n for n in ("lang", "repo") if n in cand.columns}
-        gate, score = compile_fold(query.root, term_cols, meta_exprs)
-        topk = (
-            cand.withColumn("score", F.expr(score))
-            .filter(F.expr(gate))
-            .select("doc_id", "score")
-        )
-        if k is not None:
-            topk = topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return self._dict_join(topk, k)
 
     def _dict_join(
         self, topk: DataFrame, k: int | None, by: tuple[str, ...] = ()
@@ -1013,19 +757,7 @@ def _check_wand(wand: str) -> None:
         raise ValueError(f"wand must be 'auto' or 'off', not {wand!r}")
 
 
-def _collect_filter_names(comp: QueryComp) -> set[str]:
-    if isinstance(comp, Filter):
-        return {comp.name}
-    if isinstance(comp, Not):
-        return _collect_filter_names(comp.comp)
-    if isinstance(comp, NAmong):
-        out: set[str] = set()
-        for c in comp.among:
-            out |= _collect_filter_names(c)
-        return out
-    return set()
-
-
-# _select_blocks_topk / _nofm_cover_words live in group_eval.py (shared by
-# the executor-side group evaluation) and are imported above under their
-# historical names.
+def sql_quote(v: str) -> str:
+    """Single-quoted SQL string literal (quotes doubled, backslashes escaped
+    — Spark's parser treats backslash as an escape inside string literals)."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -1,16 +1,13 @@
-"""Executor-side batched query evaluation (the group-eval fast path).
+"""Executor-side query evaluation: the engine's one evaluation route.
 
-``search_many`` (and ``search``, as its one-member case) co-locates each
-member query's posting blobs in one shuffle partition (identity-routed via ``murmur.identity_partition_keys``, the same
-trick as the build's raw-tf exchange) and this module evaluates every member
-entirely inside the executor: decode with the same rank-safe block pruning
-as the single-query paths — now executor-LOCAL, so candidate-id
-intersections and top-k block selection ship ZERO driver bytes — then a
-NumPy AST fold mirroring ``oracle.OracleIndex._fold`` float-for-float, then
-the exact top-k. The output is k rows per member query, so the former
-pivot/explode/window superstructure (a 25-column partial-agg shuffle of
-every decoded posting, the measured scaling sink of the batched path —
-BENCH/QUERY_DECOMP.json) disappears from the plan.
+``search`` (as the one-member case) and ``search_many`` co-locate each
+member query's posting blobs in one shuffle partition (identity-routed via
+``murmur.identity_partition_keys``, the same trick as the build's raw-tf
+exchange) and this module evaluates every member entirely inside the
+executor: decode with rank-safe block pruning — executor-LOCAL, so
+candidate-id intersections and top-k block selection ship ZERO driver
+bytes — then a NumPy AST fold mirroring ``oracle.OracleIndex._fold``
+float-for-float, then the exact top-k (or every match, for ``k=None``).
 
 This is the reference's own evaluation shape: the daemon answers a query
 against its local index slice in one process
@@ -20,17 +17,22 @@ over the group's co-located posting lists.
 
 Scale shape: a "group" is a connected component of queries sharing terms —
 its work is bounded by the member terms' total posting volume, NOT the
-corpus. The engine answers the members of groups whose estimated decoded
-bytes exceed ``SPARK_GRAFT_GROUP_EVAL_MAX_BYTES`` one by one on the
-distributed pivot instead (monster terms at 10^12-doc scale must fan out
-per-doc; a batch of hundreds of bounded queries wants per-QUERY
-parallelism — both routes coexist and union).
+corpus. A group whose estimated decoded bytes exceed
+``SPARK_GRAFT_GROUP_EVAL_MAX_BYTES`` splits into doc-range shards (below)
+until each shard fits: the env var is a per-task memory budget.
+
+Metadata filters: the reference keeps an equality filter index,
+``(key, value) -> doc ids`` (``inner_im.rs:15``). Here the engine routes
+the live doc ids of each ``name=value`` filter a member uses (from the
+pinned, tombstone-free dictionary, clipped to the task's doc-id range) into
+the task under the key ``"name=value"`` — no token contains ``=``. A
+``Filter`` leaf is a membership test against that sorted id array, and a
+positive filter also sources candidates (``lang=en``, ``lang=en / word``),
+as in the reference's candidate union (``matching.rs:70-84``).
 
 Float parity: identical op order as ``oracle.term_scores`` / ``_fold``
 (IEEE +,*,/ on float64, descending-order left-fold sums), idf from
-``oracle.bm25_idf`` over the LIVE corpus df — the batched parity suite
-(tests/test_search_many.py) asserts bit-equality against the sequential
-Catalyst path, which is itself oracle-gated. On a clean index the driver
+``oracle.bm25_idf`` over the LIVE corpus df. On a clean index the driver
 computes every idf and ships the float64 values. On a tombstoned index
 (incremental upsert, before ``compact()``) the stored df still counts dead
 generations; there the task drops dead ids in ``_decode_term`` and an
@@ -41,7 +43,8 @@ only part of each posting list, so the driver ships its live df instead
 (``engine._live_df_map``).
 
 Rank-safety per member: each member's top-k equals the full-decode
-answer, for these reasons by shape:
+answer (``prune=False``, the engine's ``wand="off"``), for these reasons
+by shape:
 
 - dead ids (tombstones) are dropped from every decoded term before any
   candidate set, range clip or score is formed, so they never rank and
@@ -53,16 +56,18 @@ answer, for these reasons by shape:
   were encoded with: once an update moves avgdl (``wand_safe`` False), a
   rise makes the stored bounds LOWER than the true saturations, so the
   greedy is off and max-fold members decode in full like the general kind.
+  ``k=None`` decodes them in full too.
 - conjunctive members: the rarest REQUIRED word decodes fully; its ids are
   an exact candidate superset, other terms keep exactly the blocks whose
   id range intersects it. Non-candidates cannot pass the gate; candidates
-  keep complete per-term scores.
+  keep complete per-term scores. Filters in the conjunction only gate.
 - n-of-m members: pigeonhole — a doc matching at least n of the m'
   present children misses at most m'-n of them, so it appears in at
   least one of ANY m'-n+1 children's postings; the m'-n+1 rarest
   children's id union (``nofm_cover_words``) is an exact candidate
   superset.
-- any other shape decodes its terms fully (exact by construction).
+- any other shape decodes its terms fully (exact by construction); its
+  candidates are the positive terms' ids and the positive filters' ids.
 - a term shared by several members decodes the UNION of their needs
   (keep masks ORed). A mask only ADDS blocks for the other members, and
   each member's fold reads only its own candidates (conjunctive, n-of-m)
@@ -76,13 +81,14 @@ BM25 score depends only on its own (tf, dl) and GLOBAL (df, avgdl), the
 evaluation is exactly partitionable by doc id: the engine replicates a
 big group's compressed blobs to S shard partitions, and each shard calls
 ``evaluate_group`` with ``id_lo/id_hi`` — blocks outside the range are
-skipped via their stored [first, last] bounds, decoded ids are clipped to
-the range, and the shard returns its exact in-range top-k. The union of
-shard top-ks contains the global top-k (every doc lives in exactly one
-shard), which a k-row window upstream finalizes. Per-shard rank-safety is
-the SAME argument as unsharded — candidates, pigeonhole covers and greedy
-saturation heaps are all computed from range-clipped arrays, so "beaten
-by >= k docs" always means k docs *inside this shard's range*.
+skipped via their stored [first, last] bounds, decoded ids and filter ids
+are clipped to the range, and the shard returns its exact in-range top-k.
+The union of shard top-ks contains the global top-k (every doc lives in
+exactly one shard), which a k-row window upstream finalizes. Per-shard
+rank-safety is the SAME argument as unsharded — candidates, pigeonhole
+covers and greedy saturation heaps are all computed from range-clipped
+arrays, so "beaten by >= k docs" always means k docs *inside this shard's
+range*.
 """
 
 from __future__ import annotations
@@ -92,8 +98,24 @@ import numpy as np
 from .. import BM25_B, BM25_K1
 from ..index.codec import decode_postings
 from ..oracle import bm25_idf
-from ..query.ast import NAmong, Not, Query, QueryComp, Word, required_words
-from .fold import is_max_fold
+from ..query.ast import Filter, NAmong, Not, Query, QueryComp, Word, required_words
+
+
+def is_max_fold(comp: QueryComp) -> bool:
+    """True when the AST is pure-disjunctive over words (a single Word or
+    ``NAmong{n=1}`` of Words) — the fold reduces to max over term scores and
+    per-term block-max top-k pruning is rank-safe (SURVEY.md §7.4)."""
+    if isinstance(comp, Word):
+        return True
+    if isinstance(comp, NAmong) and comp.n == 1:
+        return all(isinstance(c, Word) for c in comp.among)
+    return False
+
+
+def filter_key(name: str, value: str) -> str:
+    """The key a ``name=value`` filter's doc ids travel under (no token
+    contains ``=``, so it never collides with a term)."""
+    return f"{name}={value}"
 
 
 def select_blocks_topk(
@@ -187,12 +209,14 @@ def nofm_cover_words(comp: QueryComp, df_map: dict[str, int]) -> list[str] | Non
     return sorted(present, key=lambda t: (df_map[t], t))[:k]
 
 
-def dead_hits(dead: np.ndarray, ids: np.ndarray) -> np.ndarray:
-    """Boolean mask of ``ids`` found in the sorted dead-id array (one
-    searchsorted pass; ``dead`` must be non-empty)."""
-    pos = np.searchsorted(dead, ids)
-    pos[pos == dead.size] = dead.size - 1
-    return dead[pos] == ids
+def in_sorted(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Boolean mask of ``ids`` found in the sorted ``sorted_ids`` array (one
+    searchsorted pass): tombstone drops and filter membership."""
+    if sorted_ids.size == 0:
+        return np.zeros(ids.size, dtype=bool)
+    pos = np.searchsorted(sorted_ids, ids)
+    pos[pos == sorted_ids.size] = sorted_ids.size - 1
+    return sorted_ids[pos] == ids
 
 
 def _decode_term(
@@ -223,7 +247,7 @@ def _decode_term(
     order = np.argsort(ids, kind="stable")
     ids, tfs, dls = ids[order], tfs[order], dls[order]
     if dead is not None and dead.size and ids.size:
-        live = ~dead_hits(dead, ids)
+        live = ~in_sorted(dead, ids)
         ids, tfs, dls = ids[live], tfs[live], dls[live]
     if id_lo is not None:
         lo = np.searchsorted(ids, id_lo, side="left")
@@ -271,10 +295,16 @@ def _fold(
     S_map: dict[str, np.ndarray],
     n_cand: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """NumPy AST fold over precomputed per-term (B, S) — line-for-line the
+    """NumPy AST fold over precomputed per-leaf (B, S) — line-for-line the
     oracle's ``_fold`` (matching.rs:43-66 semantics, pinned float order).
-    Filter leaves never reach this path (the engine routes members whose
-    fold references metadata to the pivot path, which joins doc_dict)."""
+    A Filter leaf reads its membership mask from ``B_map`` under
+    ``filter_key(name, value)`` and scores 0.0; an absent leaf matches
+    nothing."""
+    if isinstance(comp, Filter):
+        B = B_map.get(filter_key(comp.name, comp.value))
+        if B is None:
+            B = np.zeros(n_cand, dtype=bool)
+        return B, np.zeros(n_cand, dtype=np.float64)
     if isinstance(comp, Word):
         B = B_map.get(comp.word)
         if B is None:
@@ -313,7 +343,7 @@ def evaluate_group(
     rows: dict[str, list],
     df_map: dict[str, int],
     idf_map: dict[str, float],
-    k: int,
+    k: int | None,
     avgdl: float,
     k1: float = BM25_K1,
     b: float = BM25_B,
@@ -322,14 +352,25 @@ def evaluate_group(
     dead: np.ndarray | None = None,
     bounds_valid: bool = True,
     n_docs: int | None = None,
+    filters: dict[str, np.ndarray] | None = None,
+    prune: bool = True,
 ) -> list[tuple[str, int, float]]:
     """Evaluate one co-located group of member queries; returns
-    (query_id, doc_id, score) rows — exact top-k per member, identical
-    floats and (score desc, doc_id asc) order as the single-query path.
+    (query_id, doc_id, score) rows — exact top-k per member (every match
+    when ``k`` is None) in (score desc, doc_id asc) order, the oracle's
+    floats.
 
     ``rows``: term -> posting rows (itertuples of the scanned blob
     columns, one per generation). ``df_map`` (stored df) only orders the
     candidate-source choices; scores read ``idf_map``.
+
+    ``filters``: ``filter_key(name, value)`` -> the live doc ids of that
+    metadata filter (any order). A filter a member uses but ``filters``
+    lacks matches no doc here.
+
+    ``prune``: False decodes every member term whole and takes each
+    member's candidates from all its positive leaves — the unpruned
+    reference (the engine's ``wand="off"``).
 
     ``dead``: sorted tombstoned doc ids, dropped from every decode.
     ``bounds_valid``: the stored block maxes are exact (the engine's
@@ -339,26 +380,41 @@ def evaluate_group(
     which sees the term's whole posting list.
 
     ``id_lo/id_hi``: the shard's doc-id range (None = unsharded). Every
-    decode clips to the range, so the returned rows are the member's exact
-    top-k *among docs in the range*; per-candidate scores are elementwise
-    over that doc's own (tf, dl) and global (idf, avgdl), hence identical
-    floats to the unsharded path. A term whose blobs were range-pruned
-    before the shuffle simply isn't ``present`` here — semantically "no
-    postings in this id range", which every plan kind already handles."""
+    decode and filter array clips to the range, so the returned rows are
+    the member's exact top-k *among docs in the range*; per-candidate
+    scores are elementwise over that doc's own (tf, dl) and global (idf,
+    avgdl), hence identical floats to the unsharded path. A term whose
+    blobs were range-pruned before the shuffle simply isn't ``present``
+    here — semantically "no postings in this id range", which every plan
+    kind already handles."""
     present = set(rows)
+    ranged = id_lo is not None
+    fids: dict[str, np.ndarray] = {}
+    for key, ids in (filters or {}).items():
+        ids = np.unique(np.asarray(ids, dtype=np.int64))
+        fids[key] = ids[(ids >= id_lo) & (ids < id_hi)] if ranged else ids
     # ---- pass 1: classify members, mark per-term decode needs ----------
-    plans: list[tuple[str, Query, str, list[str]]] = []
+    plans: list[tuple[str, Query, str, list[str], list[str]]] = []
     need_full: set[str] = set()
     greedy: set[str] = set()
     for qid, q in members:
         qterms = [t for t in dict.fromkeys(q.terms()) if t in present]
         pos = [t for t in dict.fromkeys(q.positive_terms()) if t in present]
-        if not pos:
+        pos_f = [
+            key
+            for key in dict.fromkeys(filter_key(n, v) for n, v in q.positive_filters())
+            if key in fids
+        ]
+        if not pos and not pos_f:
             continue  # no candidate source -> empty member result
         qdf = {t: df_map[t] for t in qterms}
+        if not prune:
+            need_full.update(qterms)
+            plans.append((qid, q, "general", pos, pos_f))
+            continue
         if is_max_fold(q.root):
-            (greedy if bounds_valid else need_full).update(pos)
-            plans.append((qid, q, "maxfold", pos))
+            (greedy if bounds_valid and k else need_full).update(pos)
+            plans.append((qid, q, "maxfold", pos, []))
             continue
         req = required_words(q.root)
         if req:
@@ -366,7 +422,7 @@ def evaluate_group(
                 continue  # a required word has no postings -> empty
             rare = min(req, key=lambda t: (qdf[t], t))
             need_full.add(rare)
-            plans.append((qid, q, "conj", [rare]))
+            plans.append((qid, q, "conj", [rare], []))
             continue
         cover = nofm_cover_words(q.root, qdf)
         if cover is not None:
@@ -374,22 +430,21 @@ def evaluate_group(
                 continue  # fewer than n children present -> empty
             uniq = list(dict.fromkeys(cover))
             need_full.update(uniq)
-            plans.append((qid, q, "nofm", uniq))
+            plans.append((qid, q, "nofm", uniq, []))
             continue
-        # general shape (nested folds, NOTs over subtrees): full decode,
-        # exact by construction
+        # general shape (nested folds, NOTs over subtrees, filters): full
+        # decode, exact by construction
         need_full.update(qterms)
-        plans.append((qid, q, "general", pos))
+        plans.append((qid, q, "general", pos, pos_f))
 
     # idf not shipped (tombstoned, unsharded group): decode whole and
     # count the surviving ids — the term's live df
     own_idf = {
-        t for _qid, q, _kind, _src in plans for t in q.terms()
+        t for _qid, q, _kind, _src, _fsrc in plans for t in q.terms()
         if t in present and t not in idf_map
     }
     need_full |= own_idf
 
-    ranged = id_lo is not None
     decoded: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     for t in need_full:
         masks = [
@@ -405,7 +460,7 @@ def evaluate_group(
 
     # ---- member candidate sets (from fully-decoded source terms) -------
     member_cand: dict[int, np.ndarray] = {}
-    for i, (qid, q, kind, src_terms) in enumerate(plans):
+    for i, (_qid, _q, kind, src_terms, _fsrc) in enumerate(plans):
         if kind in ("conj", "nofm"):
             member_cand[i] = np.unique(
                 np.concatenate([decoded[t][0] for t in src_terms])
@@ -413,7 +468,7 @@ def evaluate_group(
 
     # ---- pass 2: decode remaining terms with the UNION of member needs -
     rest: set[str] = set()
-    for qid, q, kind, _src in plans:
+    for _qid, q, _kind, _src, _fsrc in plans:
         rest.update(t for t in q.terms() if t in present)
     for t in sorted(rest - set(decoded)):
         trows = rows[t]
@@ -422,7 +477,7 @@ def evaluate_group(
             m: np.ndarray | None = None
             if t in greedy:
                 m = select_blocks_topk(r, k, k1, b, avgdl, id_lo, id_hi)
-            for i, (qid, q, kind, _src) in enumerate(plans):
+            for i, (_qid, q, kind, _src, _fsrc) in enumerate(plans):
                 if kind not in ("conj", "nofm") or t not in q.terms():
                     continue
                 mi = select_blocks_intersect(r, member_cand[i])
@@ -436,30 +491,37 @@ def evaluate_group(
 
     # ---- pass 3: evaluate each member over its candidates --------------
     recs: list[tuple[str, int, float]] = []
-    for i, (qid, q, kind, src_terms) in enumerate(plans):
+    for i, (qid, q, kind, src_terms, src_f) in enumerate(plans):
         if kind in ("conj", "nofm"):
             cand = member_cand[i]
             arrs = [decoded[t] for t in src_terms]
         else:
             arrs = [decoded[t] for t in src_terms if decoded[t][0].size]
-            if not arrs:
+            srcs = [a[0] for a in arrs] + [fids[key] for key in src_f]
+            if not srcs:
                 continue
-            cand = np.unique(np.concatenate([a[0] for a in arrs]))
+            cand = np.unique(np.concatenate(srcs))
         if cand.size == 0:
             continue
-        # doc length per candidate: every candidate appears in >= 1 source
-        # array (its own posting carries dl)
-        ids_c = np.concatenate([a[0] for a in arrs])
-        dls_c = np.concatenate([a[2] for a in arrs])
-        uniq, first = np.unique(ids_c, return_index=True)
-        # uniq == cand by construction for both branches
-        dl = dls_c[first]
+        # doc length per candidate, from its own posting in a source array;
+        # a filter-only candidate holds no positive term, so every Word
+        # score it could take is masked out and its dl is never read
+        dl = np.zeros(cand.size, dtype=np.int64)
+        if arrs:
+            ids_c = np.concatenate([a[0] for a in arrs])
+            dls_c = np.concatenate([a[2] for a in arrs])
+            uniq, first = np.unique(ids_c, return_index=True)
+            dl[np.searchsorted(cand, uniq)] = dls_c[first]
         B_map: dict[str, np.ndarray] = {}
         S_map: dict[str, np.ndarray] = {}
         for t in dict.fromkeys(q.terms()):
             B_map[t], S_map[t] = _term_scores(
                 t, cand, dl, decoded, idf_map, k1, b, avgdl
             )
+        for n, v in q.filters():
+            key = filter_key(n, v)
+            if key in fids:
+                B_map[key] = in_sorted(fids[key], cand)
         Bq, Sq = _fold(q.root, B_map, S_map, cand.size)
         keep = np.flatnonzero(Bq)
         if keep.size == 0:

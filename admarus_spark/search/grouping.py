@@ -34,7 +34,7 @@ MIN_GROUP_CHILDREN = 4  # groups with <= 3 children are disbanded (G3)
 # downstream joins; without caching the upstream SEARCH would re-scan the
 # postings per branch). The returned result is lazy, so they cannot be
 # unpersisted before the caller materializes it — callers either pass their
-# own ``tracker`` list (the engine's _track/release_cache pattern) or rely
+# own ``tracker`` list and unpersist it themselves, or rely
 # on this module registry + ``release_cache()``, which long-lived serving
 # sessions should call between queries (r5 review: the engine documents
 # exactly this lifetime discipline; grouping must not silently leak).

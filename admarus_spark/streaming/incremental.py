@@ -19,7 +19,7 @@ The reference re-crawls periodically, dedups against its ``listed`` /
   float64-exactly in every incremental state — no Lucene-style rank drift
   window. A group-eval task (``search/group_eval.py``) that sees a term's
   whole posting list counts the live df from the ids that survive the
-  tombstone drop; the pivot and doc-range-sharded group-eval subtract the
+  tombstone drop; doc-range-sharded group-eval subtracts the
   dead postings from the stored df with one bounded extra pass over the
   pruned terms (``engine._live_df_map``). Both run only while tombstones
   exist.

@@ -23,6 +23,7 @@ MOVIES_QUERIES = [
     "lang=en AND hunger",
     "repo=movies AND fire",
     "lang=en",
+    "path=hunger AND hunger",       # path is not a metadata column -> empty
     "survival rebellion hope",
     "NOT hunger",
     "nosuchterm",
@@ -52,10 +53,97 @@ def run_parity(engine, oracle, queries, k=10, wand="auto"):
     fails = []
     for q in queries:
         got = [(r["doc_id"], r["score"]) for r in engine.search(q, k, wand=wand).collect()]
-        want = oracle.search(q, k)
+        want = oracle.search(q, 10**9 if k is None else k)
         if got != want:
             fails.append((q, got[:3], want[:3]))
     assert not fails, fails
+
+
+def cap_for_shards(eng, q, shards=3):
+    """A group-eval byte budget that splits the one-member group of ``q``
+    into ``shards`` doc-range shards (its decoded estimate is ~24 bytes
+    per posting of its indexed terms)."""
+    from admarus_spark.query.parser import parse_query
+
+    est = sum(eng.df_cache.get(t, 0) for t in set(parse_query(q).terms()))
+    return max(-(-est * 24 // shards), 1)
+
+
+def run_capped_parity(eng, oracle, queries, monkeypatch, k=10, shards=3):
+    """``run_parity`` with each query's group over the per-task byte
+    budget: it must split into ``shards`` shards and stay oracle-exact."""
+    for q in queries:
+        with monkeypatch.context() as m:
+            m.setattr(eng, "group_eval_max_bytes", cap_for_shards(eng, q, shards))
+            run_parity(eng, oracle, [q], k=k)
+        st = eng.last_group_eval
+        assert st is None or (st["tasks"], st["sharded_groups"]) == (shards, 1), (q, st)
+
+
+def shard_eval(eng, q, k, shards, monkeypatch):
+    """Run the group-eval task of ``q`` in this process, split into
+    ``shards`` doc-range shards the way the engine splits an over-budget
+    group, with ``group_eval.decode_postings`` and the greedy block
+    selection wrapped. Returns (merged top-k rows, ids decoded per term —
+    not counting the greedy's block probes —, terms the greedy ran for,
+    stored df per term)."""
+    from pyspark.sql import functions as F
+
+    from admarus_spark.oracle import bm25_idf
+    from admarus_spark.query.parser import parse_query
+    from admarus_spark.search import group_eval
+
+    query = parse_query(q)
+    terms = sorted(set(query.terms()))
+    pdf = (
+        eng.postings.filter(F.col("term").isin(terms))
+        .select(
+            "term", "df", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+        )
+        .toPandas()
+    )
+    rows: dict[str, list] = {}
+    for r in pdf.itertuples():
+        rows.setdefault(r.term, []).append(r)
+    df_map = {t: int(sum(r.df for r in rs)) for t, rs in rows.items()}
+    idf_map = {t: bm25_idf(eng.n_docs, d) for t, d in df_map.items()}
+    term_of = {id(r.ids): t for t, rs in rows.items() for r in rs}
+    decoded: dict[str, int] = {}
+    greedy: set[str] = set()
+    decode, topk = group_eval.decode_postings, group_eval.select_blocks_topk
+    probing = []
+
+    def counting_decode(ids, *a):
+        out = decode(ids, *a)
+        if not probing:  # the greedy's own block probes are not the decode
+            t = term_of[id(ids)]
+            decoded[t] = decoded.get(t, 0) + out[0].size
+        return out
+
+    def counting_topk(r, *a):
+        greedy.add(term_of[id(r.ids)])
+        probing.append(1)
+        try:
+            return topk(r, *a)
+        finally:
+            probing.pop()
+
+    max_id = eng._max_live_doc_id() + 1
+    step = -(-max_id // shards)
+    got: list[tuple[int, float]] = []
+    for j in range(shards):
+        lo, hi = j * step, ((j + 1) * step if j < shards - 1 else 1 << 62)
+        with monkeypatch.context() as m:
+            m.setattr(group_eval, "decode_postings", counting_decode)
+            m.setattr(group_eval, "select_blocks_topk", counting_topk)
+            recs = group_eval.evaluate_group(
+                [("q", query)], rows, df_map, idf_map, k, eng.avgdl,
+                id_lo=lo, id_hi=hi,
+            )
+        got += [(d, s) for _q, d, s in recs]
+    got.sort(key=lambda x: (-x[1], x[0]))
+    return got[:k], decoded, greedy, df_map
 
 
 def test_movies_parity(movies_engine, movies_oracle):
@@ -68,6 +156,42 @@ def test_docs_parity(docs_engine, docs_oracle):
 
 def test_docs_parity_wand_off(docs_engine, docs_oracle):
     run_parity(docs_engine, docs_oracle, DOCS_QUERIES, wand="off")
+
+
+def test_oracle_sweep_k_and_wand(movies_engine, movies_oracle, docs_engine, docs_oracle):
+    """Every query shape (filters, ``lang=en``, ``NOT hunger``, misses) at
+    k in {1, 10, None} and wand in {auto, off} equals the oracle: one
+    evaluation route serves them all, ``wand="off"`` as its unpruned
+    reference."""
+    for k in (1, 10, None):
+        for wand in ("auto", "off"):
+            run_parity(movies_engine, movies_oracle, MOVIES_QUERIES, k=k, wand=wand)
+            run_parity(docs_engine, docs_oracle, DOCS_QUERIES, k=k, wand=wand)
+
+
+def _tomb_sweep(eng, oracle):
+    fails = []
+    for k in (1, 10, None):
+        for wand in ("auto", "off"):
+            for q in MOVIES_QUERIES + DOCS_QUERIES:
+                if tomb_search(eng, q, k, wand) != tomb_results(oracle, q, k):
+                    fails.append((q, k, wand))
+    assert not fails, fails
+
+
+def test_oracle_sweep_tombstoned(tomb_engine, tomb_oracle):
+    """The same sweep on an index with pending tombstones, against the
+    live-corpus oracle."""
+    _tomb_sweep(tomb_engine, tomb_oracle)
+
+
+def test_oracle_sweep_sharded(tomb_engine, tomb_oracle, monkeypatch):
+    """The tombstoned sweep with every group split into two doc-range
+    shards: filter ids clip to each shard, live df comes from the
+    driver, and the shard merge keeps the oracle's order."""
+    monkeypatch.setenv("SPARK_GRAFT_GROUP_EVAL_SHARDS", "2")
+    _tomb_sweep(tomb_engine, tomb_oracle)
+    assert tomb_engine.last_group_eval["sharded_groups"] == 1
 
 
 def test_wand_rank_safe_large_k(docs_engine, docs_oracle):
@@ -446,10 +570,11 @@ def test_manifest_broadcast_gate_off(spark, movies_pdf, movies_oracle, tmp_path)
 
 def test_conjunctive_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     """AND/n-of-n decode pruning must be EXACT (not just rank-safe) at any
-    k, on the group-eval route and on the pivot: with the rarest required
-    word bounding candidates, results equal the unpruned oracle
-    bit-for-bit. Also covers required-word-missing early exit and the
-    full-decode control (wand="off")."""
+    k, in one group-eval task and split into doc-range shards by the
+    per-task byte budget: with the rarest required word bounding
+    candidates, results equal the unpruned oracle bit-for-bit. Also covers
+    required-word-missing early exit and the full-decode control
+    (wand="off")."""
     queries = [
         "license AND parser",
         "license AND rareterm000063z",
@@ -459,20 +584,20 @@ def test_conjunctive_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     ]
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # the pivot: group-eval cap zeroed
-    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
+    # over the per-task byte budget: three doc-range shards per query
     for k in (3, 10, 10**6):
-        run_parity(docs_engine, docs_oracle, queries, k=k)
+        run_capped_parity(docs_engine, docs_oracle, queries, monkeypatch, k=k)
     # control: the full decode gives identical results
     run_parity(docs_engine, docs_oracle, queries, wand="off")
 
 
 def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     """n-of-m decode pruning (1 < n < m, pigeonhole cover of the m-n+1
-    rarest children) must be EXACT at any k, on the group-eval route and on
-    the pivot, including with a hot child in the cover complement,
-    unindexed children shrinking m', and the fewer-than-n-present early
-    exit; the full decode (wand="off") is the control."""
+    rarest children) must be EXACT at any k, in one group-eval task and
+    split into doc-range shards by the per-task byte budget, including with
+    a hot child in the cover complement, unindexed children shrinking m',
+    and the fewer-than-n-present early exit; the full decode (wand="off")
+    is the control."""
     queries = [
         "2(parser, lexer, bloom)",
         "2(license, parser, bloom)",          # hot child pruned by rare cover
@@ -482,17 +607,16 @@ def test_nofm_pigeonhole_pruning_exact(docs_engine, docs_oracle, monkeypatch):
     ]
     for k in (3, 10, 10**6):
         run_parity(docs_engine, docs_oracle, queries, k=k)
-    # the pivot: group-eval cap zeroed
-    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
+    # over the per-task byte budget: three doc-range shards per query
     for k in (3, 10, 10**6):
-        run_parity(docs_engine, docs_oracle, queries, k=k)
+        run_capped_parity(docs_engine, docs_oracle, queries, monkeypatch, k=k)
     # control: the full decode gives identical results
     run_parity(docs_engine, docs_oracle, queries, wand="off")
 
 
 def test_nofm_cover_selection():
     from admarus_spark.query.parser import parse_query
-    from admarus_spark.search.engine import _nofm_cover_words
+    from admarus_spark.search.group_eval import nofm_cover_words as _nofm_cover_words
 
     df_map = {"aaa": 5, "bbb": 10, "ccc": 100}
     # 2-of-3: cover = the 2 rarest children
@@ -575,29 +699,30 @@ def test_conjunctive_pruning_reduces_decode(docs_engine):
 
 
 def test_single_query_routes_to_group_eval(docs_engine, docs_oracle):
-    """Postings-only search() evaluates executor-side through group-eval
-    (search_many's one-member case) and matches the oracle at every k;
-    metadata folds keep the pivot."""
+    """search() evaluates executor-side through group-eval (search_many's
+    one-member case) and matches the oracle at every k, metadata folds
+    included: every query with a match ran one group-eval member."""
     routed = 0
     for k in (1, 5, 10):
         for q in DOCS_QUERIES:
             got = [(r["doc_id"], r["score"]) for r in docs_engine.search(q, k).collect()]
             want = docs_oracle.search(q, k)
             assert got == want, (q, k)
-            if "=" in q:
-                assert docs_engine.last_group_eval is None, q
-            elif want:
+            if want:
                 assert docs_engine.last_group_eval is not None, (q, k)
                 assert docs_engine.last_group_eval["members"] == 1
+                assert docs_engine.last_group_eval["filters"] == ("=" in q)
                 routed += 1
-    assert routed >= 3 * 10
+    assert routed >= 3 * 11
 
 
 def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch):
-    """Metadata folds, k=None, wand="off" and a zero group-eval byte cap
-    keep the pivot (last_group_eval is None), with oracle-exact results;
-    capped max-folds keep their executor-side block pruning. A wand value
-    other than "auto" or "off" raises."""
+    """Metadata folds, k=None, wand="off" and groups over the per-task byte
+    budget — the shapes a second evaluation route used to serve — take
+    group-eval (last_group_eval set) with oracle-exact results; an
+    over-budget group splits into doc-range shards, and a capped max-fold
+    keeps its block pruning in every shard. A wand value other than "auto"
+    or "off" raises."""
     for bad in ("on", "of", ""):
         with pytest.raises(ValueError):
             docs_engine.search("license", 10, wand=bad)
@@ -607,31 +732,26 @@ def test_pivot_routes_keep_results(spark, docs_engine, docs_oracle, monkeypatch)
     def check(eng, q, k, wand="auto"):
         got = [(r["doc_id"], r["score"]) for r in eng.search(q, k, wand=wand).collect()]
         assert got == docs_oracle.search(q, 10**9 if k is None else k), (q, k, wand)
-        assert eng.last_group_eval is None, (q, k, wand)
+        assert eng.last_group_eval is not None, (q, k, wand)
 
-    for q in ("lang=python AND bloom", "parser AND NOT lang=python"):
+    for q in ("lang=python AND bloom", "parser AND NOT lang=python", "lang=python"):
         check(docs_engine, q, 10)
+        check(docs_engine, q, None)
     for q in ("license", "parser lexer bloom", "license AND parser"):
         check(docs_engine, q, None)
         check(docs_engine, q, 10, wand="off")
-    monkeypatch.setenv("SPARK_GRAFT_GROUP_EVAL_MAX_BYTES", "0")
-    capped = SearchEngine(spark, docs_engine.paths.index_dir)
     for q in ("license", "parser lexer bloom", "2(parser, lexer, bloom)"):
-        check(capped, q, 10)
-    # a max-fold the cap sends to the pivot still prunes: each term decodes
-    # only its greedy top-k blocks, fewer rows than the full decode
-    decode, rows = capped._decode, []
-
-    def counting(pruned, greedy_k=None):
-        out = decode(pruned, greedy_k)
-        rows.append((out.count(), decode(pruned).count()))
-        return out
-
-    monkeypatch.setattr(capped, "_decode", counting)
+        monkeypatch.setattr(docs_engine, "group_eval_max_bytes", cap_for_shards(docs_engine, q))
+        check(docs_engine, q, 10)
+        assert docs_engine.last_group_eval["tasks"] == 3, q
+    monkeypatch.undo()
+    # a max-fold over the budget still prunes: in each of its shards a term
+    # decodes only its greedy top-k blocks, fewer ids than its postings
     for q in ("license", "license parser"):
-        rows.clear()
-        check(capped, q, 1)
-        assert len(rows) == 1 and rows[0][0] < rows[0][1], (q, rows)
+        got, decoded, greedy, df_map = shard_eval(docs_engine, q, 1, 3, monkeypatch)
+        assert got == docs_oracle.search(q, 1), q
+        assert greedy == set(df_map), q
+        assert decoded["license"] < df_map["license"], (q, decoded)
 
 
 def tomb_results(oracle, q, k):
@@ -652,15 +772,16 @@ def tomb_search(eng, q, k, wand="auto"):
 
 def test_tombstoned_index_keeps_pivot(tomb_engine, tomb_oracle):
     """On an index with pending tombstones, metadata folds, wand="off" and
-    k=None still take the pivot (its anti-join drops dead generations),
-    float-exact against the live corpus."""
+    k=None take group-eval too (the task drops dead generations, and the
+    filter ids come from the tombstone-free dictionary), float-exact
+    against the live corpus."""
     eng = tomb_engine
-    cases = [("lang=en AND hunger", 10, "auto")]
+    cases = [("lang=en AND hunger", 10, "auto"), ("lang=en AND hunger", None, "off")]
     for q in ("hunger", "hunger AND games", "perfectly matching"):
         cases += [(q, 10, "off"), (q, None, "auto")]
     for q, k, wand in cases:
         assert tomb_search(eng, q, k, wand) == tomb_results(tomb_oracle, q, k), (q, k, wand)
-        assert eng.last_group_eval is None, (q, k, wand)
+        assert eng.last_group_eval is not None, (q, k, wand)
 
 
 def test_tombstoned_index_routes_to_group_eval(tomb_engine, tomb_oracle, monkeypatch):
@@ -696,39 +817,34 @@ def test_tombstoned_index_routes_to_group_eval(tomb_engine, tomb_oracle, monkeyp
 
 
 def test_single_query_runs_two_jobs(spark, docs_engine):
-    """A postings-only single query runs at most 2 Spark jobs, counted from
-    the status tracker under a job group: the broadcast of the k winners
-    and the dictionary join that returns them."""
-    sc = spark.sparkContext
-    q = "parser lexer bloom"
-    docs_engine.search(q, 10).collect()  # warm: bucket blooms load lazily once
-    sc.setJobGroup("single_query_jobs", q, False)
-    try:
-        docs_engine.search(q, 10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert docs_engine.last_group_eval is not None
-    jobs = sc.statusTracker().getJobIdsForGroup("single_query_jobs")
-    assert 0 < len(jobs) <= 2, jobs
+    """A single query runs at most 2 Spark jobs, counted from the status
+    tracker under a job group: the broadcast of the k winners and the
+    dictionary join that returns them. A metadata filter adds none: its
+    ids ride in the same task's source."""
+    for i, q in enumerate(("parser lexer bloom", "lang=python AND bloom")):
+        assert 0 < len(_query_jobs(spark, docs_engine, q, f"single_query_jobs_{i}")) <= 2, q
 
 
 def test_tombstoned_single_query_runs_two_jobs(spark, tomb_engine):
-    """On a tombstoned index a postings-only single query also runs at most
-    2 Spark jobs once warm (bucket blooms and dead ids load lazily once):
-    no driver job for the live df."""
+    """On a tombstoned index a single query also runs at most 2 Spark jobs
+    once warm (bucket blooms and dead ids load lazily once): no driver job
+    for the live df, and none for a metadata filter."""
+    for i, q in enumerate(("hunger AND games", "lang=en AND hunger")):
+        assert 0 < len(_query_jobs(spark, tomb_engine, q, f"tomb_single_query_jobs_{i}")) <= 2, q
+
+
+def _query_jobs(spark, eng, q, group):
+    """Spark job ids of one warm ``search(q, 10)`` (run once before to
+    load lazy caches), read from the status tracker under a job group."""
     sc = spark.sparkContext
-    q = "hunger AND games"
-    tomb_engine.search(q, 10).collect()
-    sc.setJobGroup("tomb_single_query_jobs", q, False)
+    eng.search(q, 10).collect()
+    sc.setJobGroup(group, q, False)
     try:
-        tomb_engine.search(q, 10).collect()
+        eng.search(q, 10).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert tomb_engine.last_group_eval is not None
-    jobs = sc.statusTracker().getJobIdsForGroup("tomb_single_query_jobs")
-    assert 0 < len(jobs) <= 2, jobs
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_path):
@@ -763,8 +879,8 @@ def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_
 
 
 def test_close_releases_pins(spark, movies_engine, tmp_path):
-    """close() releases what an engine pins (the doc_dict pin, a filtered
-    query's persisted intermediate): repeated engine lives do not grow the
+    """close() releases what an engine pins (the doc_dict pin; a filtered
+    query persists nothing): repeated engine lives do not grow the
     session's persistent RDDs, and a second close() is a no-op."""
     d = str(tmp_path / "idx_close")
     shutil.copytree(movies_engine.paths.index_dir, d)  # its own cache keys
@@ -782,43 +898,51 @@ def test_close_releases_pins(spark, movies_engine, tmp_path):
     assert not eng._dd_persisted and eng.df_cache is None and not eng.bucket_blooms
 
 
-def test_pivot_missing_required_word_skips_decode(docs_engine, monkeypatch):
+def test_pivot_missing_required_word_skips_decode(spark, docs_engine, monkeypatch):
     """A metadata-filtered query whose required word is not indexed (here:
     every bloom probe answers "maybe", as on a false positive) returns
-    nothing before any decode."""
+    nothing from the driver prep: zero Spark jobs run, in search and
+    search_many alike. So do an n-of-m query with fewer than n children
+    indexed and a query with no positive indexed term or filter."""
     from admarus_spark.search import engine as engine_mod
 
     monkeypatch.setattr(engine_mod, "filter_get", lambda bloom, word: True)
-    calls = []
-    monkeypatch.setattr(docs_engine, "_decode", lambda *a, **kw: calls.append(a))
-    got = docs_engine.search("lang=python AND bloom AND nosuchwordzz", 10).collect()
-    assert got == [] and docs_engine.last_group_eval is None
-    assert not calls
+    sc = spark.sparkContext
+    queries = [
+        "lang=python AND bloom AND nosuchwordzz",
+        "2(bloom, nosuchwordzz, nosuchwordzy)",
+        "NOT bloom",
+        "path=src AND NOT bloom",
+    ]
+    for q in queries:  # warm: bucket blooms load lazily once
+        docs_engine.search(q, 10).collect()
+    sc.setJobGroup("driver_exit_jobs", "driver-only exits", False)
+    try:
+        got = [docs_engine.search(q, 10).collect() for q in queries]
+        assert docs_engine.last_group_eval is None
+        got.append(docs_engine.search_many({q: q for q in queries}, 10).collect())
+        assert docs_engine.last_group_eval is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == [[]] * (len(queries) + 1)
+    assert list(sc.statusTracker().getJobIdsForGroup("driver_exit_jobs")) == []
 
 
 def test_small_volume_gate_skips_driver_pruning(docs_engine, docs_oracle, monkeypatch):
-    """On the pivot (group-eval cap zeroed) each multi-term shape takes one
-    plain ``_decode``, with no driver-side candidate fetch; only the
-    max-fold carries the executor greedy. Results stay oracle-exact."""
-    eng = docs_engine
-    calls = []
-    decode = eng._decode
-
-    def counting(pruned, greedy_k=None):
-        calls.append(greedy_k)
-        return decode(pruned, greedy_k)
-
-    monkeypatch.setattr(eng, "_decode", counting)
-    monkeypatch.setattr(eng, "group_eval_max_bytes", 0)
-    for q, gk in (
-        ("parser lexer bloom", 5),
-        ("license AND parser", None),
-        ("2(parser, lexer, bloom)", None),
+    """Over the per-task byte budget each multi-term shape splits into
+    doc-range shards that prune inside the task, with no driver-side
+    candidate fetch; only the max-fold runs the greedy block selection.
+    Results stay oracle-exact."""
+    for q, greedy_expected in (
+        ("parser lexer bloom", True),
+        ("license AND parser", False),
+        ("2(parser, lexer, bloom)", False),
     ):
-        calls.clear()
-        run_parity(eng, docs_oracle, [q], k=5)
-        assert eng.last_group_eval is None
-        assert calls == [gk], q
+        run_capped_parity(docs_engine, docs_oracle, [q], monkeypatch, k=5)
+        got, _decoded, greedy, df_map = shard_eval(docs_engine, q, 5, 3, monkeypatch)
+        assert got == docs_oracle.search(q, 5), q
+        assert greedy == (set(df_map) if greedy_expected else set()), q
 
 
 def test_zero_term_corpus_builds_empty_index(spark, tmp_path):

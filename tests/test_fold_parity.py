@@ -1,12 +1,11 @@
 """Property test: the two NumPy fold implementations that must stay
 bit-identical — ``oracle.OracleIndex._fold`` (the correctness contract) and
 ``search.group_eval._fold`` (the executor-side batched path) — agree on
-random corpora and random query ASTs. CLAUDE.md pins the rule 'change
-oracle._fold and group_eval._fold TOGETHER'; this test makes a one-sided
-edit fail fast without a Spark session (pure NumPy, hundreds of examples).
-
-Filter leaves are excluded: group_eval routes metadata-referencing members
-to the pivot path by contract (group_eval.py docstring)."""
+random corpora and random query ASTs, metadata filters included (a
+filter leaf reads its membership mask under ``filter_key``). CLAUDE.md pins
+the rule 'change oracle._fold and group_eval._fold TOGETHER'; this test
+makes a one-sided edit fail fast without a Spark session (pure NumPy,
+hundreds of examples)."""
 
 from __future__ import annotations
 
@@ -15,14 +14,18 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from admarus_spark.oracle import OracleIndex
-from admarus_spark.query.ast import NAmong, Not, QueryComp, Word
+from admarus_spark.query.ast import Filter, NAmong, Not, QueryComp, Word
 from admarus_spark.search.group_eval import _fold as ge_fold
+from admarus_spark.search.group_eval import filter_key
 
 VOCAB = ["aaa", "bbb", "ccc", "ddd", "eee", "fff"]
+FILTERS = [("lang", "en"), ("lang", "py"), ("repo", "r"), ("repo", "s"), ("path", "x")]
 
 
 def _ast(draw, depth: int) -> QueryComp:
-    if depth <= 0:
+    if depth <= 0 or draw(st.integers(0, 4)) == 0:
+        if draw(st.booleans()):
+            return Filter(*draw(st.sampled_from(FILTERS)))
         return Word(draw(st.sampled_from(VOCAB + ["zzz_absent"])))
     kind = draw(st.sampled_from(["word", "not", "namong"]))
     if kind == "word":
@@ -45,7 +48,9 @@ def corpus_and_ast(draw):
         words = draw(
             st.lists(st.sampled_from(VOCAB), min_size=1, max_size=12)
         )
-        docs.append(("r", f"d{i:03d}.txt", "en", " ".join(words)))
+        repo = draw(st.sampled_from(["r", "s"]))
+        lang = draw(st.sampled_from(["en", "py"]))
+        docs.append((repo, f"d{i:03d}.txt", lang, " ".join(words)))
     pdf = pd.DataFrame(docs, columns=["repo", "path", "lang", "content"])
     root = _ast(draw, draw(st.integers(min_value=0, max_value=3)))
     return pdf, root
@@ -54,6 +59,8 @@ def corpus_and_ast(draw):
 def _terms(comp: QueryComp) -> set[str]:
     if isinstance(comp, Word):
         return {comp.word}
+    if isinstance(comp, Filter):
+        return set()
     if isinstance(comp, Not):
         return _terms(comp.comp)
     if isinstance(comp, NAmong):
@@ -80,6 +87,10 @@ def test_group_eval_fold_matches_oracle_fold_bitwise(case):
     for t in _terms(root):
         if t in oi.postings:
             B_map[t], S_map[t] = oi.term_scores(t, cand, dl)
+    # filter masks as the engine ships them: only metadata columns
+    for name, value in FILTERS:
+        if name in oi.meta:
+            B_map[filter_key(name, value)] = oi.meta[name][cand] == value
     B_ge, S_ge = ge_fold(root, B_map, S_map, cand.size)
 
     assert np.array_equal(B_ref, B_ge)

@@ -437,8 +437,8 @@ def test_multi_generation_search_parity(spark, tmp_path):
         for wand in ("auto", "off"):
             got = path_scores(eng.search(q, 10**6, wand=wand))
             assert got == want, (q, wand)
-    # batched twin over the same index (routes group-eval or pivot by
-    # wand_safe; either way parity must hold)
+    # batched twin over the same index (group-eval with the greedy off
+    # while wand_safe is False; parity must hold)
     res = eng.search_many({f"q{i}": q for i, q in enumerate(QUERIES)}, k=10)
     rows = res.collect()
     for i, q in enumerate(QUERIES):
@@ -624,11 +624,11 @@ def test_crashed_update_rerun_never_duplicates(spark, tmp_path):
 def test_tombstoned_search_is_float_exact_precompact(spark, tmp_path):
     """With tombstones pending (changed docs, NO compact), scoring must be
     float64-exact against the live-corpus oracle — not merely rank-bounded:
-    idf comes from each term's live df, without its dead postings. The
-    postings-only queries take group-eval, whose task drops dead ids and
-    counts live df itself; the filtered query takes the pivot, whose live
-    df comes from _live_df_map. Covers the single-query path AND the
-    batched path (group-eval members plus a pivot member)."""
+    idf comes from each term's live df, without its dead postings. Every
+    query takes group-eval, whose task drops dead ids and counts live df
+    itself; the filtered query reads its filter ids from the
+    tombstone-free dictionary. Covers the single-query path AND the
+    batched path."""
     import hashlib
 
     base = make_docs_corpus(140, seed=51)

@@ -6,27 +6,33 @@ QUERIES = {
     "quick_or": "parser lexer bloom",
     "nofm": "2(parser, lexer, bloom)",
     "notq": "parser AND NOT bloom",
-    # metadata filter in a NOT subtree: stays on the BATCHED path (no
-    # positive filter) but forces the needs_meta doc_dict join + the fold's
-    # meta_exprs inside the exploded per-query struct projection
+    # metadata filter in a NOT subtree: its ids ride into the task as a
+    # gate, never as candidates
     "not_meta": "parser AND NOT lang=python",
     "rare": "rareterm000063z",
-    "meta": "lang=python AND bloom",      # positive filter -> exact fallback
-    "pure_meta": "lang=python",           # filter-only candidates -> fallback
+    "meta": "lang=python AND bloom",      # positive filter, conjunctive
+    "pure_meta": "lang=python",           # filter-only candidates
     "missing": "nosuchterm",
 }
 
 
-def test_search_many_matches_single(docs_engine):
-    batch = docs_engine.search_many(QUERIES, k=10).collect()
+def _by_query(rows) -> dict[str, list]:
     by_q: dict[str, list] = {}
-    for r in batch:
+    for r in rows:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    return by_q
+
+
+def test_search_many_matches_single(docs_engine, docs_oracle):
+    """The batch equals the single-query full decode (``wand="off"``) and
+    the oracle: ``wand="off"`` is the same engine unpruned, so the oracle
+    is the independent check."""
+    by_q = _by_query(docs_engine.search_many(QUERIES, k=10).collect())
     for qid, q in QUERIES.items():
         single = [
             (r["doc_id"], r["score"]) for r in docs_engine.search(q, 10, wand="off").collect()
         ]
-        assert by_q.get(qid, []) == single, qid
+        assert by_q.get(qid, []) == single == docs_oracle.search(q, 10), qid
 
 
 def test_search_many_empty_batch(docs_engine):
@@ -64,18 +70,17 @@ def test_search_many_wand_off_matches_single(docs_engine):
         assert by_q.get(qid, []) == single, qid
 
 
-def _pivot_decodes(eng, monkeypatch) -> list:
-    """Zero the group-eval cap and record the ``greedy_k`` of every pivot
-    ``_decode`` call."""
-    monkeypatch.setattr(eng, "group_eval_max_bytes", 0)
-    decode, calls = eng._decode, []
+def _cap_biggest_group(eng, monkeypatch, shards=3) -> None:
+    """Set a per-task byte budget that splits the batch's biggest group
+    (everything sharing license/parser/bloom) into ``shards`` shards."""
+    from admarus_spark.query.parser import parse_query
 
-    def counting(pruned, greedy_k=None):
-        calls.append(greedy_k)
-        return decode(pruned, greedy_k)
-
-    monkeypatch.setattr(eng, "_decode", counting)
-    return calls
+    terms = {
+        t for qid, q in QUERIES.items() if qid not in ("rare", "missing")
+        for t in parse_query(q).terms()
+    }
+    est = sum(eng.df_cache.get(t, 0) for t in terms)
+    monkeypatch.setattr(eng, "group_eval_max_bytes", -(-est * 24 // shards))
 
 
 def test_search_many_batched_decode_prunes(docs_engine, monkeypatch):
@@ -126,95 +131,94 @@ def test_search_many_batched_decode_prunes(docs_engine, monkeypatch):
     assert single and [(d, s) for _q, d, s in got] == single
 
 
-def test_search_many_greedy_fallback_matches_single(docs_engine, monkeypatch):
-    """With the group-eval cap at zero every member takes the pivot one by
-    one: one ``_decode`` per member with postings to scan, the executor-side
-    per-term greedy (``greedy_k``) only for max-fold shapes, and results
-    equal to the sequential full decode."""
+def test_search_many_greedy_fallback_matches_single(docs_engine, docs_oracle, monkeypatch):
+    """With the per-task byte budget below the biggest group's estimate,
+    that group splits into doc-range shards (the rare term's group stays
+    one task), the executor-side greedy still runs only for max-fold
+    members, and results equal the sequential full decode."""
     from admarus_spark.query.parser import parse_query
-    from admarus_spark.search.fold import is_max_fold
+    from admarus_spark.search.group_eval import is_max_fold
 
-    calls = _pivot_decodes(docs_engine, monkeypatch)
-    batch = docs_engine.search_many(QUERIES, k=10).collect()
-    # pure_meta has no term to decode; missing is bloom-gated out
-    decoding = [q for qid, q in QUERIES.items() if qid not in ("pure_meta", "missing")]
-    want = sorted(
-        (10 if is_max_fold(parse_query(q).root) else 0) for q in decoding
-    )
-    assert sorted(gk or 0 for gk in calls) == want
-    assert 10 in want and 0 in want
-    by_q: dict[str, list] = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    _cap_biggest_group(docs_engine, monkeypatch)
+    by_q = _by_query(docs_engine.search_many(QUERIES, k=10).collect())
+    st = docs_engine.last_group_eval
+    assert st["sharded_groups"] == 1 and st["tasks"] == st["groups"] + 2
+    monkeypatch.undo()
+    assert any(is_max_fold(parse_query(q).root) for q in QUERIES.values())
     for qid, q in QUERIES.items():
         single = [
             (r["doc_id"], r["score"]) for r in docs_engine.search(q, 10, wand="off").collect()
         ]
-        assert by_q.get(qid, []) == single, qid
+        assert by_q.get(qid, []) == single == docs_oracle.search(q, 10), qid
 
 
-def test_search_many_capped_probe_failure_degrades_to_greedy(docs_engine, monkeypatch):
-    """A skewed max-fold (hot term OR rare term) on the pivot decodes with
-    the executor-side greedy in one ``_decode``, never through a driver
-    fetch, and matches the sequential full decode."""
-    calls = _pivot_decodes(docs_engine, monkeypatch)
-    got = docs_engine.search_many(
-        {"skew": "license rareterm000063z"}, k=10
-    ).collect()
-    assert calls == [10]
+def test_search_many_capped_probe_failure_degrades_to_greedy(docs_engine, docs_oracle, monkeypatch):
+    """A skewed max-fold (hot term OR rare term) over the per-task byte
+    budget splits into shards that each decode with the executor-side
+    greedy, never through a driver fetch, and matches the sequential full
+    decode."""
+    from test_engine_e2e import cap_for_shards, shard_eval
+
+    q = "license rareterm000063z"
+    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", cap_for_shards(docs_engine, q))
+    got = docs_engine.search_many({"skew": q}, k=10).collect()
+    assert docs_engine.last_group_eval["tasks"] == 3
+    monkeypatch.undo()
     single = [
         (r["doc_id"], r["score"])
-        for r in docs_engine.search("license rareterm000063z", 10, wand="off").collect()
+        for r in docs_engine.search(q, 10, wand="off").collect()
     ]
-    assert [(r["doc_id"], r["score"]) for r in got] == single
+    assert [(r["doc_id"], r["score"]) for r in got] == single == docs_oracle.search(q, 10)
+    merged, _decoded, greedy, df_map = shard_eval(docs_engine, q, 10, 3, monkeypatch)
+    assert merged == single
+    assert greedy == set(df_map)
 
 
 def test_group_eval_routing_stats(docs_engine):
-    """At defaults, every postings-only member routes to the executor-side
-    group evaluation; members sharing terms coalesce into one group
-    (connected components), so the shared blobs ship and decode once."""
+    """At defaults, every member that can match routes to the
+    executor-side group evaluation, filter members included; members
+    sharing terms coalesce into one group (connected components), so the
+    shared blobs ship and decode once. Filters do not join groups."""
     docs_engine.search_many(QUERIES, k=10).collect()
     st = docs_engine.last_group_eval
     assert st is not None
-    # hot/and2/quick_or/nofm/notq/rare are postings-only; not_meta has a
-    # filter in its fold (pivot), meta/pure_meta fall back, missing is
-    # bloom-gated out
-    assert st["members"] == 6
-    # hot+and2 share 'license'; and2+quick_or+nofm+notq share parser/bloom
-    # -> one component; 'rare' stands alone
-    assert st["groups"] == 2
+    # every member but 'missing' (bloom-gated out)
+    assert st["members"] == len(QUERIES) - 1
+    # hot+and2 share 'license'; and2+quick_or+nofm+notq+not_meta+meta share
+    # parser/bloom -> one component; 'rare' and 'pure_meta' stand alone
+    assert st["groups"] == 3
+    assert st["filters"] == 1
 
 
-def test_group_eval_zero_cap_routes_all_to_pivot(docs_engine, monkeypatch):
-    """With the group byte cap at zero every group is 'over cap': each
-    member that passes the bloom gate is answered one by one through
-    ``_search_one`` — results identical."""
+def test_group_eval_zero_cap_routes_all_to_pivot(docs_engine, docs_oracle, monkeypatch):
+    """With the per-task byte budget below every group's estimate, each
+    group with postings splits into doc-range shards instead of leaving
+    group-eval — results identical. The batch drops the members that tie
+    'license' to the parser/bloom group and the rare term, so the two
+    postings groups are of similar size and a budget of half the smaller
+    one gives each 2-3 shards."""
     from admarus_spark.query.parser import parse_query
 
-    monkeypatch.setattr(docs_engine, "group_eval_max_bytes", 0)
-    one, calls = docs_engine._search_one, []
-
-    def counting(q, k, wand):
-        calls.append(q)
-        return one(q, k, wand)
-
-    monkeypatch.setattr(docs_engine, "_search_one", counting)
-    batch = docs_engine.search_many(QUERIES, k=10).collect()
+    batch = {q: t for q, t in QUERIES.items() if q not in ("and2", "rare")}
+    monkeypatch.setattr(
+        docs_engine, "group_eval_max_bytes", docs_engine.df_cache["license"] * 24 // 2
+    )
+    by_q = _by_query(docs_engine.search_many(batch, k=10).collect())
+    st = docs_engine.last_group_eval
     monkeypatch.undo()
-    assert docs_engine.last_group_eval is None
+    # 'license' splits in 2, the parser/bloom group in 3; pure_meta's group
+    # holds no postings and stays one task
+    assert (st["groups"], st["sharded_groups"], st["tasks"]) == (3, 2, 6), st
     gated_in = [
-        q for q in QUERIES.values()
+        q for q in batch.values()
         if docs_engine._bloom_match_score(parse_query(q).root, docs_engine.global_bloom)
     ]
-    assert len(calls) == len(gated_in) == len(QUERIES) - 1
-    by_q: dict[str, list] = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    for qid, q in QUERIES.items():
+    assert st["members"] == len(gated_in) == len(batch) - 1
+    for qid, q in batch.items():
         single = [
             (r["doc_id"], r["score"]) for r in docs_engine.search(q, 10, wand="off").collect()
         ]
-        assert by_q.get(qid, []) == single, qid
+        assert by_q.get(qid, []) == single == docs_oracle.search(q, 10), qid
 
 
 def test_group_members_connected_components():
@@ -243,8 +247,8 @@ def test_group_eval_sharded_matches_single(docs_engine, monkeypatch):
     batch = docs_engine.search_many(QUERIES, k=10).collect()
     st = docs_engine.last_group_eval
     assert st is not None
-    assert st["sharded_groups"] == st["groups"] == 2
-    assert st["tasks"] == 6
+    assert st["sharded_groups"] == st["groups"] == 3
+    assert st["tasks"] == 9
     by_q: dict[str, list] = {}
     for r in batch:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
